@@ -132,8 +132,12 @@ object Bench {
     }
     // 3-decimal seconds (VERDICT r12 #2): full double repr ran the line to
     // ~16 KB at 248 queries; ms precision is below this harness's noise
-    // floor and halves the artifact line.
-    def sec(v: Double) = if (v < 0) "-1" else f"$v%.3f"
+    // floor and halves the artifact line. Numbers are formatted in
+    // Locale.ROOT: the line is machine-read, and a host locale with a
+    // decimal comma would break the JSON.
+    def num(v: Double, digits: Int) =
+      s"%.${digits}f".formatLocal(java.util.Locale.ROOT, v)
+    def sec(v: Double) = if (v < 0) "-1" else num(v, 3)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + sec(v._1) }
       .mkString("{", ",", "}")
     val qsWarm = results.map { case (k, v) => "\"" + k + "\":" + sec(v._2) }
@@ -153,14 +157,14 @@ object Bench {
     val probeMedian = sortedProbes(sortedProbes.size / 2)
     val hostFactor = sortedProbes.head / ProbeIdleRefSec
     val hostFactorMed = probeMedian / ProbeIdleRefSec
-    val probesJson = probes.map(p => f"$p%.3f").mkString("[", ",", "]")
+    val probesJson = probes.map(num(_, 3)).mkString("[", ",", "]")
     // Compact human summary FIRST (totals, probes, slowest-10 warm) …
     val slow = results.filter(_._2._2 >= 0).sortBy(-_._2._2).take(10)
-      .map { case (k, v) => "\"" + k + "\":" + f"${v._2}%.3f" }
+      .map { case (k, v) => "\"" + k + "\":" + num(v._2, 3) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${sec(total)},"unit":"sec",""" +
       s""""n_queries":${results.size},"total_warm":${sec(totalWarm)},""" +
-      f""""host_factor":$hostFactor%.2f,"probe_sec":$probesJson,""" +
+      s""""host_factor":${num(hostFactor, 2)},"probe_sec":$probesJson,""" +
       s""""errors":$errs,"slowest_warm":$slow,"sf":"$sfDir"}""")
     // … and the CONTRACT line — the ONE JSON object with the per-query
     // seconds map — printed LAST (VERDICT r12 #2: the driver's tail capture
@@ -171,8 +175,8 @@ object Bench {
     println(s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qs,""" +
       s""""queries_warm":$qsWarm,"total_warm":${sec(totalWarm)},""" +
       s""""errors":$errs,"overhead_sec_per_query":${sec(overhead)},""" +
-      f""""probe_sec":$probesJson,"probe_idle_ref_sec":$ProbeIdleRefSec,""" +
-      f""""host_factor":$hostFactor%.2f,"host_factor_med":$hostFactorMed%.2f,""" +
+      s""""probe_sec":$probesJson,"probe_idle_ref_sec":$ProbeIdleRefSec,""" +
+      s""""host_factor":${num(hostFactor, 2)},"host_factor_med":${num(hostFactorMed, 2)},""" +
       (if (hostFactor > 1.3) """"host_contended":true,""" else "") +
       s""""sf":"$sfDir"}""")
     spark.stop()

@@ -28,15 +28,19 @@ object Graphs {
     * label table). None — i.e. "use the distributed path" — when the
     * columns are not BIGINT (the distributed operators preserve narrower
     * input id types in their output; the local twins must not widen
-    * them), when any id is null, or when the frame outgrows `maxRows`.
-    * The `limit` is unordered, which is fine: the rows are only used
-    * when NOT truncated, so which `maxRows + 1` rows surface is
-    * irrelevant (do not "fix" this into a sort).
+    * them), when any id is null, when the frame outgrows `maxRows`, or
+    * when the caller passed a checkpointer other than `Local`: a
+    * `Reliable` caller is promised a durable final cut, which only the
+    * distributed path makes. The `limit` is unordered, which is fine:
+    * the rows are only used when NOT truncated, so which `maxRows + 1`
+    * rows surface is irrelevant (do not "fix" this into a sort).
     */
-  private def collectedPairs(df: DataFrame, maxRows: Int)
+  private def collectedPairs(df: DataFrame, maxRows: Int,
+      checkpointer: Dedup.Checkpointer = Dedup.Checkpointer.Local)
       : Option[Array[(Long, Long)]] = {
     import org.apache.spark.sql.types.LongType
-    if (maxRows <= 0 || !df.schema.fields.forall(_.dataType == LongType))
+    if (maxRows <= 0 || checkpointer != Dedup.Checkpointer.Local ||
+        !df.schema.fields.forall(_.dataType == LongType))
       return None
     val rows = df.limit(maxRows + 1).collect()
     if (rows.length > maxRows) None
@@ -89,7 +93,7 @@ object Graphs {
     // (r div deg, damping·S div 100 — positive longs, so SQL div ≡ Java /)
     // and the expensive edge upstream runs exactly once, inside the
     // collect. Distributed loop below is the unchanged fallback.
-    collectedPairs(dedup, driverMaxEdges) match {
+    collectedPairs(dedup, driverMaxEdges, checkpointer) match {
       case Some(es) =>
         require(es.nonEmpty, "pageRank needs at least one edge")
         val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
@@ -201,7 +205,7 @@ object Graphs {
     // FAST PATH (optimization r13): the pageRank discipline — identical
     // BIGINT trajectory with the teleport mass restricted to seeds, seed
     // coverage checked as loudly as the distributed path.
-    collectedPairs(dedup, driverMaxEdges) match {
+    collectedPairs(dedup, driverMaxEdges, checkpointer) match {
       case Some(es) =>
         val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
         val nodeSet = nodes.toSet
@@ -339,7 +343,7 @@ object Graphs {
     // per node, the most frequent neighbor label with ties to the
     // SMALLEST label ((count desc, label asc) ≡ max(struct(count,
     // -label)), see [[bestLabel]]); rounds replay exactly.
-    collectedPairs(und, driverMaxEdges) match {
+    collectedPairs(und, driverMaxEdges, checkpointer) match {
       case Some(es) =>
         val nbrs = scala.collection.mutable.HashMap
           .empty[Long, List[Long]]
@@ -705,7 +709,7 @@ object Graphs {
     // counting — no ties to break. Each round drops nodes with current
     // degree < k, then keeps edges with both endpoints alive; the final
     // induced degrees are the output, exactly the distributed rounds.
-    collectedPairs(und, driverMaxEdges) match {
+    collectedPairs(und, driverMaxEdges, checkpointer) match {
       case Some(es0) =>
         var es = es0
         var it = 0
@@ -871,7 +875,7 @@ object Graphs {
     // neighbors within the surviving edge set — pure counting; edges with
     // zero common neighbors never reach the support bar (k ≥ 3 ⇒
     // k − 2 ≥ 1), exactly like the distributed inner join.
-    collectedPairs(dedup, driverMaxEdges) match {
+    collectedPairs(dedup, driverMaxEdges, checkpointer) match {
       case Some(es0) =>
         var es: Array[(Long, Long)] = es0
         var kept: Array[(Long, Long, Long)] = Array.empty

@@ -116,8 +116,7 @@ object Populate {
         fs.mkdirs(table)
         fs.listStatus(staged)
           .filter(_.getPath.getName.startsWith("part-"))
-          .foreach(f =>
-            fs.rename(f.getPath, new Path(table, f.getPath.getName)))
+          .foreach(f => publish(fs, f.getPath, new Path(table, f.getPath.getName)))
       }
       n
     } finally { fs.delete(staged, true); () }
@@ -156,9 +155,19 @@ object Populate {
     // committer config the deployment controls
     fs.create(new Path(staged, StagedCompleteMarker), true).close()
     fs.delete(table, true)
-    if (!fs.rename(staged, table))
-      throw new java.io.IOException(s"failed to publish $staged over $table")
+    publish(fs, staged, table)
   }
+
+  /** `fs.rename` that fails loudly. Hadoop reports most rename failures
+    * (missing source, existing destination, a store that refused) by
+    * returning false, not by throwing; a publish that ignored it would
+    * report rows committed that no reader ever sees.
+    */
+  private def publish(fs: org.apache.hadoop.fs.FileSystem,
+                      from: org.apache.hadoop.fs.Path,
+                      to: org.apache.hadoop.fs.Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"failed to publish $from to $to")
 
   /** Compact an append-only keyed STATE table — the drain-state shape
     * ([[graft.streaming.StreamingResample]] and friends: one row appended
@@ -211,8 +220,10 @@ object Populate {
     val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
     val staged = new Path(table.getParent, table.getName + ".__staged")
-    if (!fs.exists(table) && fs.exists(new Path(staged, StagedCompleteMarker)))
-      fs.rename(staged, table)
+    // a false rename is fine only if a concurrent reader published it first
+    if (!fs.exists(table) && fs.exists(new Path(staged, StagedCompleteMarker)) &&
+        !fs.rename(staged, table) && !fs.exists(table))
+      throw new java.io.IOException(s"failed to publish $staged to $table")
     readIfExists(spark, tablePath)
   }
 
@@ -378,7 +389,7 @@ object Populate {
           cached.write.parquet(staging.toString)
           fs.listStatus(staging)
             .filter(_.getPath.getName.startsWith("part-"))
-            .foreach(f => fs.rename(f.getPath, new Path(table, f.getPath.getName)))
+            .foreach(f => publish(fs, f.getPath, new Path(table, f.getPath.getName)))
         }
         fs.delete(staging, true)
         n

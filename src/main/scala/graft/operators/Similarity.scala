@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,8 +10,10 @@ import graft.functions.VectorFunctions
   *
   * Two paths:
   *  - `bruteForceTopK`: exact cosine top-k — the correctness baseline. The
-  *    query side broadcasts (queries ≪ corpus), so the corpus is scanned once
-  *    with no shuffle; top-k per query via window rank on the joined result.
+  *    query side broadcasts (queries ≪ corpus) into an all-pairs join
+  *    whose corpus side is first spread over the default parallelism (one
+  *    linear shuffle in front of quadratic scoring, see [[rankedPairs]]);
+  *    top-k per query via window rank on the joined result.
   *  - `lshTopK`: the 100 TB path — both sides bucketed by random-hyperplane
   *    signatures (graft.functions.VectorFunctions.simhashBucket); candidates
   *    come from an equi-join on bucket id, exact cosine re-rank only within
@@ -60,6 +62,39 @@ object Similarity {
     if (nBits > 0) (resolveDim(dim, df, vecCol), nBits)
     else (resolveDim(dim, df, vecCol), deriveBits(df.count(), targetPop))
 
+  /** Rank tail of every top-k path: round the score to `scoreDigits` when
+    * set, rank per query on (score desc, id), keep ranks `loRank..hiRank`
+    * (WindowGroupLimit pre-filters at `hiRank`). Output: (queryIdCol,
+    * idCol, `__rank`, scoreCol). */
+  private def rankTail(pairs: DataFrame, idCol: String, queryIdCol: String,
+                       score: Column, scoreCol: String,
+                       scoreDigits: Option[Int],
+                       loRank: Int, hiRank: Int): DataFrame = {
+    val w = Window.partitionBy(col(queryIdCol))
+      .orderBy(col(scoreCol).desc, col(idCol))
+    pairs.withColumn(scoreCol, scoreDigits.fold(score)(d => round(score, d)))
+      .withColumn("__rank", row_number().over(w))
+      .filter(col("__rank").between(loRank, hiRank))
+      .select(col(queryIdCol), col(idCol), col("__rank"), col(scoreCol))
+  }
+
+  /** The all-pairs kernels: every (corpus, query) pair but self-pairs,
+    * queries broadcast, then [[rankTail]]. The corpus is round-robin spread
+    * over the default parallelism first, never sized by file bytes: a small
+    * file is one split, which would run the whole join, score, `round` and
+    * window pre-sort as one task. The exchange moves each corpus row once,
+    * is planned without a job, and AQE keeps its explicit partition count;
+    * rows tied on (score, id) are identical, so no result changes. */
+  private def rankedPairs(corpus: DataFrame, queries: DataFrame,
+                          idCol: String, queryIdCol: String,
+                          score: Column, scoreCol: String,
+                          scoreDigits: Option[Int],
+                          loRank: Int, hiRank: Int): DataFrame =
+    rankTail(
+      corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism)
+        .join(broadcast(queries), col(idCol) =!= col(queryIdCol)),
+      idCol, queryIdCol, score, scoreCol, scoreDigits, loRank, hiRank)
+
   /** Exact top-k nearest neighbors by cosine for each query vector.
     * Output: (queryIdCol, idCol, cosine) — k rows per query.
     *
@@ -73,17 +108,11 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
                      idCol: String, queryIdCol: String,
                      vecCol: String, k: Int,
-                     scoreDigits: Option[Int] = None): DataFrame = {
-    val q = queries.select(col(queryIdCol), col(vecCol).as("__qvec"))
-    val raw = VectorFunctions.cosine(col(vecCol), col("__qvec"))
-    val scored = corpus.select(col(idCol), col(vecCol))
-      .join(broadcast(q), col(idCol) =!= col(queryIdCol))
-      .withColumn("cosine", scoreDigits.fold(raw)(d => round(raw, d)))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("cosine"))
-  }
+                     scoreDigits: Option[Int] = None): DataFrame =
+    rankedPairs(corpus.select(col(idCol), col(vecCol)),
+      queries.select(col(queryIdCol), col(vecCol).as("__qvec")),
+      idCol, queryIdCol, VectorFunctions.cosine(col(vecCol), col("__qvec")),
+      "cosine", scoreDigits, 1, k).drop("__rank")
 
   /** HARD-NEGATIVE mining: for each query, the corpus vectors ranked
     * `loRank..hiRank` by cosine — the contrastive-training draw that skips
@@ -94,25 +123,21 @@ object Similarity {
     * id ties ⇒ engine-reproducible band edges). Output: (queryIdCol,
     * idCol, rank, cosine).
     *
-    * Scale shape: identical to [[bruteForceTopK]] — query side broadcast,
-    * corpus scanned once, per-query rank window; the band filter rides the
-    * same WindowGroupLimit pre-filter at `hiRank`.
+    * Scale shape: identical to [[bruteForceTopK]] — the shared
+    * [[rankedPairs]] tail (corpus spread over the default parallelism,
+    * query side broadcast, per-query rank window); the band filter rides
+    * the WindowGroupLimit pre-filter at `hiRank`.
     */
   def rankBand(corpus: DataFrame, queries: DataFrame,
                idCol: String, queryIdCol: String, vecCol: String,
                loRank: Int, hiRank: Int,
                scoreDigits: Option[Int] = None): DataFrame = {
     require(loRank >= 1 && hiRank >= loRank, "need 1 <= loRank <= hiRank")
-    val q = queries.select(col(queryIdCol), col(vecCol).as("__qvec"))
-    val raw = VectorFunctions.cosine(col(vecCol), col("__qvec"))
-    val scored = corpus.select(col(idCol), col(vecCol))
-      .join(broadcast(q), col(idCol) =!= col(queryIdCol))
-      .withColumn("cosine", scoreDigits.fold(raw)(d => round(raw, d)))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank").between(loRank, hiRank))
-      .select(col(queryIdCol), col(idCol), col("rank").cast("long").as("rank"),
+    rankedPairs(corpus.select(col(idCol), col(vecCol)),
+        queries.select(col(queryIdCol), col(vecCol).as("__qvec")),
+        idCol, queryIdCol, VectorFunctions.cosine(col(vecCol), col("__qvec")),
+        "cosine", scoreDigits, loRank, hiRank)
+      .select(col(queryIdCol), col(idCol), col("__rank").cast("long").as("rank"),
         col("cosine"))
   }
 
@@ -212,7 +237,8 @@ object Similarity {
     *
     * Scale shape: the corpus projection is a map-only pass (materialize it
     * once for a static corpus — `projDim` doubles/row instead of `dim`
-    * floats), and every candidate score costs `projDim` multiply-adds
+    * floats) and then takes the [[rankedPairs]] spread and rank tail;
+    * every candidate score costs `projDim` multiply-adds
     * instead of `dim` — at 768-d embeddings projected to 64, a 12× cut in
     * both scan width and scoring FLOPs. The trade is JL distortion
     * (ε ≈ sqrt(ln n / projDim)): use it as the cheap first stage and
@@ -227,18 +253,13 @@ object Similarity {
                     dim: Option[Int] = None): DataFrame = {
     require(projDim > 0, "projDim must be positive")
     val d = resolveDim(dim, corpus, vecCol)
-    val pc = corpus.select(col(idCol),
-      VectorFunctions.randomProject(col(vecCol), projDim, d, seed).as("__pv"))
-    val pq = queries.select(col(queryIdCol),
-      VectorFunctions.randomProject(col(vecCol), projDim, d, seed).as("__pq"))
-    val raw = VectorFunctions.cosine(col("__pv"), col("__pq"))
-    val scored = pc.join(broadcast(pq), col(idCol) =!= col(queryIdCol))
-      .withColumn("cosine_proj", scoreDigits.fold(raw)(d => round(raw, d)))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine_proj").desc, col(idCol))
-    scored.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("cosine_proj"))
+    rankedPairs(
+      corpus.select(col(idCol),
+        VectorFunctions.randomProject(col(vecCol), projDim, d, seed).as("__pv")),
+      queries.select(col(queryIdCol),
+        VectorFunctions.randomProject(col(vecCol), projDim, d, seed).as("__pq")),
+      idCol, queryIdCol, VectorFunctions.cosine(col("__pv"), col("__pq")),
+      "cosine_proj", scoreDigits, 1, k).drop("__rank")
   }
 
   /** Two-stage retrieval: [[projectedTopK]] casts a `candidateFactor·k`
@@ -248,7 +269,8 @@ object Similarity {
     * semantics match [[bruteForceTopK]]; only candidate generation differs.
     *
     * Scale shape: stage 1 scans projDim-wide vectors (materialize the
-    * projection once for a static corpus); stage 2 re-attaches full
+    * projection once for a static corpus) and inherits the spread of
+    * [[rankedPairs]] through [[projectedTopK]]; stage 2 re-attaches full
     * vectors for only `candidateFactor·k` rows per query via one join on
     * the corpus id — the wide vectors never enter the all-pairs score.
     */
@@ -263,17 +285,12 @@ object Similarity {
         k = candidateFactor * k, projDim = projDim, seed = seed,
         scoreDigits = scoreDigits, dim = dim)
       .select(col(queryIdCol), col(idCol))
-    val raw = VectorFunctions.cosine(col(vecCol), col("__qvec"))
-    val scored = cands
-      .join(broadcast(queries.select(col(queryIdCol), col(vecCol).as("__qvec"))),
-        Seq(queryIdCol))
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .withColumn("cosine", scoreDigits.fold(raw)(d => round(raw, d)))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("cosine"))
+    rankTail(cands
+        .join(broadcast(queries.select(col(queryIdCol), col(vecCol).as("__qvec"))),
+          Seq(queryIdCol))
+        .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol)),
+      idCol, queryIdCol, VectorFunctions.cosine(col(vecCol), col("__qvec")),
+      "cosine", scoreDigits, 1, k).drop("__rank")
   }
 
   /** LSH-bucketed approximate top-k: multi-table random-hyperplane bucketing;
@@ -305,16 +322,12 @@ object Similarity {
       .filter(col(idCol) =!= col(queryIdCol))
       .select(col(idCol), col(queryIdCol))
       .dropDuplicates(idCol, queryIdCol)
-    val raw = VectorFunctions.cosine(col(vecCol), col("__qvec"))
-    val scored = pairs
-      .join(broadcast(queries.select(col(queryIdCol), col(vecCol).as("__qvec"))),
-        Seq(queryIdCol))
-      .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
-      .withColumn("cosine", scoreDigits.fold(raw)(d => round(raw, d)))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("cosine").desc, col(idCol))
-    scored.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("cosine"))
+    rankTail(pairs
+        .join(broadcast(queries.select(col(queryIdCol), col(vecCol).as("__qvec"))),
+          Seq(queryIdCol))
+        .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol)),
+      idCol, queryIdCol, VectorFunctions.cosine(col(vecCol), col("__qvec")),
+      "cosine", scoreDigits, 1, k).drop("__rank")
   }
 
   /** Per-dimension scalar-quantization bounds `(mins, maxs)` over the
@@ -347,8 +360,8 @@ object Similarity {
     * integer-exact so any engine replays them (modulo a rounding-boundary
     * ulp, the accepted DSIR class).
     */
-  def sqEncode(vec: org.apache.spark.sql.Column, mins: Array[Double],
-               maxs: Array[Double]): org.apache.spark.sql.Column = {
+  def sqEncode(vec: Column, mins: Array[Double],
+               maxs: Array[Double]): Column = {
     val codes = mins.indices.map { i =>
       val x = element_at(vec, i + 1).cast("double")
       if (maxs(i) == mins(i)) lit(0)
@@ -363,8 +376,8 @@ object Similarity {
     * `min_i + code·((max_i − min_i)/255)` — the reconstruction used for
     * asymmetric distance (raw query vs decoded corpus).
     */
-  def sqDecode(codes: org.apache.spark.sql.Column, mins: Array[Double],
-               maxs: Array[Double]): org.apache.spark.sql.Column =
+  def sqDecode(codes: Column, mins: Array[Double],
+               maxs: Array[Double]): Column =
     array(mins.indices.map { i =>
       lit(mins(i)) + element_at(codes, i + 1).cast("double") *
         lit((maxs(i) - mins(i)) / 255.0)
@@ -375,25 +388,19 @@ object Similarity {
     * scored against the RAW query vector — FAISS's ADC shape. Ranking
     * matches [[bruteForceTopK]] (round + id tie-break); recall loss is
     * the quantization error (≤ half a code step per dimension,
-    * SimilaritySpec measures it).
+    * SimilaritySpec measures it). Scoring takes the [[rankedPairs]] tail.
     */
   def sqTopK(corpus: DataFrame, queries: DataFrame,
              idCol: String, queryIdCol: String,
              vecCol: String, k: Int,
              scoreDigits: Option[Int] = None): DataFrame = {
     val (mins, maxs) = sqTrain(corpus, vecCol)
-    val coded = corpus.select(col(idCol),
-      sqEncode(col(vecCol), mins, maxs).as("__codes"))
-    val q = queries.select(col(queryIdCol), col(vecCol).as("__qvec"))
-    val raw = VectorFunctions.cosine(
-      sqDecode(col("__codes"), mins, maxs), col("__qvec"))
-    val scored = coded.join(broadcast(q), col(idCol) =!= col(queryIdCol))
-      .withColumn("cosine_sq", scoreDigits.fold(raw)(d => round(raw, d)))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine_sq").desc, col(idCol))
-    scored.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("cosine_sq"))
+    rankedPairs(
+      corpus.select(col(idCol), sqEncode(col(vecCol), mins, maxs).as("__codes")),
+      queries.select(col(queryIdCol), col(vecCol).as("__qvec")),
+      idCol, queryIdCol,
+      VectorFunctions.cosine(sqDecode(col("__codes"), mins, maxs), col("__qvec")),
+      "cosine_sq", scoreDigits, 1, k).drop("__rank")
   }
 
   /** Product-quantization codebooks (Jégou et al. 2011): the dimension is
@@ -423,9 +430,9 @@ object Similarity {
     * centroid id — the same measure-zero double-tie caveat as q101's
     * argmin). `dim` floats → `m` small ints.
     */
-  def pqEncode(vec: org.apache.spark.sql.Column,
+  def pqEncode(vec: Column,
                codebooks: Array[Array[Array[Float]]])
-      : org.apache.spark.sql.Column = {
+      : Column = {
     val sub = codebooks.head.head.length
     val codes = codebooks.indices.map { mi =>
       val vSub = slice(vec, mi * sub + 1, sub)
@@ -442,9 +449,9 @@ object Similarity {
   /** Reconstruct the `dim`-double vector from PQ codes (centroid lookup
     * per subspace, concatenated).
     */
-  def pqDecode(codes: org.apache.spark.sql.Column,
+  def pqDecode(codes: Column,
                codebooks: Array[Array[Array[Float]]])
-      : org.apache.spark.sql.Column =
+      : Column =
     concat(codebooks.indices.map { mi =>
       val book = codebooks(mi).map(_.map(_.toDouble).toSeq).toSeq
       element_at(typedlit(book), element_at(codes, mi + 1) + 1)
@@ -454,7 +461,7 @@ object Similarity {
     * ADC shape at `m` bytes per vector (64-d × 4 B = 256 B → 8 B at
     * m=8): coarser than [[sqTopK]]'s 1 B/dim, the regime where the
     * corpus' vector bytes must all but vanish. Ranking semantics match
-    * [[bruteForceTopK]].
+    * [[bruteForceTopK]]; scoring takes the [[rankedPairs]] tail.
     */
   def pqTopK(corpus: DataFrame, queries: DataFrame,
              idCol: String, queryIdCol: String,
@@ -464,18 +471,12 @@ object Similarity {
              dim: Option[Int] = None): DataFrame = {
     val books = codebooks.getOrElse(
       pqTrain(corpus, idCol, vecCol, m, nCodes, dim))
-    val coded = corpus.select(col(idCol),
-      pqEncode(col(vecCol), books).as("__codes"))
-    val q = queries.select(col(queryIdCol), col(vecCol).as("__qvec"))
-    val raw = VectorFunctions.cosine(
-      pqDecode(col("__codes"), books), col("__qvec"))
-    val scored = coded.join(broadcast(q), col(idCol) =!= col(queryIdCol))
-      .withColumn("cosine_pq", scoreDigits.fold(raw)(d => round(raw, d)))
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col("cosine_pq").desc, col(idCol))
-    scored.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("cosine_pq"))
+    rankedPairs(
+      corpus.select(col(idCol), pqEncode(col(vecCol), books).as("__codes")),
+      queries.select(col(queryIdCol), col(vecCol).as("__qvec")),
+      idCol, queryIdCol,
+      VectorFunctions.cosine(pqDecode(col("__codes"), books), col("__qvec")),
+      "cosine_pq", scoreDigits, 1, k).drop("__rank")
   }
 
   /** Train PQ codebooks OFFLINE with per-subspace MLlib KMeans — the
@@ -519,8 +520,8 @@ object Similarity {
     * with the smallest portable hash of their id — a seeded pseudo-random
     * sample that any engine reproduces (ties break on id). One tiny driver
     * collect (nCentroids rows), same class of touch as [[vecDim]].
-    */
-  /** @param skip drop the first `skip` rows of the hash order before
+    *
+    * @param skip drop the first `skip` rows of the hash order before
     *              taking the sample — lets a SECOND sample (e.g. residual
     *              PQ codebooks) avoid coinciding with a first (the IVF
     *              centers), which would be degenerate: a center row's own
@@ -697,16 +698,11 @@ object Similarity {
     * query via window rank, optional rounded ranking. */
   private def rankCandidates(assigned: DataFrame, probes: DataFrame,
                              idCol: String, queryIdCol: String, vecCol: String,
-                             k: Int, scoreDigits: Option[Int]): DataFrame = {
-    val raw = VectorFunctions.cosine(col(vecCol), col("__qvec"))
-    val candidates = assigned.join(probes, Seq("__cell"))
-      .filter(col(idCol) =!= col(queryIdCol))
-      .withColumn("cosine", scoreDigits.fold(raw)(d => round(raw, d)))
-    val w = Window.partitionBy(col(queryIdCol)).orderBy(col("cosine").desc, col(idCol))
-    candidates.withColumn("__rank", row_number().over(w))
-      .filter(col("__rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("cosine"))
-  }
+                             k: Int, scoreDigits: Option[Int]): DataFrame =
+    rankTail(assigned.join(probes, Seq("__cell"))
+        .filter(col(idCol) =!= col(queryIdCol)),
+      idCol, queryIdCol, VectorFunctions.cosine(col(vecCol), col("__qvec")),
+      "cosine", scoreDigits, 1, k).drop("__rank")
 
   private def probesFor(queries: DataFrame, cents: Array[Array[Float]],
                         queryIdCol: String, vecCol: String, nProbe: Int): DataFrame =

@@ -746,4 +746,104 @@ class SimilaritySpec extends SparkSpec {
       Option(t).toSeq.flatMap(e => e.getMessage +: messages(e.getCause))
     assert(messages(ex).exists(m => m != null && m.contains("maxCellSize")))
   }
+
+  // ---- the all-pairs spread rule (Similarity.rankedPairs) ----
+
+  /** Run `body` under a SparkListener and return every stage it completed
+    * as (numTasks, shuffle records written), once the asynchronous
+    * listener bus has settled, plus the number of jobs it started. */
+  private def stagesOf(body: => Unit): (Seq[(Int, Long)], Int) = {
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onStageCompleted(
+          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        val info = sc.stageInfo
+        stages.add((info.numTasks,
+          info.taskMetrics.shuffleWriteMetrics.recordsWritten)); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      var prev = -1
+      var cur = jobs.get() + stages.size
+      while (prev != cur) {
+        Thread.sleep(200); prev = cur; cur = jobs.get() + stages.size
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (stages.toArray(Array.empty[(Int, Long)]).toSeq, jobs.get())
+  }
+
+  test("all-pairs kernels score a one-split corpus on more than one task") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val dir = java.nio.file.Files.createTempDirectory("graft-onesplit").toString
+    Seq.tabulate(1500)(i => (i.toLong, Array.fill(32)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding").coalesce(1)
+      .write.mode("overwrite").parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    // one file, one row group: the scan is a single split
+    assert(corpus.rdd.getNumPartitions == 1)
+    val queries = corpus.select(col("vec_id").as("query_id"), col("embedding"))
+    val kernels = Seq(
+      "bruteForceTopK" -> (() => Similarity.bruteForceTopK(corpus, queries,
+        "vec_id", "query_id", "embedding", k = 5, scoreDigits = Some(6))),
+      "rankBand" -> (() => Similarity.rankBand(corpus, queries, "vec_id",
+        "query_id", "embedding", loRank = 2, hiRank = 5, scoreDigits = Some(6))))
+    kernels.foreach { case (name, kernel) =>
+      val (stages, _) = stagesOf(kernel().collect())
+      // the scoring stage writes the per-query rank shuffle: at least
+      // |queries| x (rank cut) rows, more than any other stage writes (the
+      // spread's own exchange moves each of the 1500 corpus rows once)
+      val (tasks, written) = stages.maxBy(_._2)
+      assert(written >= 1500L * 5, s"$name: stages $stages")
+      assert(tasks >= 2, s"$name scored on $tasks task(s): stages $stages")
+    }
+  }
+
+  test("building an all-pairs kernel over a shuffled corpus runs no job") {
+    val shuffled = emb.repartition(3, col("vec_id"))
+    val queries = emb.filter(col("vec_id") < 3)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    // PQ codebooks come in from outside, so building runs no training job
+    val books = Similarity.pqTrain(emb, "vec_id", "embedding", m = 8, k = 4,
+      dim = Some(64))
+    var built = Seq.empty[org.apache.spark.sql.DataFrame]
+    val (_, jobs) = stagesOf {
+      built = Seq(
+        Similarity.bruteForceTopK(shuffled, queries, "vec_id", "query_id",
+          "embedding", k = 5, scoreDigits = Some(6)),
+        Similarity.rankBand(shuffled, queries, "vec_id", "query_id",
+          "embedding", loRank = 2, hiRank = 4),
+        Similarity.projectedTopK(shuffled, queries, "vec_id", "query_id",
+          "embedding", k = 5, projDim = 8, dim = Some(64)),
+        Similarity.rerankTopK(shuffled, queries, "vec_id", "query_id",
+          "embedding", k = 5, projDim = 8, dim = Some(64)),
+        Similarity.pqTopK(shuffled, queries, "vec_id", "query_id",
+          "embedding", k = 5, m = 8, nCodes = 4, codebooks = Some(books)))
+    }
+    assert(jobs == 0, s"building the kernels launched $jobs job(s)")
+    // sqTopK trains its bounds while building: it may run those jobs only
+    val (_, trainJobs) = stagesOf(Similarity.sqTrain(shuffled, "embedding"))
+    val (_, sqJobs) = stagesOf {
+      built :+= Similarity.sqTopK(shuffled, queries, "vec_id", "query_id",
+        "embedding", k = 5)
+    }
+    assert(sqJobs == trainJobs,
+      s"building sqTopK launched $sqJobs job(s), its training $trainJobs")
+    // each carries the round-robin spread at the default parallelism
+    val parallelism = spark.sparkContext.defaultParallelism
+    built.foreach { df =>
+      val spreads = df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical.Repartition
+            if r.shuffle => r.numPartitions
+      }
+      assert(spreads.contains(parallelism), df.queryExecution.optimizedPlan)
+    }
+  }
 }
