@@ -940,6 +940,10 @@ object Graphs {
     * almost no signal) and mirrored in the oracle, so it is part of the
     * semantics. Degrees in the output stay the TRUE degrees.
     *
+    * `driverMaxEdges` budgets the driver fast path twice: on adjacency
+    * rows, and on wedges, Σ C(d, 2) over the centers with
+    * 2 ≤ d ≤ `maxDegree`. Over either, the distributed path runs.
+    *
     * Scale shape: adjacency both directions (one distinct shuffle, cut
     * once for its three consumers), per-center neighbor pairs via the
     * in-place sorted-array expansion — ONE shuffle, never a self-join
@@ -966,30 +970,38 @@ object Graphs {
         rows.foreach { case (x, n) =>
           adj(x) = adj.getOrElse(x, Set.empty) + n
         }
-        val cn = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
-        adj.foreach { case (_, ns) =>
-          if (ns.size >= 2 && ns.size <= maxDegree) {
-            val sorted = ns.toArray.sorted
-            var i = 0
-            while (i < sorted.length) {
-              var j = i + 1
-              while (j < sorted.length) {
-                val key = (sorted(i), sorted(j))
-                cn(key) = cn.getOrElse(key, 0L) + 1L
-                j += 1
+        // the row guard bounds the adjacency, not its expansion: a center
+        // of degree d makes C(d, 2) wedges, so a star within the row
+        // budget can still blow up the driver — budget the wedges too
+        val wedges = adj.valuesIterator.map(_.size.toLong)
+          .filter(d => d >= 2 && d <= maxDegree)
+          .map(d => d * (d - 1) / 2).sum
+        if (wedges <= driverMaxEdges) {
+          val cn = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+          adj.foreach { case (_, ns) =>
+            if (ns.size >= 2 && ns.size <= maxDegree) {
+              val sorted = ns.toArray.sorted
+              var i = 0
+              while (i < sorted.length) {
+                var j = i + 1
+                while (j < sorted.length) {
+                  val key = (sorted(i), sorted(j))
+                  cn(key) = cn.getOrElse(key, 0L) + 1L
+                  j += 1
+                }
+                i += 1
               }
-              i += 1
             }
           }
+          val out = cn.toSeq.map { case ((u, v), c) =>
+            val du = adj(u).size.toLong
+            val dv = adj(v).size.toLong
+            val isEdge = adj(u).contains(v)
+            (u, v, c, du, dv, isEdge, (1000000L * c) / (du + dv - c))
+          }
+          return edges.sparkSession.createDataFrame(out)
+            .toDF("u", "v", "cn", "deg_u", "deg_v", "is_edge", "jaccard_micro")
         }
-        val out = cn.toSeq.map { case ((u, v), c) =>
-          val du = adj(u).size.toLong
-          val dv = adj(v).size.toLong
-          val isEdge = adj(u).contains(v)
-          (u, v, c, du, dv, isEdge, (1000000L * c) / (du + dv - c))
-        }
-        return edges.sparkSession.createDataFrame(out)
-          .toDF("u", "v", "cn", "deg_u", "deg_v", "is_edge", "jaccard_micro")
       case None => ()
     }
     val adj = adjFrame.localCheckpoint(true)

@@ -1,14 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Populate
 
 /** Streaming form of the populate engine (SURVEY.md §2.9 "incremental
   * discovery"): the reference's `populate()` polls `key_source − done` and
   * derives per new key; here a file-source stream discovers newly-landed
-  * bronze files and `Trigger.AvailableNow` drains exactly the backlog, with
+  * bronze files and [[StreamOps.drainFiles]] drains exactly the backlog, with
   * the idempotent anti-join append making restarts and overlapping runs safe
   * (the Spark analogue of `skip_duplicates=True` + transactions,
   * `acquisition.py:544-549`).
@@ -30,20 +29,9 @@ object IncrementalPopulate {
             checkpointDir: String, pk: Seq[String],
             schema: org.apache.spark.sql.types.StructType)
            (make: DataFrame => DataFrame): Unit = {
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val derived = make(batch)
-        Populate.appendIdempotent(derived, targetDir, pk)
-        () // Scala 2.13 overload disambiguation: foreachBatch wants Unit
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val derived = make(batch)
+      Populate.appendIdempotent(derived, targetDir, pk)
+    }
   }
 }

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
+
+import graft.operators.Populate
 
 /** Structured Streaming re-expression of the reference's incremental
   * semantics (SURVEY.md §2.9).
@@ -18,6 +21,65 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `populate()` over new chunks).
   */
 object StreamOps {
+
+  /** Run one file-stream drain — the skeleton every drain in this package
+    * shares, the engine's form of the reference's `populate()` over newly
+    * landed chunks. Parquet files under `sourceDir` (read with `schema`;
+    * file streams need one up front) are handed to `wave` one micro-batch
+    * at a time, at most 64 files per batch, oldest first.
+    *
+    * Contract:
+    *  - `Trigger.AvailableNow` drains exactly the backlog present when the
+    *    call starts, then returns; files landing later wait for the next
+    *    call;
+    *  - `foreachBatch` is at-least-once: if `wave` throws, the exception
+    *    surfaces here and the batch stays uncommitted in `checkpointDir`,
+    *    so the next call re-delivers it, and a lost checkpoint re-delivers
+    *    everything. Every wave must therefore append idempotently (keyed
+    *    [[Populate.appendIdempotent]] or a late rule against persisted
+    *    state) so a re-run converges to the fault-free tables;
+    *  - `bindSourceFile = true` adds the landed file's path as column
+    *    `__src`. File identity is bound at the SOURCE: inside `wave` the
+    *    batch is a plain LogicalRDD and file lineage is gone.
+    */
+  def drainFiles(spark: SparkSession, sourceDir: String, schema: StructType,
+                 checkpointDir: String, bindSourceFile: Boolean = false)
+                (wave: DataFrame => Unit): Unit = {
+    val files = spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", "64")
+      .parquet(sourceDir)
+    val source =
+      if (bindSourceFile) files.withColumn("__src", col("_metadata.file_path"))
+      else files
+    // a typed Scala function picks foreachBatch's Scala overload (Scala
+    // 2.13 cannot choose between it and the Java VoidFunction2 otherwise)
+    val perBatch: (DataFrame, Long) => Unit = (batch, _) => wave(batch)
+    source.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(perBatch)
+      .start()
+      .awaitTermination()
+  }
+
+  /** The newest row per `key` of an append-only keyed state table at
+    * `stateDir`: the argmax of `struct(stateCols…)`, so `stateCols.head`
+    * (a `last_us`-style frontier) decides and replayed or superseded
+    * appends are harmless. Output `(key, stateCols…)`; `None` before the
+    * first wave wrote state. Reads every past wave's rows — compaction is
+    * the caller's (`Populate.compactLatest`).
+    */
+  def readLatest(spark: SparkSession, stateDir: String,
+                 stateCols: Seq[String]): Option[DataFrame] =
+    Populate.readIfExists(spark, stateDir).map(latestPerKey(_, stateCols))
+
+  /** [[readLatest]]'s argmax over rows already in hand. */
+  private[streaming] def latestPerKey(rows: DataFrame,
+                                      stateCols: Seq[String]): DataFrame =
+    rows.groupBy("key")
+      .agg(max(struct(stateCols.map(col): _*)).as("__s"))
+      .select(col("key") +: stateCols.map(c => col(s"__s.$c").as(c)): _*)
 
   /** Per-(key, 1-hour chunk) sample counts + bounds — the streaming Chunk
     * catalog (reference `Chunk` table). With a watermark, late rows beyond

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Populate
 
@@ -59,85 +58,74 @@ object StreamingAttribution {
     require(windowSec > 0, "windowSec must be positive")
     val windowUs = windowSec * 1000000L
 
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = batch.select(col(keyCol).as("key"),
-          unix_micros(col(tsCol).cast("timestamp")).as("us"),
-          col(tieCol).as("tie"), col(typeCol).as("ty"))
-        val frontier = Populate.readIfExists(spark, frontierDir)
-          .map(_.groupBy("key").agg(max(col("last_us")).as("last_us")))
-        val fresh = (frontier match {
-          case None => rows.withColumn("last_us", lit(null).cast("long"))
-          case Some(f) => rows.join(f, Seq("key"), "left")
-        }).filter(col("last_us").isNull || col("us") > col("last_us"))
-          .select("key", "us", "tie", "ty")
-          .localCheckpoint(true)
-        // window-bound the buffer READ: new rows all have us > frontier,
-        // so a touch with us < frontier − windowUs can never fall inside
-        // any new conversion's lookback frame — the wave's window pass is
-        // O(batch ∪ in-window buffer) regardless of all-time touch volume
-        val buffered = Populate.readReplaced(spark, touchesDir)
-          .map { b =>
-            val sel = b.select("key", "us", "tie", "ty")
-            frontier match {
-              case None => sel
-              case Some(f) => sel.join(f, Seq("key"), "left")
-                .filter(col("last_us").isNull ||
-                  col("us") >= col("last_us") - windowUs)
-                .select("key", "us", "tie", "ty")
-            }
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val rows = batch.select(col(keyCol).as("key"),
+        unix_micros(col(tsCol).cast("timestamp")).as("us"),
+        col(tieCol).as("tie"), col(typeCol).as("ty"))
+      val frontier = Populate.readIfExists(spark, frontierDir)
+        .map(_.groupBy("key").agg(max(col("last_us")).as("last_us")))
+      val fresh = (frontier match {
+        case None => rows.withColumn("last_us", lit(null).cast("long"))
+        case Some(f) => rows.join(f, Seq("key"), "left")
+      }).filter(col("last_us").isNull || col("us") > col("last_us"))
+        .select("key", "us", "tie", "ty")
+        .localCheckpoint(true)
+      // window-bound the buffer READ: new rows all have us > frontier,
+      // so a touch with us < frontier − windowUs can never fall inside
+      // any new conversion's lookback frame — the wave's window pass is
+      // O(batch ∪ in-window buffer) regardless of all-time touch volume
+      val buffered = Populate.readReplaced(spark, touchesDir)
+        .map { b =>
+          val sel = b.select("key", "us", "tie", "ty")
+          frontier match {
+            case None => sel
+            case Some(f) => sel.join(f, Seq("key"), "left")
+              .filter(col("last_us").isNull ||
+                col("us") >= col("last_us") - windowUs)
+              .select("key", "us", "tie", "ty")
           }
-        val all = (buffered match {
-          case None => fresh.withColumn("__new", lit(true))
-          case Some(b) => b.withColumn("__new", lit(false))
-            .unionByName(fresh.withColumn("__new", lit(true)))
-        }).localCheckpoint(true)
-        val w = Window.partitionBy("key").orderBy(col("us"))
-          .rangeBetween(-windowUs, 0L)
-        val isTouch = col("ty").isin(touchTypes.map(x => x: Any): _*)
-        val touchStruct = when(isTouch,
-          struct(col("us").as("u"), col("tie").as("i"), col("ty").as("t")))
-        val attributed = all
-          .withColumn("__lt", max(touchStruct).over(w))
-          .withColumn("__ft", min(touchStruct).over(w))
-          .withColumn("__nt", sum(isTouch.cast("long")).over(w))
-          .filter(col("__new") && col("ty") === conversionType &&
-            col("__nt") > 0)
-          .select(col("key"), col("tie"), col("us").as("conv_us"),
-            col("__nt").as("n_touches"),
-            col("__ft.t").as("first_touch_type"),
-            col("__ft.u").as("first_touch_us"),
-            col("__lt.t").as("last_touch_type"),
-            col("__lt.u").as("last_touch_us"))
-        Populate.appendIdempotent(attributed, attributedDir,
-          Seq("key", "tie", "conv_us"))
-        // advance the frontier, then keep only in-window touches
-        val newFrontier = fresh.groupBy("key").agg(max(col("us")).as("last_us"))
-        Populate.appendIdempotent(newFrontier, frontierDir,
-          Seq("key", "last_us"))
-        val latestFrontier = newFrontier.unionByName(
-            frontier.getOrElse(newFrontier.limit(0)))
-          .groupBy("key").agg(max(col("last_us")).as("last_us"))
-        val keep = all.filter(isTouch)
-          .join(latestFrontier, Seq("key"))
-          .filter(col("us") >= col("last_us") - windowUs)
-          .select("key", "us", "tie", "ty")
-          .dropDuplicates("key", "us", "tie")
-        // publish the COMPLETE in-window buffer (aged-out rows compact
-        // away each wave); crash-safe and replay-idempotent — a re-run
-        // wave recomputes identical content from (empty fresh) ∪ buffer
-        Populate.replaceAtomic(keep, touchesDir)
-        ()
-      }
-      .start()
-    query.awaitTermination()
+        }
+      val all = (buffered match {
+        case None => fresh.withColumn("__new", lit(true))
+        case Some(b) => b.withColumn("__new", lit(false))
+          .unionByName(fresh.withColumn("__new", lit(true)))
+      }).localCheckpoint(true)
+      val w = Window.partitionBy("key").orderBy(col("us"))
+        .rangeBetween(-windowUs, 0L)
+      val isTouch = col("ty").isin(touchTypes.map(x => x: Any): _*)
+      val touchStruct = when(isTouch,
+        struct(col("us").as("u"), col("tie").as("i"), col("ty").as("t")))
+      val attributed = all
+        .withColumn("__lt", max(touchStruct).over(w))
+        .withColumn("__ft", min(touchStruct).over(w))
+        .withColumn("__nt", sum(isTouch.cast("long")).over(w))
+        .filter(col("__new") && col("ty") === conversionType &&
+          col("__nt") > 0)
+        .select(col("key"), col("tie"), col("us").as("conv_us"),
+          col("__nt").as("n_touches"),
+          col("__ft.t").as("first_touch_type"),
+          col("__ft.u").as("first_touch_us"),
+          col("__lt.t").as("last_touch_type"),
+          col("__lt.u").as("last_touch_us"))
+      Populate.appendIdempotent(attributed, attributedDir,
+        Seq("key", "tie", "conv_us"))
+      // advance the frontier, then keep only in-window touches
+      val newFrontier = fresh.groupBy("key").agg(max(col("us")).as("last_us"))
+      Populate.appendIdempotent(newFrontier, frontierDir,
+        Seq("key", "last_us"))
+      val latestFrontier = newFrontier.unionByName(
+          frontier.getOrElse(newFrontier.limit(0)))
+        .groupBy("key").agg(max(col("last_us")).as("last_us"))
+      val keep = all.filter(isTouch)
+        .join(latestFrontier, Seq("key"))
+        .filter(col("us") >= col("last_us") - windowUs)
+        .select("key", "us", "tie", "ty")
+        .dropDuplicates("key", "us", "tie")
+      // publish the COMPLETE in-window buffer (aged-out rows compact
+      // away each wave); crash-safe and replay-idempotent — a re-run
+      // wave recomputes identical content from (empty fresh) ∪ buffer
+      Populate.replaceAtomic(keep, touchesDir)
+    }
   }
 
   /** The drained attribution table,

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Populate
 
@@ -132,120 +132,109 @@ object StreamingBehavior {
                  thresholdMicro: Long, gapSeconds: Long): Unit = {
     require(gapSeconds > 0, "gapSeconds must be positive")
     val gapMicros = gapSeconds * 1000000L
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = batch.select(col(keyCol).as("key"),
-          unix_micros(col(tsCol).cast("timestamp")).as("us"),
-          col(tieCol).as("tie"), col(valueMicroCol).cast("long").as("vm"))
-        val state = Populate.readIfExists(spark, stateDir).map(latestState)
-        val st = state.getOrElse(emptyState(spark, rows.schema("key").dataType))
-        val joined = rows.join(st, Seq("key"), "left")
-        val kept = joined
-          .filter(col("last_us").isNull || col("us") > col("last_us"))
-        val w = Window.partitionBy("key").orderBy(col("us"), col("tie"))
-        // crossing = previous row (in-batch, else the carried last_vm)
-        // below threshold, this row at/above; a key's first-ever row has
-        // a null prev and never crosses
-        val crossings = kept
-          .withColumn("__prev", coalesce(lag(col("vm"), 1).over(w),
-            col("last_vm")))
-          .filter(col("__prev").isNotNull &&
-            col("__prev") < thresholdMicro && col("vm") >= thresholdMicro)
-        // islands among this batch's crossings, seeded by the open
-        // burst's end: an attached first island keeps flag 0 and thus the
-        // open burst's id; ids stay monotone per key
-        val wc = Window.partitionBy("key").orderBy(col("us"), col("tie"))
-        val wcRun = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val flagged = crossings
-          .withColumn("__pc", coalesce(lag(col("us"), 1).over(wc),
-            col("ob_end_us")))
-          .withColumn("__new",
-            when(col("__pc").isNull ||
-              col("us") - col("__pc") > gapMicros, 1L).otherwise(0L))
-          .withColumn("burst_id",
-            coalesce(col("ob_id"), lit(-1L)) + sum(col("__new")).over(wcRun))
-        val islands = flagged
-          .groupBy("key", "burst_id")
-          .agg(count(lit(1)).as("n_crossings"), min(col("us")).as("burst_start_us"),
-            max(col("us")).as("burst_end_us"), max(col("vm")).as("peak_micro"),
-            first(col("ob_id")).as("ob_id"), first(col("ob_n")).as("ob_n"),
-            first(col("ob_start_us")).as("ob_start_us"),
-            first(col("ob_peak")).as("ob_peak"))
-          .withColumn("__attached",
-            col("ob_id").isNotNull && col("burst_id") === col("ob_id"))
-          .select(col("key"), col("burst_id"),
-            when(col("__attached"), col("n_crossings") + col("ob_n"))
-              .otherwise(col("n_crossings")).as("n_crossings"),
-            when(col("__attached"), col("ob_start_us"))
-              .otherwise(col("burst_start_us")).as("burst_start_us"),
-            col("burst_end_us"),
-            when(col("__attached"), greatest(col("peak_micro"), col("ob_peak")))
-              .otherwise(col("peak_micro")).as("peak_micro"))
-        val cached = islands.localCheckpoint(true)
-        val open = cached
-          .groupBy("key")
-          .agg(max(struct(col("burst_id"), col("n_crossings"),
-            col("burst_start_us"), col("burst_end_us"),
-            col("peak_micro"))).as("__o"),
-            min(col("burst_id")).as("n_min_id"))
-          .select(col("key"), col("__o.burst_id").as("n_ob_id"),
-            col("__o.n_crossings").as("n_ob_n"),
-            col("__o.burst_start_us").as("n_ob_start_us"),
-            col("__o.burst_end_us").as("n_ob_end_us"),
-            col("__o.peak_micro").as("n_ob_peak"), col("n_min_id"))
-        val islandsClosed = cached.as("c")
-          .join(open.as("o"), col("c.key") === col("o.key") &&
-            col("c.burst_id") < col("o.n_ob_id"))
-          .select(col("c.key").as("key"), col("c.burst_id").as("burst_id"),
-            col("c.n_crossings").as("n_crossings"),
-            col("c.burst_start_us").as("burst_start_us"),
-            col("c.burst_end_us").as("burst_end_us"),
-            col("c.peak_micro").as("peak_micro"))
-        // a carried open burst that this batch's FIRST island does NOT
-        // attach to is superseded — it must be emitted as closed here or
-        // it would silently vanish when state moves to the new island
-        // (attached carries are excluded: their merged island row already
-        // owns the id)
-        val carriedClosed = st.filter(col("ob_id").isNotNull)
-          .join(open.select(col("key"), col("n_min_id")), Seq("key"))
-          .filter(col("ob_id") < col("n_min_id"))
-          .select(col("key"), col("ob_id").as("burst_id"),
-            col("ob_n").as("n_crossings"),
-            col("ob_start_us").as("burst_start_us"),
-            col("ob_end_us").as("burst_end_us"),
-            col("ob_peak").as("peak_micro"))
-        Populate.appendIdempotent(
-          islandsClosed.unionByName(carriedClosed), burstsDir,
-          Seq("key", "burst_id"))
-        // new state: keys with kept rows — newest row's (us, vm) plus the
-        // open burst (this batch's newest island if any, else carried)
-        val lastRow = kept
-          .groupBy("key")
-          .agg(max(struct(col("us"), col("tie"), col("vm"))).as("__l"),
-            first(col("ob_id")).as("c_ob_id"), first(col("ob_n")).as("c_ob_n"),
-            first(col("ob_start_us")).as("c_ob_start_us"),
-            first(col("ob_end_us")).as("c_ob_end_us"),
-            first(col("ob_peak")).as("c_ob_peak"))
-        val newState = lastRow.join(open, Seq("key"), "left")
-          .select(col("key"), col("__l.us").as("last_us"),
-            col("__l.vm").as("last_vm"),
-            coalesce(col("n_ob_id"), col("c_ob_id")).as("ob_id"),
-            coalesce(col("n_ob_n"), col("c_ob_n")).as("ob_n"),
-            coalesce(col("n_ob_start_us"), col("c_ob_start_us")).as("ob_start_us"),
-            coalesce(col("n_ob_end_us"), col("c_ob_end_us")).as("ob_end_us"),
-            coalesce(col("n_ob_peak"), col("c_ob_peak")).as("ob_peak"))
-        Populate.appendIdempotent(newState, stateDir, Seq("key", "last_us"))
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val rows = batch.select(col(keyCol).as("key"),
+        unix_micros(col(tsCol).cast("timestamp")).as("us"),
+        col(tieCol).as("tie"), col(valueMicroCol).cast("long").as("vm"))
+      val state = StreamOps.readLatest(spark, stateDir, BurstStateCols)
+      val st = state.getOrElse(emptyState(spark, rows.schema("key").dataType))
+      val joined = rows.join(st, Seq("key"), "left")
+      val kept = joined
+        .filter(col("last_us").isNull || col("us") > col("last_us"))
+      val w = Window.partitionBy("key").orderBy(col("us"), col("tie"))
+      // crossing = previous row (in-batch, else the carried last_vm)
+      // below threshold, this row at/above; a key's first-ever row has
+      // a null prev and never crosses
+      val crossings = kept
+        .withColumn("__prev", coalesce(lag(col("vm"), 1).over(w),
+          col("last_vm")))
+        .filter(col("__prev").isNotNull &&
+          col("__prev") < thresholdMicro && col("vm") >= thresholdMicro)
+      // islands among this batch's crossings, seeded by the open
+      // burst's end: an attached first island keeps flag 0 and thus the
+      // open burst's id; ids stay monotone per key
+      val wc = Window.partitionBy("key").orderBy(col("us"), col("tie"))
+      val wcRun = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val flagged = crossings
+        .withColumn("__pc", coalesce(lag(col("us"), 1).over(wc),
+          col("ob_end_us")))
+        .withColumn("__new",
+          when(col("__pc").isNull ||
+            col("us") - col("__pc") > gapMicros, 1L).otherwise(0L))
+        .withColumn("burst_id",
+          coalesce(col("ob_id"), lit(-1L)) + sum(col("__new")).over(wcRun))
+      val islands = flagged
+        .groupBy("key", "burst_id")
+        .agg(count(lit(1)).as("n_crossings"), min(col("us")).as("burst_start_us"),
+          max(col("us")).as("burst_end_us"), max(col("vm")).as("peak_micro"),
+          first(col("ob_id")).as("ob_id"), first(col("ob_n")).as("ob_n"),
+          first(col("ob_start_us")).as("ob_start_us"),
+          first(col("ob_peak")).as("ob_peak"))
+        .withColumn("__attached",
+          col("ob_id").isNotNull && col("burst_id") === col("ob_id"))
+        .select(col("key"), col("burst_id"),
+          when(col("__attached"), col("n_crossings") + col("ob_n"))
+            .otherwise(col("n_crossings")).as("n_crossings"),
+          when(col("__attached"), col("ob_start_us"))
+            .otherwise(col("burst_start_us")).as("burst_start_us"),
+          col("burst_end_us"),
+          when(col("__attached"), greatest(col("peak_micro"), col("ob_peak")))
+            .otherwise(col("peak_micro")).as("peak_micro"))
+      val cached = islands.localCheckpoint(true)
+      val open = cached
+        .groupBy("key")
+        .agg(max(struct(col("burst_id"), col("n_crossings"),
+          col("burst_start_us"), col("burst_end_us"),
+          col("peak_micro"))).as("__o"),
+          min(col("burst_id")).as("n_min_id"))
+        .select(col("key"), col("__o.burst_id").as("n_ob_id"),
+          col("__o.n_crossings").as("n_ob_n"),
+          col("__o.burst_start_us").as("n_ob_start_us"),
+          col("__o.burst_end_us").as("n_ob_end_us"),
+          col("__o.peak_micro").as("n_ob_peak"), col("n_min_id"))
+      val islandsClosed = cached.as("c")
+        .join(open.as("o"), col("c.key") === col("o.key") &&
+          col("c.burst_id") < col("o.n_ob_id"))
+        .select(col("c.key").as("key"), col("c.burst_id").as("burst_id"),
+          col("c.n_crossings").as("n_crossings"),
+          col("c.burst_start_us").as("burst_start_us"),
+          col("c.burst_end_us").as("burst_end_us"),
+          col("c.peak_micro").as("peak_micro"))
+      // a carried open burst that this batch's FIRST island does NOT
+      // attach to is superseded — it must be emitted as closed here or
+      // it would silently vanish when state moves to the new island
+      // (attached carries are excluded: their merged island row already
+      // owns the id)
+      val carriedClosed = st.filter(col("ob_id").isNotNull)
+        .join(open.select(col("key"), col("n_min_id")), Seq("key"))
+        .filter(col("ob_id") < col("n_min_id"))
+        .select(col("key"), col("ob_id").as("burst_id"),
+          col("ob_n").as("n_crossings"),
+          col("ob_start_us").as("burst_start_us"),
+          col("ob_end_us").as("burst_end_us"),
+          col("ob_peak").as("peak_micro"))
+      Populate.appendIdempotent(
+        islandsClosed.unionByName(carriedClosed), burstsDir,
+        Seq("key", "burst_id"))
+      // new state: keys with kept rows — newest row's (us, vm) plus the
+      // open burst (this batch's newest island if any, else carried)
+      val lastRow = kept
+        .groupBy("key")
+        .agg(max(struct(col("us"), col("tie"), col("vm"))).as("__l"),
+          first(col("ob_id")).as("c_ob_id"), first(col("ob_n")).as("c_ob_n"),
+          first(col("ob_start_us")).as("c_ob_start_us"),
+          first(col("ob_end_us")).as("c_ob_end_us"),
+          first(col("ob_peak")).as("c_ob_peak"))
+      val newState = lastRow.join(open, Seq("key"), "left")
+        .select(col("key"), col("__l.us").as("last_us"),
+          col("__l.vm").as("last_vm"),
+          coalesce(col("n_ob_id"), col("c_ob_id")).as("ob_id"),
+          coalesce(col("n_ob_n"), col("c_ob_n")).as("ob_n"),
+          coalesce(col("n_ob_start_us"), col("c_ob_start_us")).as("ob_start_us"),
+          coalesce(col("n_ob_end_us"), col("c_ob_end_us")).as("ob_end_us"),
+          coalesce(col("n_ob_peak"), col("c_ob_peak")).as("ob_peak"))
+      Populate.appendIdempotent(newState, stateDir, Seq("key", "last_us"))
+    }
   }
 
   /** The drained burst table: closed bursts plus each key's still-open
@@ -256,8 +245,8 @@ object StreamingBehavior {
                  stateDir: String): DataFrame = {
     val closed = Populate.readIfExists(spark, burstsDir)
       .getOrElse(spark.emptyDataFrame)
-    val open = Populate.readIfExists(spark, stateDir)
-      .map(latestState).map(_.filter(col("ob_id").isNotNull)
+    val open = StreamOps.readLatest(spark, stateDir, BurstStateCols)
+      .map(_.filter(col("ob_id").isNotNull)
         .select(col("key"), col("ob_id").as("burst_id"),
           col("ob_n").as("n_crossings"),
           col("ob_start_us").as("burst_start_us"),
@@ -271,17 +260,10 @@ object StreamingBehavior {
     }
   }
 
-  /** The key's newest state row (argmax over `last_us` — replayed appends
-    * are harmless). */
-  private def latestState(rows: DataFrame): DataFrame =
-    rows.groupBy("key")
-      .agg(max(struct(col("last_us"), col("last_vm"), col("ob_id"),
-        col("ob_n"), col("ob_start_us"), col("ob_end_us"),
-        col("ob_peak"))).as("__s"))
-      .select(col("key"), col("__s.last_us").as("last_us"),
-        col("__s.last_vm").as("last_vm"), col("__s.ob_id").as("ob_id"),
-        col("__s.ob_n").as("ob_n"), col("__s.ob_start_us").as("ob_start_us"),
-        col("__s.ob_end_us").as("ob_end_us"), col("__s.ob_peak").as("ob_peak"))
+  /** The burst state row, read as the argmax over `last_us` (replayed
+    * appends are harmless). */
+  private val BurstStateCols = Seq("last_us", "last_vm", "ob_id", "ob_n",
+    "ob_start_us", "ob_end_us", "ob_peak")
 
   private def emptyState(spark: SparkSession,
                          keyType: org.apache.spark.sql.types.DataType): DataFrame = {

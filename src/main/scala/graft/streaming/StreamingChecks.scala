@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Checks, Populate}
 
@@ -27,23 +26,13 @@ object StreamingChecks {
   def reportDrain(spark: SparkSession, sourceDir: String, stateDir: String,
                   checkpointDir: String, checks: Seq[Checks.RowCheck],
                   schema: org.apache.spark.sql.types.StructType): Unit = {
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-      .withColumn("__src", col("_metadata.file_path"))
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = Checks.reportBy(batch, "__src", checks)
-          .withColumnRenamed("__src", "src_file")
-        Populate.appendIdempotent(rows, stateDir,
-          Seq("src_file", "check", "column"))
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir,
+      bindSourceFile = true) { batch =>
+      val rows = Checks.reportBy(batch, "__src", checks)
+        .withColumnRenamed("__src", "src_file")
+      Populate.appendIdempotent(rows, stateDir,
+        Seq("src_file", "check", "column"))
+    }
   }
 
   /** Roll the accumulated state up to the one-shot report shape

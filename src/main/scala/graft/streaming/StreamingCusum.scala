@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Populate
 
@@ -35,61 +34,45 @@ object StreamingCusum {
             schema: org.apache.spark.sql.types.StructType,
             driftMicro: Long, thresholdMicro: Long): Unit = {
     require(thresholdMicro > 0, "thresholdMicro must be positive")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = batch.select(col(keyCol).as("key"),
-          unix_micros(col(tsCol).cast("timestamp")).as("us"),
-          col(tieCol).as("tie"), col(valueMicroCol).cast("long").as("vm"))
-        val state = Populate.readIfExists(spark, stateDir).map(latest)
-        val joined = state match {
-          case None => rows
-            .withColumn("last_us", lit(null).cast("long"))
-            .withColumn("pf0", lit(null).cast("long"))
-            .withColumn("mn0", lit(null).cast("long"))
-          case Some(st) => rows.join(
-            st.select(col("key"), col("last_us"), col("pf").as("pf0"),
-              col("mn").as("mn0")), Seq("key"), "left")
-        }
-        val w = Window.partitionBy("key").orderBy(col("us"), col("tie"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val scored = joined
-          .filter(col("last_us").isNull || col("us") > col("last_us"))
-          .withColumn("__lp", sum(col("vm") - lit(driftMicro)).over(w))
-          .withColumn("__p", coalesce(col("pf0"), lit(0L)) + col("__lp"))
-          .withColumn("__m", least(
-            coalesce(col("mn0"), lit(Long.MaxValue)),
-            coalesce(col("pf0"), lit(0L)) + min(col("__lp")).over(w)))
-          .withColumn("s_micro", col("__p") - least(lit(0L), col("__m")))
-          .localCheckpoint(true)
-        val alarms = scored.filter(col("s_micro") >= thresholdMicro)
-          .select("key", "us", "tie", "s_micro")
-        Populate.appendIdempotent(alarms, alarmsDir, Seq("key", "us", "tie"))
-        val newState = scored.groupBy("key")
-          .agg(max(struct(col("us"), col("tie"), col("__p"), col("__m")))
-            .as("__s"))
-          .select(col("key"), col("__s.us").as("last_us"),
-            col("__s.__p").as("pf"), col("__s.__m").as("mn"))
-        Populate.appendIdempotent(newState, stateDir, Seq("key", "last_us"))
-        ()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val rows = batch.select(col(keyCol).as("key"),
+        unix_micros(col(tsCol).cast("timestamp")).as("us"),
+        col(tieCol).as("tie"), col(valueMicroCol).cast("long").as("vm"))
+      val state = StreamOps.readLatest(spark, stateDir,
+        Seq("last_us", "pf", "mn"))
+      val joined = state match {
+        case None => rows
+          .withColumn("last_us", lit(null).cast("long"))
+          .withColumn("pf0", lit(null).cast("long"))
+          .withColumn("mn0", lit(null).cast("long"))
+        case Some(st) => rows.join(
+          st.select(col("key"), col("last_us"), col("pf").as("pf0"),
+            col("mn").as("mn0")), Seq("key"), "left")
       }
-      .start()
-    query.awaitTermination()
+      val w = Window.partitionBy("key").orderBy(col("us"), col("tie"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val scored = joined
+        .filter(col("last_us").isNull || col("us") > col("last_us"))
+        .withColumn("__lp", sum(col("vm") - lit(driftMicro)).over(w))
+        .withColumn("__p", coalesce(col("pf0"), lit(0L)) + col("__lp"))
+        .withColumn("__m", least(
+          coalesce(col("mn0"), lit(Long.MaxValue)),
+          coalesce(col("pf0"), lit(0L)) + min(col("__lp")).over(w)))
+        .withColumn("s_micro", col("__p") - least(lit(0L), col("__m")))
+        .localCheckpoint(true)
+      val alarms = scored.filter(col("s_micro") >= thresholdMicro)
+        .select("key", "us", "tie", "s_micro")
+      Populate.appendIdempotent(alarms, alarmsDir, Seq("key", "us", "tie"))
+      val newState = scored.groupBy("key")
+        .agg(max(struct(col("us"), col("tie"), col("__p"), col("__m")))
+          .as("__s"))
+        .select(col("key"), col("__s.us").as("last_us"),
+          col("__s.__p").as("pf"), col("__s.__m").as("mn"))
+      Populate.appendIdempotent(newState, stateDir, Seq("key", "last_us"))
+    }
   }
 
   /** The drained alarm table, `(key, us, tie, s_micro)`. */
   def loadAlarms(spark: SparkSession, alarmsDir: String): DataFrame =
     spark.read.parquet(alarmsDir)
-
-  private def latest(rows: DataFrame): DataFrame =
-    rows.groupBy("key")
-      .agg(max(struct(col("last_us"), col("pf"), col("mn"))).as("__s"))
-      .select(col("key"), col("__s.last_us").as("last_us"),
-        col("__s.pf").as("pf"), col("__s.mn").as("mn"))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Dedup, Populate}
 
@@ -63,68 +62,57 @@ object StreamingDedup {
             bands: Int = 8, rowsPerBand: Int = 4,
             clustersDir: Option[String] = None,
             verify: Option[(String, Double)] = None): Unit = {
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val buckets = Dedup.lshBuckets(batch, idCol, textCol,
-          numHashes, shingleN, bands, rowsPerBand)
-        // bucket the batch once per derivation; both consumers (candidates
-        // + index append) reuse the materialization
-        val cached = buckets.cache()
-        var cands: DataFrame = null
-        try {
-          val index = Populate.readIfExists(spark, indexDir)
-            .getOrElse(cached.limit(0)) // first batch: new-vs-new only
-          val raw = Dedup.incrementalCandidates(cached, index, idCol)
-          val cands0 = verify match {
-            case None => raw
-            case Some((shinglesDir, minJaccard)) =>
-              import org.apache.spark.sql.functions._
-              val sh = Dedup.withHashedShingles(batch, idCol, textCol,
-                shingleN)
-              Populate.appendIdempotent(sh, shinglesDir, Seq(idCol))
-              val store = Populate.readIfExists(spark, shinglesDir).get
-              raw
-                .join(store.select(col(idCol).as("id_a"),
-                  col("shingle_hashes").as("__sa")), Seq("id_a"))
-                .join(store.select(col(idCol).as("id_b"),
-                  col("shingle_hashes").as("__sb")), Seq("id_b"))
-                .withColumn("jaccard",
-                  round(Dedup.jaccard(col("__sa"), col("__sb")), 4))
-                .filter(col("jaccard") >= minJaccard)
-                .select("id_a", "id_b", "jaccard")
-          }
-          // two consumers per wave (the candidate append + the CC edge
-          // list): uncut, the verify joins against the shingle store ran
-          // twice — cache so the wave pays them once
-          cands = cands0.cache()
-          Populate.appendIdempotent(cands, candidatesDir, Seq("id_a", "id_b"))
-          Populate.appendIdempotent(cached, indexDir, Seq(idCol, "band"))
-          clustersDir.foreach { dir =>
-            val newPairs = cands.select("id_a", "id_b")
-            val existing = Populate.readReplaced(spark, dir)
-            val merged = existing match {
-              case Some(e) => Dedup.mergeComponents(e, newPairs, "id_a", "id_b")
-              case None => Dedup.connectedComponents(newPairs, "id_a", "id_b")
-            }
-            // staged write + swap: the old assignments stay intact (and the
-            // merge plan keeps reading them) until the new snapshot is fully
-            // on disk — a crashed batch never destroys the table
-            Populate.replaceAtomic(merged, dir)
-          }
-        } finally {
-          cached.unpersist()
-          if (cands != null) cands.unpersist()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val buckets = Dedup.lshBuckets(batch, idCol, textCol,
+        numHashes, shingleN, bands, rowsPerBand)
+      // bucket the batch once per derivation; both consumers (candidates
+      // + index append) reuse the materialization
+      val cached = buckets.cache()
+      var cands: DataFrame = null
+      try {
+        val index = Populate.readIfExists(spark, indexDir)
+          .getOrElse(cached.limit(0)) // first batch: new-vs-new only
+        val raw = Dedup.incrementalCandidates(cached, index, idCol)
+        val cands0 = verify match {
+          case None => raw
+          case Some((shinglesDir, minJaccard)) =>
+            import org.apache.spark.sql.functions._
+            val sh = Dedup.withHashedShingles(batch, idCol, textCol,
+              shingleN)
+            Populate.appendIdempotent(sh, shinglesDir, Seq(idCol))
+            val store = Populate.readIfExists(spark, shinglesDir).get
+            raw
+              .join(store.select(col(idCol).as("id_a"),
+                col("shingle_hashes").as("__sa")), Seq("id_a"))
+              .join(store.select(col(idCol).as("id_b"),
+                col("shingle_hashes").as("__sb")), Seq("id_b"))
+              .withColumn("jaccard",
+                round(Dedup.jaccard(col("__sa"), col("__sb")), 4))
+              .filter(col("jaccard") >= minJaccard)
+              .select("id_a", "id_b", "jaccard")
         }
-        ()
+        // two consumers per wave (the candidate append + the CC edge
+        // list): uncut, the verify joins against the shingle store ran
+        // twice — cache so the wave pays them once
+        cands = cands0.cache()
+        Populate.appendIdempotent(cands, candidatesDir, Seq("id_a", "id_b"))
+        Populate.appendIdempotent(cached, indexDir, Seq(idCol, "band"))
+        clustersDir.foreach { dir =>
+          val newPairs = cands.select("id_a", "id_b")
+          val existing = Populate.readReplaced(spark, dir)
+          val merged = existing match {
+            case Some(e) => Dedup.mergeComponents(e, newPairs, "id_a", "id_b")
+            case None => Dedup.connectedComponents(newPairs, "id_a", "id_b")
+          }
+          // staged write + swap: the old assignments stay intact (and the
+          // merge plan keeps reading them) until the new snapshot is fully
+          // on disk — a crashed batch never destroys the table
+          Populate.replaceAtomic(merged, dir)
+        }
+      } finally {
+        cached.unpersist()
+        if (cands != null) cands.unpersist()
       }
-      .start()
-    query.awaitTermination()
+    }
   }
 }

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Dsir, Populate}
 
@@ -40,25 +39,14 @@ object StreamingDsir {
             weights: Array[Long], targetModel: Array[Long]): Unit = {
     require(weights.length == targetModel.length,
       "weights and targetModel must share nBuckets")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val docs = batch.select(col(idCol), col(textCol))
-        val scored = Dsir.scoreAndCrossEntropy(docs, idCol, textCol,
-            weights, targetModel)
-          .select(col(idCol), col("dsir_score"), col("n_feats"),
-            col("ce_micro"))
-        Populate.appendIdempotent(scored, scoresDir, Seq(idCol))
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val docs = batch.select(col(idCol), col(textCol))
+      val scored = Dsir.scoreAndCrossEntropy(docs, idCol, textCol,
+          weights, targetModel)
+        .select(col(idCol), col("dsir_score"), col("n_feats"),
+          col("ce_micro"))
+      Populate.appendIdempotent(scored, scoresDir, Seq(idCol))
+    }
   }
 
   /** Restartable TRAINING drain: each source FILE's per-bucket feature
@@ -78,24 +66,12 @@ object StreamingDsir {
                  schema: org.apache.spark.sql.types.StructType,
                  nBuckets: Int): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
-    // the metadata column must be bound at the SOURCE — inside foreachBatch
-    // the batch is a plain LogicalRDD and file lineage is gone
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-      .withColumn("__src", col("_metadata.file_path"))
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val rows = Dsir.ngramCountsBy(batch, "__src", textCol, nBuckets)
-          .withColumnRenamed("__src", "src_file")
-        Populate.appendIdempotent(rows, countsDir, Seq("src_file", "bucket"))
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir,
+      bindSourceFile = true) { batch =>
+      val rows = Dsir.ngramCountsBy(batch, "__src", textCol, nBuckets)
+        .withColumnRenamed("__src", "src_file")
+      Populate.appendIdempotent(rows, countsDir, Seq("src_file", "bucket"))
+    }
   }
 
   /** The accumulated count array of a [[trainDrain]] table (all zeros if

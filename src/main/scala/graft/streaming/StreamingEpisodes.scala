@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Populate
 
@@ -55,104 +54,85 @@ object StreamingEpisodes {
       (0 to i).map(j => s"c${i}_us$j") :+ s"c${i}_cb")
     val stateCols = Seq("last_us", "cb") ++ carryNames
 
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = batch.select(col(keyCol).as("key"),
-          unix_micros(col(tsCol).cast("timestamp")).as("us"),
-          col(tieCol).as("tie"), col(typeCol).as("ty"))
-        val state = Populate.readIfExists(spark, stateDir)
-          .map(latestState(_, stateCols))
-        val joined = state match {
-          case None => stateCols.foldLeft(rows)((d, c) =>
-            d.withColumn(s"__st_$c", lit(null).cast("long")))
-          case Some(st) => rows.join(
-            st.select(col("key") +:
-              stateCols.map(c => col(c).as(s"__st_$c")): _*),
-            Seq("key"), "left")
-        }
-        val ord = Window.partitionBy("key").orderBy(col("us"), col("tie"))
-        val wPrec = ord.rowsBetween(Window.unboundedPreceding, -1)
-        val wInc = ord.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)
-        // each carry exists twice: the batch-prefix (exclusive) form the
-        // emission reads — the batch operator's wPrec — and the inclusive
-        // form (I_*) whose value AT THE LAST ROW is the end-of-wave state
-        def seeded(frame: org.apache.spark.sql.expressions.WindowSpec,
-                   gate: Column, what: Column, stateCol: String): Column =
-          coalesce(last(when(gate, what), ignoreNulls = true).over(frame),
-            col(s"__st_$stateCol"))
-        var df = joined
-          .filter(col("__st_last_us").isNull || col("us") > col("__st_last_us"))
-          .withColumn("cb", coalesce(col("__st_cb"), lit(0L)) +
-            sum(when(col("ty") === blocker, 1L).otherwise(0L)).over(wInc))
-        val g0 = col("ty") === stages(0)
-        df = df
-          .withColumn("c0_us0", seeded(wPrec, g0, col("us"), "c0_us0"))
-          .withColumn("I_c0_us0", seeded(wInc, g0, col("us"), "c0_us0"))
-          .withColumn("c0_cb", seeded(wPrec, g0, col("cb"), "c0_cb"))
-          .withColumn("I_c0_cb", seeded(wInc, g0, col("cb"), "c0_cb"))
-        for (i <- 1 until k - 1) {
-          // the gate reads the EXCLUSIVE carries — "a stage-i row whose
-          // prefix chain was complete as seen at its own row", exactly the
-          // batch operator's rule (its own occurrence must not count)
-          val gi = col("ty") === stages(i) && col(s"c${i - 1}_us0").isNotNull
-          for (j <- 0 until i) {
-            df = df
-              .withColumn(s"c${i}_us$j",
-                seeded(wPrec, gi, col(s"c${i - 1}_us$j"), s"c${i}_us$j"))
-              .withColumn(s"I_c${i}_us$j",
-                seeded(wInc, gi, col(s"c${i - 1}_us$j"), s"c${i}_us$j"))
-          }
-          df = df
-            .withColumn(s"c${i}_us$i", seeded(wPrec, gi, col("us"), s"c${i}_us$i"))
-            .withColumn(s"I_c${i}_us$i", seeded(wInc, gi, col("us"), s"c${i}_us$i"))
-            .withColumn(s"c${i}_cb",
-              seeded(wPrec, gi, col(s"c${i - 1}_cb"), s"c${i}_cb"))
-            .withColumn(s"I_c${i}_cb",
-              seeded(wInc, gi, col(s"c${i - 1}_cb"), s"c${i}_cb"))
-        }
-        val cached = df.localCheckpoint(true)
-        val pfx = s"c${k - 2}"
-        val stageUs = (0 until k - 1).map(j => col(s"${pfx}_us$j")) :+ col("us")
-        val episodes = cached
-          .filter(col("ty") === stages.last &&
-            col(s"${pfx}_us0").isNotNull &&
-            col("us") - col(s"${pfx}_us0") <= lit(windowSec * 1000000L))
-          .select(Seq(col("key")) ++
-            stages.zip(stageUs).map { case (st, c) => c.as(s"${st}_us") } ++
-            Seq((col("cb") - col(s"${pfx}_cb")).as("n_blockers"),
-              col("tie")): _*)
-        Populate.appendIdempotent(episodes, episodesDir,
-          Seq("key", s"${stages.last}_us", "tie"))
-        // end-of-wave state = the inclusive carries at each key's LAST row
-        val newState = cached.groupBy("key")
-          .agg(max(struct(Seq(col("us").as("last_us"), col("tie"),
-            col("cb")) ++
-            carryNames.map(n => col(s"I_$n").as(n)): _*)).as("__s"))
-          .select(col("key") +:
-            stateCols.map(c => col(s"__s.$c").as(c)): _*)
-        Populate.appendIdempotent(newState, stateDir, Seq("key", "last_us"))
-        ()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val rows = batch.select(col(keyCol).as("key"),
+        unix_micros(col(tsCol).cast("timestamp")).as("us"),
+        col(tieCol).as("tie"), col(typeCol).as("ty"))
+      val state = StreamOps.readLatest(spark, stateDir, stateCols)
+      val joined = state match {
+        case None => stateCols.foldLeft(rows)((d, c) =>
+          d.withColumn(s"__st_$c", lit(null).cast("long")))
+        case Some(st) => rows.join(
+          st.select(col("key") +:
+            stateCols.map(c => col(c).as(s"__st_$c")): _*),
+          Seq("key"), "left")
       }
-      .start()
-    query.awaitTermination()
+      val ord = Window.partitionBy("key").orderBy(col("us"), col("tie"))
+      val wPrec = ord.rowsBetween(Window.unboundedPreceding, -1)
+      val wInc = ord.rowsBetween(Window.unboundedPreceding,
+        Window.currentRow)
+      // each carry exists twice: the batch-prefix (exclusive) form the
+      // emission reads — the batch operator's wPrec — and the inclusive
+      // form (I_*) whose value AT THE LAST ROW is the end-of-wave state
+      def seeded(frame: org.apache.spark.sql.expressions.WindowSpec,
+                 gate: Column, what: Column, stateCol: String): Column =
+        coalesce(last(when(gate, what), ignoreNulls = true).over(frame),
+          col(s"__st_$stateCol"))
+      var df = joined
+        .filter(col("__st_last_us").isNull || col("us") > col("__st_last_us"))
+        .withColumn("cb", coalesce(col("__st_cb"), lit(0L)) +
+          sum(when(col("ty") === blocker, 1L).otherwise(0L)).over(wInc))
+      val g0 = col("ty") === stages(0)
+      df = df
+        .withColumn("c0_us0", seeded(wPrec, g0, col("us"), "c0_us0"))
+        .withColumn("I_c0_us0", seeded(wInc, g0, col("us"), "c0_us0"))
+        .withColumn("c0_cb", seeded(wPrec, g0, col("cb"), "c0_cb"))
+        .withColumn("I_c0_cb", seeded(wInc, g0, col("cb"), "c0_cb"))
+      for (i <- 1 until k - 1) {
+        // the gate reads the EXCLUSIVE carries — "a stage-i row whose
+        // prefix chain was complete as seen at its own row", exactly the
+        // batch operator's rule (its own occurrence must not count)
+        val gi = col("ty") === stages(i) && col(s"c${i - 1}_us0").isNotNull
+        for (j <- 0 until i) {
+          df = df
+            .withColumn(s"c${i}_us$j",
+              seeded(wPrec, gi, col(s"c${i - 1}_us$j"), s"c${i}_us$j"))
+            .withColumn(s"I_c${i}_us$j",
+              seeded(wInc, gi, col(s"c${i - 1}_us$j"), s"c${i}_us$j"))
+        }
+        df = df
+          .withColumn(s"c${i}_us$i", seeded(wPrec, gi, col("us"), s"c${i}_us$i"))
+          .withColumn(s"I_c${i}_us$i", seeded(wInc, gi, col("us"), s"c${i}_us$i"))
+          .withColumn(s"c${i}_cb",
+            seeded(wPrec, gi, col(s"c${i - 1}_cb"), s"c${i}_cb"))
+          .withColumn(s"I_c${i}_cb",
+            seeded(wInc, gi, col(s"c${i - 1}_cb"), s"c${i}_cb"))
+      }
+      val cached = df.localCheckpoint(true)
+      val pfx = s"c${k - 2}"
+      val stageUs = (0 until k - 1).map(j => col(s"${pfx}_us$j")) :+ col("us")
+      val episodes = cached
+        .filter(col("ty") === stages.last &&
+          col(s"${pfx}_us0").isNotNull &&
+          col("us") - col(s"${pfx}_us0") <= lit(windowSec * 1000000L))
+        .select(Seq(col("key")) ++
+          stages.zip(stageUs).map { case (st, c) => c.as(s"${st}_us") } ++
+          Seq((col("cb") - col(s"${pfx}_cb")).as("n_blockers"),
+            col("tie")): _*)
+      Populate.appendIdempotent(episodes, episodesDir,
+        Seq("key", s"${stages.last}_us", "tie"))
+      // end-of-wave state = the inclusive carries at each key's LAST row
+      val newState = cached.groupBy("key")
+        .agg(max(struct(Seq(col("us").as("last_us"), col("tie"),
+          col("cb")) ++
+          carryNames.map(n => col(s"I_$n").as(n)): _*)).as("__s"))
+        .select(col("key") +:
+          stateCols.map(c => col(s"__s.$c").as(c)): _*)
+      Populate.appendIdempotent(newState, stateDir, Seq("key", "last_us"))
+    }
   }
 
   /** The drained episode table, `(key, <stage>_us…, n_blockers, tie)`. */
   def loadEpisodes(spark: SparkSession, episodesDir: String): DataFrame =
     spark.read.parquet(episodesDir)
-
-  /** The key's newest state row (argmax over `(last_us, …)` — replayed
-    * appends are harmless). */
-  private def latestState(rows: DataFrame, stateCols: Seq[String]): DataFrame =
-    rows.groupBy("key")
-      .agg(max(struct(stateCols.map(col): _*)).as("__s"))
-      .select(col("key") +: stateCols.map(c => col(s"__s.$c").as(c)): _*)
 }

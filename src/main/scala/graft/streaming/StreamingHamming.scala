@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Dedup, Populate}
 
@@ -41,50 +40,39 @@ object StreamingHamming {
     val blockBits = bits / nBands
     require(blockBits < 64, "a single 64-bit band never buckets")
     val mask = (1L << blockBits) - 1
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val hashes = batch.select(col(idCol).as("id"),
-          col(hashCol).cast("long").as("h"))
-        val buckets = hashes.select(col("id"),
-            posexplode(array((0 until nBands).map(i =>
-              shiftrightunsigned(col("h"), i * blockBits).bitwiseAND(mask)): _*))
-              .as(Seq("band", "bucket")))
-          .localCheckpoint(true)
-        val index = Populate.readIfExists(spark, indexDir)
-        val cands = index match {
-          case None => Dedup.incrementalCandidates(buckets,
-            buckets.limit(0), "id", maxBucket)
-          case Some(ix) => Dedup.incrementalCandidates(buckets,
-            ix.select("id", "band", "bucket"), "id", maxBucket)
-        }
-        // verify against the persisted hash table ∪ this batch
-        val allHashes = (Populate.readIfExists(spark, hashesDir) match {
-          case None => hashes
-          case Some(old) => old.select("id", "h").unionByName(hashes)
-        }).groupBy("id").agg(first(col("h")).as("h"))
-        val verified = cands
-          .join(allHashes.select(col("id").as("id_a"), col("h").as("__ha")),
-            Seq("id_a"))
-          .join(allHashes.select(col("id").as("id_b"), col("h").as("__hb")),
-            Seq("id_b"))
-          .select(col("id_a"), col("id_b"),
-            bit_count(col("__ha").bitwiseXOR(col("__hb"))).as("hamming"))
-          .filter(col("hamming") <= maxHamming)
-        Populate.appendIdempotent(verified, pairsDir, Seq("id_a", "id_b"))
-        Populate.appendIdempotent(buckets, indexDir,
-          Seq("id", "band", "bucket"))
-        Populate.appendIdempotent(hashes, hashesDir, Seq("id"))
-        ()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val hashes = batch.select(col(idCol).as("id"),
+        col(hashCol).cast("long").as("h"))
+      val buckets = hashes.select(col("id"),
+          posexplode(array((0 until nBands).map(i =>
+            shiftrightunsigned(col("h"), i * blockBits).bitwiseAND(mask)): _*))
+            .as(Seq("band", "bucket")))
+        .localCheckpoint(true)
+      val index = Populate.readIfExists(spark, indexDir)
+      val cands = index match {
+        case None => Dedup.incrementalCandidates(buckets,
+          buckets.limit(0), "id", maxBucket)
+        case Some(ix) => Dedup.incrementalCandidates(buckets,
+          ix.select("id", "band", "bucket"), "id", maxBucket)
       }
-      .start()
-    query.awaitTermination()
+      // verify against the persisted hash table ∪ this batch
+      val allHashes = (Populate.readIfExists(spark, hashesDir) match {
+        case None => hashes
+        case Some(old) => old.select("id", "h").unionByName(hashes)
+      }).groupBy("id").agg(first(col("h")).as("h"))
+      val verified = cands
+        .join(allHashes.select(col("id").as("id_a"), col("h").as("__ha")),
+          Seq("id_a"))
+        .join(allHashes.select(col("id").as("id_b"), col("h").as("__hb")),
+          Seq("id_b"))
+        .select(col("id_a"), col("id_b"),
+          bit_count(col("__ha").bitwiseXOR(col("__hb"))).as("hamming"))
+        .filter(col("hamming") <= maxHamming)
+      Populate.appendIdempotent(verified, pairsDir, Seq("id_a", "id_b"))
+      Populate.appendIdempotent(buckets, indexDir,
+        Seq("id", "band", "bucket"))
+      Populate.appendIdempotent(hashes, hashesDir, Seq("id"))
+    }
   }
 
   /** The drained near-dup pair table, `(id_a, id_b, hamming)`. */

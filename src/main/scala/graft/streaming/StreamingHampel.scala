@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Populate
 
@@ -45,46 +44,35 @@ object StreamingHampel {
             window: Int, k: Int = 3): Unit = {
     require(window >= 2, "window must be >= 2 rows")
     require(k >= 1, "k must be >= 1")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = batch.select(col(keyCol).as("key"),
-          unix_micros(col(tsCol).cast("timestamp")).as("us"),
-          col(tieCol).as("tie"), col(valueMicroCol).cast("long").as("vm"))
-        val buffer = Populate.readIfExists(spark, bufferDir)
-          .map(tailPerKey(_, window - 1))
-        val frontier = buffer.map(_.groupBy("key")
-          .agg(max(col("us")).as("last_us")))
-        val fresh = (frontier match {
-          case None => rows.withColumn("last_us", lit(null).cast("long"))
-          case Some(f) => rows.join(f, Seq("key"), "left")
-        }).filter(col("last_us").isNull || col("us") > col("last_us"))
-          .select("key", "us", "tie", "vm")
-          .localCheckpoint(true)
-        val all = (buffer match {
-          case None => fresh.withColumn("__new", lit(true))
-          case Some(b) => b.withColumn("__new", lit(false))
-            .unionByName(fresh.withColumn("__new", lit(true)))
-        }).localCheckpoint(true)
-        val scored = graft.operators.Robust.hampelFilterTrailing(
-            all.withColumn("__ts", timestamp_micros(col("us"))),
-            "key", "__ts", "tie", "vm", window, k)
-          .filter(col("__new"))
-          .select("key", "us", "tie", "vm", "med2", "mad2", "is_outlier")
-        Populate.appendIdempotent(scored, scoredDir, Seq("key", "us", "tie"))
-        val newTail = tailPerKey(
-          all.select("key", "us", "tie", "vm"), window - 1)
-        Populate.appendIdempotent(newTail, bufferDir, Seq("key", "us", "tie"))
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val rows = batch.select(col(keyCol).as("key"),
+        unix_micros(col(tsCol).cast("timestamp")).as("us"),
+        col(tieCol).as("tie"), col(valueMicroCol).cast("long").as("vm"))
+      val buffer = Populate.readIfExists(spark, bufferDir)
+        .map(tailPerKey(_, window - 1))
+      val frontier = buffer.map(_.groupBy("key")
+        .agg(max(col("us")).as("last_us")))
+      val fresh = (frontier match {
+        case None => rows.withColumn("last_us", lit(null).cast("long"))
+        case Some(f) => rows.join(f, Seq("key"), "left")
+      }).filter(col("last_us").isNull || col("us") > col("last_us"))
+        .select("key", "us", "tie", "vm")
+        .localCheckpoint(true)
+      val all = (buffer match {
+        case None => fresh.withColumn("__new", lit(true))
+        case Some(b) => b.withColumn("__new", lit(false))
+          .unionByName(fresh.withColumn("__new", lit(true)))
+      }).localCheckpoint(true)
+      val scored = graft.operators.Robust.hampelFilterTrailing(
+          all.withColumn("__ts", timestamp_micros(col("us"))),
+          "key", "__ts", "tie", "vm", window, k)
+        .filter(col("__new"))
+        .select("key", "us", "tie", "vm", "med2", "mad2", "is_outlier")
+      Populate.appendIdempotent(scored, scoredDir, Seq("key", "us", "tie"))
+      val newTail = tailPerKey(
+        all.select("key", "us", "tie", "vm"), window - 1)
+      Populate.appendIdempotent(newTail, bufferDir, Seq("key", "us", "tie"))
+    }
   }
 
   /** The drained scored table, `(key, us, tie, vm, med2, mad2,

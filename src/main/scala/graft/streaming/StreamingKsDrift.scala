@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Checks, Populate}
 
@@ -34,31 +33,19 @@ object StreamingKsDrift {
             sideCol: String,
             schema: org.apache.spark.sql.types.StructType): Unit = {
     require(keyCols.nonEmpty, "ksDrift drain needs grouping keys")
-    // bind the file-identity column at the SOURCE — inside foreachBatch
-    // the batch is a plain LogicalRDD and file lineage is gone
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-      .withColumn("__src", col("_metadata.file_path"))
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // nulls excluded, matching Checks.ksDrift's contract (engines
-        // disagree on null sort order; null-rate drift is binnedDrift's)
-        val cells = batch
-          .filter(col(valueCol).isNotNull)
-          .groupBy((col("__src").as("src_file") +: keyCols.map(col) :+
-            col(valueCol).cast("long").as("__v")): _*)
-          .agg(sum(when(col(sideCol), 1L).otherwise(0L)).as("__k1"),
-            sum(when(col(sideCol), 0L).otherwise(1L)).as("__k2"))
-        Populate.appendIdempotent(cells, cellsDir,
-          ("src_file" +: keyCols) :+ "__v")
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir,
+      bindSourceFile = true) { batch =>
+      // nulls excluded, matching Checks.ksDrift's contract (engines
+      // disagree on null sort order; null-rate drift is binnedDrift's)
+      val cells = batch
+        .filter(col(valueCol).isNotNull)
+        .groupBy((col("__src").as("src_file") +: keyCols.map(col) :+
+          col(valueCol).cast("long").as("__v")): _*)
+        .agg(sum(when(col(sideCol), 1L).otherwise(0L)).as("__k1"),
+          sum(when(col(sideCol), 0L).otherwise(1L)).as("__k2"))
+      Populate.appendIdempotent(cells, cellsDir,
+        ("src_file" +: keyCols) :+ "__v")
+    }
   }
 
   /** The drained KS report: merge the cell shards and run the one-shot

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Populate, QualityFilter}
 
@@ -26,25 +25,13 @@ object StreamingQualityFilter {
                  schema: org.apache.spark.sql.types.StructType,
                  nBuckets: Int): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
-    // the metadata column must be bound at the SOURCE — inside foreachBatch
-    // the batch is a plain LogicalRDD and file lineage is gone
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-      .withColumn("__src", col("_metadata.file_path"))
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val rows = QualityFilter.labeledCountsBy(batch, "__src", textCol,
-            labelCol, nBuckets)
-          .withColumnRenamed("__src", "src_file")
-        Populate.appendIdempotent(rows, countsDir, Seq("src_file", "bucket"))
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir,
+      bindSourceFile = true) { batch =>
+      val rows = QualityFilter.labeledCountsBy(batch, "__src", textCol,
+          labelCol, nBuckets)
+        .withColumnRenamed("__src", "src_file")
+      Populate.appendIdempotent(rows, countsDir, Seq("src_file", "bucket"))
+    }
   }
 
   /** The accumulated `(goodCounts, badCounts)` of a [[trainDrain]] table

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Populate
 
@@ -40,26 +39,15 @@ object StreamingRecuration {
             keyCols: Seq[String], chain: Seq[(String, Seq[String])])
            (repopulate: DataFrame => Unit): Unit = {
     require(keyCols.nonEmpty, "need at least one key column")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(requestsDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val wave = batch.localCheckpoint(true)
-        if (wave.limit(1).count() > 0) {
-          val keys = wave
-            .select(keyCols.map(org.apache.spark.sql.functions.col): _*)
-            .distinct()
-          Populate.invalidate(spark, chain, keys)
-          repopulate(wave)
-        }
-        ()
+    StreamOps.drainFiles(spark, requestsDir, schema, checkpointDir) { batch =>
+      val wave = batch.localCheckpoint(true)
+      if (wave.limit(1).count() > 0) {
+        val keys = wave
+          .select(keyCols.map(org.apache.spark.sql.functions.col): _*)
+          .distinct()
+        Populate.invalidate(spark, chain, keys)
+        repopulate(wave)
       }
-      .start()
-    query.awaitTermination()
+    }
   }
 }

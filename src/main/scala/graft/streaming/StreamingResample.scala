@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Populate, Resample}
 
@@ -49,62 +48,46 @@ object StreamingResample {
             schema: org.apache.spark.sql.types.StructType,
             stepMicros: Long): Unit = {
     require(stepMicros > 0, "stepMicros must be > 0")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // three downstream actions re-derive the collapsed batch (the grid
-        // append, the carried-keys union inside it, and the state append):
-        // cut it once per wave instead of collapsing the batch three times
-        val samples = Resample.collapseMicro(batch, keyCol, tsCol, valueCol)
-          .localCheckpoint(true)
-        val state = Populate.readIfExists(spark, stateDir)
-          .map(latestPerKey)
-        val (kept, withState) = state match {
-          case None => (samples, samples)
-          case Some(st) =>
-            val stKeyed = st.select(col("key"), col("t").as("__st_t"),
-              col("v").as("__st_v"))
-            val k = samples.join(stKeyed, Seq("key"), "left")
-              .filter(col("__st_t").isNull || col("t") > col("__st_t"))
-              .select("key", "t", "v")
-            val carried = stKeyed
-              .join(k.select("key").distinct(), Seq("key"))
-              .select(col("key"), col("__st_t").as("t"),
-                col("__st_v").as("v"))
-            (k, k.unionByName(carried))
-        }
-        val out0 = Resample.linearGridMicro(withState, stepMicros)
-        val out = state match {
-          case None => out0
-          case Some(st) =>
-            out0.join(st.select(col("key"), col("t").as("__st_t")),
-                Seq("key"), "left")
-              .filter(col("__st_t").isNull ||
-                unix_micros(col("grid_ts")) > col("__st_t"))
-              .select("key", "grid_ts", "value_micro")
-        }
-        Populate.appendIdempotent(out, gridDir, Seq("key", "grid_ts"))
-        val newState = latestPerKey(kept)
-        Populate.appendIdempotent(newState, stateDir, Seq("key", "t"))
-        ()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      // three downstream actions re-derive the collapsed batch (the grid
+      // append, the carried-keys union inside it, and the state append):
+      // cut it once per wave instead of collapsing the batch three times
+      val samples = Resample.collapseMicro(batch, keyCol, tsCol, valueCol)
+        .localCheckpoint(true)
+      val state = StreamOps.readLatest(spark, stateDir, StateCols)
+      val (kept, withState) = state match {
+        case None => (samples, samples)
+        case Some(st) =>
+          val stKeyed = st.select(col("key"), col("t").as("__st_t"),
+            col("v").as("__st_v"))
+          val k = samples.join(stKeyed, Seq("key"), "left")
+            .filter(col("__st_t").isNull || col("t") > col("__st_t"))
+            .select("key", "t", "v")
+          val carried = stKeyed
+            .join(k.select("key").distinct(), Seq("key"))
+            .select(col("key"), col("__st_t").as("t"),
+              col("__st_v").as("v"))
+          (k, k.unionByName(carried))
       }
-      .start()
-    query.awaitTermination()
+      val out0 = Resample.linearGridMicro(withState, stepMicros)
+      val out = state match {
+        case None => out0
+        case Some(st) =>
+          out0.join(st.select(col("key"), col("t").as("__st_t")),
+              Seq("key"), "left")
+            .filter(col("__st_t").isNull ||
+              unix_micros(col("grid_ts")) > col("__st_t"))
+            .select("key", "grid_ts", "value_micro")
+      }
+      Populate.appendIdempotent(out, gridDir, Seq("key", "grid_ts"))
+      val newState = StreamOps.latestPerKey(kept, StateCols)
+      Populate.appendIdempotent(newState, stateDir, Seq("key", "t"))
+    }
   }
 
-  /** The key's newest `(key, t, v)` row — state reads as an argmax over
-    * the append-only table, so replayed appends are harmless.
-    */
-  private def latestPerKey(rows: DataFrame): DataFrame =
-    rows.groupBy("key")
-      .agg(max(struct(col("t"), col("v"))).as("__s"))
-      .select(col("key"), col("__s.t").as("t"), col("__s.v").as("v"))
+  /** State is the key's newest `(key, t, v)` row — an argmax over the
+    * append-only table, so replayed appends are harmless. */
+  private val StateCols = Seq("t", "v")
 
   /** The drained grid table, `(key, grid_ts, value_micro)`. */
   def loadGrid(spark: SparkSession, gridDir: String): DataFrame =

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.TextFunctions
 import graft.operators.Populate
@@ -41,73 +40,63 @@ object StreamingRetrieval {
   def indexDrain(spark: SparkSession, sourceDir: String, stagingDir: String,
                  checkpointDir: String, idCol: String, textCol: String,
                  schema: org.apache.spark.sql.types.StructType): Unit = {
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-      .withColumn("__src", col("_metadata.file_path"))
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val toks = batch.select(col("__src").as("src_file"),
-          col(idCol).as("doc"),
-          explode(filter(
-            split(TextFunctions.normalizeForDedup(col(textCol)), " "),
-            w => length(w) > 0)).as("term"))
-        // four downstream actions read tf (both guards + both appends):
-        // uncut, each re-tokenized the whole batch — cache the
-        // post-aggregation table so tokenization runs once per wave
-        val tf = toks.groupBy("src_file", "doc", "term")
-          .agg(count(lit(1)).as("tf"))
-          .cache()
-        try {
-          val dl = tf.groupBy("src_file", "doc").agg(sum("tf").as("dl"))
-          val docRows = batch
-            .select(col("__src").as("src_file"), col(idCol).as("doc"))
-            .join(dl, Seq("src_file", "doc"), "left")
-            .select(col("src_file"), col("doc"),
-              coalesce(col("dl"), lit(0L)).as("dl"))
-          // the one-doc-one-file guard: a staged doc id arriving under a
-          // DIFFERENT src_file would double-count postings, df, N and avgdl
-          // — fail loudly instead (see the header contract). Replays of the
-          // same file pass through and land nothing (idempotent keys).
-          // Two files in ONE trigger can clash too — check intra-batch first.
-          val dupIn = docRows.groupBy("doc")
-            .agg(countDistinct("src_file").as("__n"))
-            .filter(col("__n") > 1).limit(5).collect()
-          require(dupIn.isEmpty,
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir,
+      bindSourceFile = true) { batch =>
+      val toks = batch.select(col("__src").as("src_file"),
+        col(idCol).as("doc"),
+        explode(filter(
+          split(TextFunctions.normalizeForDedup(col(textCol)), " "),
+          w => length(w) > 0)).as("term"))
+      // four downstream actions read tf (both guards + both appends):
+      // uncut, each re-tokenized the whole batch — cache the
+      // post-aggregation table so tokenization runs once per wave
+      val tf = toks.groupBy("src_file", "doc", "term")
+        .agg(count(lit(1)).as("tf"))
+        .cache()
+      try {
+        val dl = tf.groupBy("src_file", "doc").agg(sum("tf").as("dl"))
+        val docRows = batch
+          .select(col("__src").as("src_file"), col(idCol).as("doc"))
+          .join(dl, Seq("src_file", "doc"), "left")
+          .select(col("src_file"), col("doc"),
+            coalesce(col("dl"), lit(0L)).as("dl"))
+        // the one-doc-one-file guard: a staged doc id arriving under a
+        // DIFFERENT src_file would double-count postings, df, N and avgdl
+        // — fail loudly instead (see the header contract). Replays of the
+        // same file pass through and land nothing (idempotent keys).
+        // Two files in ONE trigger can clash too — check intra-batch first.
+        val dupIn = docRows.groupBy("doc")
+          .agg(countDistinct("src_file").as("__n"))
+          .filter(col("__n") > 1).limit(5).collect()
+        require(dupIn.isEmpty,
+          "indexDrain: document id(s) re-arrived in a different source " +
+            "file within one batch — version the doc ids or rebuild with " +
+            "writeBm25Index. First clashing doc ids: " +
+            dupIn.map(_.get(0)).mkString(", "))
+        Populate.readIfExists(spark, stagingDir + "/docs").foreach { staged =>
+          val clash = docRows.join(
+              staged.select(col("doc"), col("src_file").as("__staged_src"))
+                .distinct(),
+              Seq("doc"))
+            .filter(col("src_file") =!= col("__staged_src"))
+          val sample = clash.select("doc", "src_file", "__staged_src")
+            .limit(5).collect()
+          require(sample.isEmpty,
             "indexDrain: document id(s) re-arrived in a different source " +
-              "file within one batch — version the doc ids or rebuild with " +
-              "writeBm25Index. First clashing doc ids: " +
-              dupIn.map(_.get(0)).mkString(", "))
-          Populate.readIfExists(spark, stagingDir + "/docs").foreach { staged =>
-            val clash = docRows.join(
-                staged.select(col("doc"), col("src_file").as("__staged_src"))
-                  .distinct(),
-                Seq("doc"))
-              .filter(col("src_file") =!= col("__staged_src"))
-            val sample = clash.select("doc", "src_file", "__staged_src")
-              .limit(5).collect()
-            require(sample.isEmpty,
-              "indexDrain: document id(s) re-arrived in a different source " +
-                "file — the staging store is per-(src_file, doc) idempotent " +
-                "and cannot represent doc updates; version the doc ids or " +
-                "rebuild with writeBm25Index. First clashes: " +
-                sample.map(r => s"doc=${r.get(0)} new=${r.get(1)} " +
-                  s"staged=${r.get(2)}").mkString("; "))
-          }
-          Populate.appendIdempotent(
-            tf.join(dl, Seq("src_file", "doc"))
-              .select("src_file", "term", "doc", "tf", "dl"),
-            stagingDir + "/postings", Seq("src_file", "doc", "term"))
-          Populate.appendIdempotent(docRows,
-            stagingDir + "/docs", Seq("src_file", "doc"))
-        } finally tf.unpersist()
-        ()
-      }
-      .start()
-    query.awaitTermination()
+              "file — the staging store is per-(src_file, doc) idempotent " +
+              "and cannot represent doc updates; version the doc ids or " +
+              "rebuild with writeBm25Index. First clashes: " +
+              sample.map(r => s"doc=${r.get(0)} new=${r.get(1)} " +
+                s"staged=${r.get(2)}").mkString("; "))
+        }
+        Populate.appendIdempotent(
+          tf.join(dl, Seq("src_file", "doc"))
+            .select("src_file", "term", "doc", "tf", "dl"),
+          stagingDir + "/postings", Seq("src_file", "doc", "term"))
+        Populate.appendIdempotent(docRows,
+          stagingDir + "/docs", Seq("src_file", "doc"))
+      } finally tf.unpersist()
+    }
   }
 
   /** Rebuild the [[graft.operators.Retrieval.bm25Probe]] layout from the

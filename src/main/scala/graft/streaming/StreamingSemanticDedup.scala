@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Populate, Similarity}
 
@@ -40,31 +39,20 @@ object StreamingSemanticDedup {
             threshold: Double,
             maxCellSize: Int = 1 << 20): Unit = {
     require(centers.nonEmpty, "pinned quantizer centers are required")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val assigned = Similarity.assignCells(
-          batch.select(idCol, vecCol), idCol, vecCol, centers)
-        // assign the batch once; both consumers (candidates + index
-        // append) reuse the materialization
-        val cached = assigned.cache()
-        try {
-          val index = Populate.readIfExists(spark, indexDir)
-            .getOrElse(cached.limit(0)) // first batch: new-vs-new only
-          val cands = Similarity.incrementalSemanticCandidates(cached, index,
-            idCol, vecCol, threshold, maxCellSize = maxCellSize)
-          Populate.appendIdempotent(cands, candidatesDir, Seq("id_a", "id_b"))
-          Populate.appendIdempotent(cached, indexDir, Seq(idCol, "cell"))
-        } finally cached.unpersist()
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val assigned = Similarity.assignCells(
+        batch.select(idCol, vecCol), idCol, vecCol, centers)
+      // assign the batch once; both consumers (candidates + index
+      // append) reuse the materialization
+      val cached = assigned.cache()
+      try {
+        val index = Populate.readIfExists(spark, indexDir)
+          .getOrElse(cached.limit(0)) // first batch: new-vs-new only
+        val cands = Similarity.incrementalSemanticCandidates(cached, index,
+          idCol, vecCol, threshold, maxCellSize = maxCellSize)
+        Populate.appendIdempotent(cands, candidatesDir, Seq("id_a", "id_b"))
+        Populate.appendIdempotent(cached, indexDir, Seq(idCol, "cell"))
+      } finally cached.unpersist()
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
 
 import graft.operators.{Dedup, Populate}
 
@@ -40,27 +39,16 @@ object StreamingSpanDedup {
             idCol: String, textCol: String,
             schema: org.apache.spark.sql.types.StructType,
             n: Int = 8, minDf: Int = 2): Unit = {
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val docs = batch.select(idCol, textCol)
-        val contribution = Dedup.spanHashIndex(docs, idCol, textCol, n)
-        val index = Populate.readIfExists(spark, indexDir)
-          .getOrElse(contribution.limit(0)) // first batch: batch-only df
-        val spans = Dedup.incrementalRepeatedSpans(docs, idCol, textCol,
-          index, n, minDf)
-        Populate.appendIdempotent(spans, spansDir, Seq(idCol, "span_start"))
-        Populate.appendIdempotent(contribution, indexDir,
-          Seq("window_hash", idCol))
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val docs = batch.select(idCol, textCol)
+      val contribution = Dedup.spanHashIndex(docs, idCol, textCol, n)
+      val index = Populate.readIfExists(spark, indexDir)
+        .getOrElse(contribution.limit(0)) // first batch: batch-only df
+      val spans = Dedup.incrementalRepeatedSpans(docs, idCol, textCol,
+        index, n, minDf)
+      Populate.appendIdempotent(spans, spansDir, Seq(idCol, "span_start"))
+      Populate.appendIdempotent(contribution, indexDir,
+        Seq("window_hash", idCol))
+    }
   }
 }

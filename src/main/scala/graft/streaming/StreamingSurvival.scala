@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Populate, Survival}
 
@@ -43,67 +42,57 @@ object StreamingSurvival {
             schema: org.apache.spark.sql.types.StructType,
             gapUs: Long): Unit = {
     require(gapUs > 0, "gapUs must be > 0")
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ev = batch.select(col(keyCol).as("key"),
-            unix_micros(col(tsCol)).as("us"),
-            col(armCol).cast("long").as("arm"))
-          .groupBy("key", "us").agg(max(col("arm")).as("arm"))
-        val state = Populate.readIfExists(spark, stateDir).map(latestPerKey)
-        val (kept, withState) = state match {
-          case None => (ev, ev.withColumn("__start", lit(null)
-            .cast("long")).withColumn("__isState", lit(false)))
-          case Some(st) =>
-            val k = ev.join(st.select(col("key"),
-                col("last_us").as("__st_last")), Seq("key"), "left")
-              .filter(col("__st_last").isNull || col("us") > col("__st_last"))
-              .select("key", "us", "arm")
-            // pseudo-row: the open session's tail, carrying its start —
-            // only for keys touched this wave (others stay open as-is)
-            val carried = st.join(k.select("key").distinct(), Seq("key"))
-              .select(col("key"), col("last_us").as("us"), col("arm"),
-                col("start_us").as("__start"), lit(true).as("__isState"))
-            (k, k.withColumn("__start", lit(null).cast("long"))
-              .withColumn("__isState", lit(false)).unionByName(carried))
-        }
-        val w = Window.partitionBy("key").orderBy("us")
-        val wRun = w.rowsBetween(Window.unboundedPreceding,
-          Window.currentRow)
-        // cache: BOTH appends (closed subjects, new state) consume the
-        // same islands — uncached, each appendIdempotent action would
-        // re-read the state parquet and re-run the session window
-        val islands = withState
-          .withColumn("__prev", lag(col("us"), 1).over(w))
-          .withColumn("__new", when(col("__prev").isNull ||
-            col("us") - col("__prev") > gapUs, 1L).otherwise(0L))
-          .withColumn("__sid", sum(col("__new")).over(wRun))
-          .groupBy("key", "__sid")
-          .agg(min(coalesce(col("__start"), col("us"))).as("start_us"),
-            max(col("us")).as("last_us"), max(col("arm")).as("arm"))
-          .persist()
-        try {
-          val lastSid = islands.groupBy("key")
-            .agg(max(col("__sid")).as("__sid"))
-          val closed = islands.join(lastSid, Seq("key", "__sid"),
-            "left_anti")
-          Populate.appendIdempotent(
-            closed.select("key", "start_us", "last_us", "arm"),
-            subjectsDir, Seq("key", "start_us"))
-          val open = islands.join(lastSid, Seq("key", "__sid"))
-          Populate.appendIdempotent(
-            open.select("key", "start_us", "last_us", "arm"),
-            stateDir, Seq("key", "last_us"))
-        } finally islands.unpersist()
-        ()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val ev = batch.select(col(keyCol).as("key"),
+          unix_micros(col(tsCol)).as("us"),
+          col(armCol).cast("long").as("arm"))
+        .groupBy("key", "us").agg(max(col("arm")).as("arm"))
+      val state = StreamOps.readLatest(spark, stateDir, StateCols)
+      val (kept, withState) = state match {
+        case None => (ev, ev.withColumn("__start", lit(null)
+          .cast("long")).withColumn("__isState", lit(false)))
+        case Some(st) =>
+          val k = ev.join(st.select(col("key"),
+              col("last_us").as("__st_last")), Seq("key"), "left")
+            .filter(col("__st_last").isNull || col("us") > col("__st_last"))
+            .select("key", "us", "arm")
+          // pseudo-row: the open session's tail, carrying its start —
+          // only for keys touched this wave (others stay open as-is)
+          val carried = st.join(k.select("key").distinct(), Seq("key"))
+            .select(col("key"), col("last_us").as("us"), col("arm"),
+              col("start_us").as("__start"), lit(true).as("__isState"))
+          (k, k.withColumn("__start", lit(null).cast("long"))
+            .withColumn("__isState", lit(false)).unionByName(carried))
       }
-      .start()
-    query.awaitTermination()
+      val w = Window.partitionBy("key").orderBy("us")
+      val wRun = w.rowsBetween(Window.unboundedPreceding,
+        Window.currentRow)
+      // cache: BOTH appends (closed subjects, new state) consume the
+      // same islands — uncached, each appendIdempotent action would
+      // re-read the state parquet and re-run the session window
+      val islands = withState
+        .withColumn("__prev", lag(col("us"), 1).over(w))
+        .withColumn("__new", when(col("__prev").isNull ||
+          col("us") - col("__prev") > gapUs, 1L).otherwise(0L))
+        .withColumn("__sid", sum(col("__new")).over(wRun))
+        .groupBy("key", "__sid")
+        .agg(min(coalesce(col("__start"), col("us"))).as("start_us"),
+          max(col("us")).as("last_us"), max(col("arm")).as("arm"))
+        .persist()
+      try {
+        val lastSid = islands.groupBy("key")
+          .agg(max(col("__sid")).as("__sid"))
+        val closed = islands.join(lastSid, Seq("key", "__sid"),
+          "left_anti")
+        Populate.appendIdempotent(
+          closed.select("key", "start_us", "last_us", "arm"),
+          subjectsDir, Seq("key", "start_us"))
+        val open = islands.join(lastSid, Seq("key", "__sid"))
+        Populate.appendIdempotent(
+          open.select("key", "start_us", "last_us", "arm"),
+          stateDir, Seq("key", "last_us"))
+      } finally islands.unpersist()
+    }
   }
 
   /** The drained life table: closed subjects are observed events; the
@@ -113,8 +102,7 @@ object StreamingSurvival {
     */
   def report(spark: SparkSession, subjectsDir: String, stateDir: String,
              gapUs: Long): Option[DataFrame] =
-    Populate.readIfExists(spark, stateDir).map { raw =>
-      val st = latestPerKey(raw)
+    StreamOps.readLatest(spark, stateDir, StateCols).map { st =>
       val closed = Populate.readIfExists(spark, subjectsDir)
         .getOrElse(st.limit(0))
       val subjects = closed.withColumn("__open", lit(false))
@@ -129,14 +117,8 @@ object StreamingSurvival {
       Survival.kmLifeTable(marked, Seq("purchased"), "duration_s", "ended")
     }
 
-  /** Latest open-session row per key (ties on last_us broken by the
-    * larger start — equal-last replays write identical rows anyway).
-    */
-  private def latestPerKey(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy("key")
-      .orderBy(col("last_us").desc, col("start_us").desc)
-    df.withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") === 1)
-      .select("key", "start_us", "last_us", "arm")
-  }
+  /** State is the latest open-session row per key: argmax over
+    * `(last_us, start_us)`. The state appends are keyed on
+    * `(key, last_us)`, so no two rows of a key tie on `last_us`. */
+  private val StateCols = Seq("last_us", "start_us", "arm")
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{EventMatch, Populate}
 
@@ -27,8 +26,11 @@ import graft.operators.{EventMatch, Populate}
   * form verbatim).
   *
   * State per wave: the predecessor block's trains (one block, read back
-  * with a block-pruned scan from the persisted train store) + the
-  * assignment table (unit-catalog scale). Late/replayed blocks are
+  * with a block-pruned scan from the persisted train store), the
+  * done-block catalog with the running max global id (one job per wave),
+  * and the predecessor's assignment rows (one block: carried on the
+  * driver from the block assigned just before, else one filtered
+  * collect) — never the cumulative assignment table. Late/replayed blocks are
   * keyed no-ops: assignments append idempotently on `(block, unit)` and
   * train rows on `(block, unit, us)`.
   */
@@ -44,102 +46,102 @@ object StreamingUnitMatch {
             blockCol: String, unitCol: String, usCol: String,
             schema: org.apache.spark.sql.types.StructType,
             deltaUs: Long, minPermille: Long): Unit = {
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        import spark.implicits._
-        val rows = batch.select(col(blockCol).cast("long").as("block"),
-          col(unitCol).cast("long").as("unit"),
-          col(usCol).cast("long").as("us")).localCheckpoint(true)
-        // persist the wave's trains first, PARTITIONED by block (one
-        // `block=N` subdir per block, written per wave block — the wave's
-        // block set is catalog-sized): the predecessor read below opens
-        // exactly one partition directory, so matching block k against
-        // k−1 never lists or scans the other blocks' files — the pruning
-        // a 100 TB train store needs, by path instead of row-group stats
-        def blockDir(b: Long) = s"$trainsDir/block=$b"
-        val waveBlocks = rows.select("block").distinct().as[Long]
-          .collect().toSeq.sorted
-        waveBlocks.foreach { b =>
-          Populate.appendIdempotent(
-            rows.filter(col("block") === b).select("unit", "us"),
-            blockDir(b), Seq("unit", "us"))
-        }
-        val assigned0 = Populate.readIfExists(spark, assignmentsDir)
-        val doneBlocks: Set[Long] = assigned0 match {
-          case None => Set.empty
-          case Some(a) => a.select("block").distinct().as[Long]
-            .collect().toSet // block catalog — bounded driver state
-        }
-        val newBlocks = waveBlocks.toSet.diff(doneBlocks).toSeq.sorted
-        // per-block assignment runs ON THE DRIVER (the propagateGlobalIds
-        // fast path, optimization r12): the assignment table and the
-        // post-aggregation agreement matrix are unit-catalog scale by this
-        // drain's own contract, so only the agreement AGGREGATE stays a
-        // cluster job — the mutual-best windows, inherit join and dense
-        // mint were ~8 shuffle stages per block on catalog-sized tables.
-        // Rules are byte-identical (EventMatch.mutualBestLocal + sorted
-        // dense mint above the running max).
-        newBlocks.foreach { blk =>
-          val cur = spark.read.parquet(blockDir(blk)).select("unit", "us")
-          val curUnits = EventMatch.unitsLocal(cur, "unit", DriverMaxRows)
-            .getOrElse(throw new IllegalStateException(
-              s"block $blk unit catalog outgrew $DriverMaxRows rows — " +
-                "not catalog-scale; use EventMatch.propagateGlobalIds"))
-          val assignedNow = Populate.readIfExists(spark, assignmentsDir)
-          val assignment: Seq[(Long, Long, Long)] = assignedNow match {
-            case None =>
-              // first assignment = the seed block (identity ids, like
-              // propagateGlobalIds); newBlocks is sorted, so this is the
-              // smallest block the stream has delivered — the landing
-              // contract makes that the true seed
-              curUnits.map(u => (blk, u, u))
-            case Some(assigned) =>
-              val prevBlk = blk - 1
-              // one bounded collect per block: the assignment catalog
-              val allAssigned = assigned
-                .select(col("block").cast("long"), col("unit").cast("long"),
-                  col("global_unit").cast("long"))
-                .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-              val prevAssign = allAssigned
-                .collect { case (b, u, g) if b == prevBlk => u -> g }.toMap
-              require(prevAssign.nonEmpty,
-                s"block $blk drained before its predecessor $prevBlk was " +
-                  "assigned — blocks must land in order (the reference's " +
-                  "seed-first frontier guard)")
-              val prev = spark.read.parquet(blockDir(prevBlk))
-                .select("unit", "us")
-              val matrix = EventMatch.matrixLocal(
-                EventMatch.agreementMatrix(cur, prev, "unit", "us", deltaUs),
-                DriverMaxRows)
-                .getOrElse(throw new IllegalStateException(
-                  s"block $blk agreement matrix outgrew $DriverMaxRows " +
-                    "rows — not catalog-scale; use " +
-                    "EventMatch.propagateGlobalIds"))
-              val inherited = EventMatch.mutualBestLocal(matrix, minPermille)
-                .flatMap { case (u, pu) => prevAssign.get(pu).map(u -> _) }
-                .toMap
-              val maxId = allAssigned.map(_._3).max
-              val freshUnits = curUnits.filterNot(inherited.contains).sorted
-              (inherited ++ freshUnits.zipWithIndex
-                .map { case (u, r) => u -> (maxId + 1L + r) })
-                .toSeq.map { case (u, g) => (blk, u, g) }
-          }
-          Populate.appendIdempotent(
-            spark.createDataFrame(assignment)
-              .toDF("block", "unit", "global_unit"),
-            assignmentsDir, Seq("block", "unit"))
-        }
-        ()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      import spark.implicits._
+      val rows = batch.select(col(blockCol).cast("long").as("block"),
+        col(unitCol).cast("long").as("unit"),
+        col(usCol).cast("long").as("us")).localCheckpoint(true)
+      // persist the wave's trains first, PARTITIONED by block (one
+      // `block=N` subdir per block, written per wave block — the wave's
+      // block set is catalog-sized): the predecessor read below opens
+      // exactly one partition directory, so matching block k against
+      // k−1 never lists or scans the other blocks' files — the pruning
+      // a 100 TB train store needs, by path instead of row-group stats
+      def blockDir(b: Long) = s"$trainsDir/block=$b"
+      val waveBlocks = rows.select("block").distinct().as[Long]
+        .collect().toSeq.sorted
+      waveBlocks.foreach { b =>
+        Populate.appendIdempotent(
+          rows.filter(col("block") === b).select("unit", "us"),
+          blockDir(b), Seq("unit", "us"))
       }
-      .start()
-    query.awaitTermination()
+      val assigned0 = Populate.readIfExists(spark, assignmentsDir)
+      // one job: the done-block catalog with each block's top global id —
+      // bounded driver state
+      val doneBlocks: Map[Long, Long] = assigned0 match {
+        case None => Map.empty
+        case Some(a) => a.groupBy(col("block").cast("long"))
+          .agg(max(col("global_unit").cast("long")))
+          .as[(Long, Long)].collect().toMap
+      }
+      val newBlocks = waveBlocks.toSet.diff(doneBlocks.keySet).toSeq.sorted
+      // carried across the wave's blocks on the driver: the running max
+      // global id (None until the seed block is assigned) and the block
+      // assigned last with its unit → global_unit map
+      var maxId = doneBlocks.values.maxOption
+      var lastAssigned = Option.empty[(Long, Map[Long, Long])]
+      // per-block assignment runs ON THE DRIVER (the propagateGlobalIds
+      // fast path, optimization r12): the assignment table and the
+      // post-aggregation agreement matrix are unit-catalog scale by this
+      // drain's own contract, so only the agreement AGGREGATE stays a
+      // cluster job — the mutual-best windows, inherit join and dense
+      // mint were ~8 shuffle stages per block on catalog-sized tables.
+      // Rules are byte-identical (EventMatch.mutualBestLocal + sorted
+      // dense mint above the running max).
+      newBlocks.foreach { blk =>
+        val cur = spark.read.parquet(blockDir(blk)).select("unit", "us")
+        val curUnits = EventMatch.unitsLocal(cur, "unit", DriverMaxRows)
+          .getOrElse(throw new IllegalStateException(
+            s"block $blk unit catalog outgrew $DriverMaxRows rows — " +
+              "not catalog-scale; use EventMatch.propagateGlobalIds"))
+        val assignment: Seq[(Long, Long, Long)] = maxId match {
+          case None =>
+            // first assignment = the seed block (identity ids, like
+            // propagateGlobalIds); newBlocks is sorted, so this is the
+            // smallest block the stream has delivered — the landing
+            // contract makes that the true seed
+            curUnits.map(u => (blk, u, u))
+          case Some(topId) =>
+            val prevBlk = blk - 1
+            // the predecessor's map: the block just assigned in this wave,
+            // else one collect of that block's rows alone
+            val prevAssign = lastAssigned.collect {
+              case (b, m) if b == prevBlk => m
+            }.getOrElse(assigned0.fold(Map.empty[Long, Long])(
+              _.filter(col("block") === prevBlk)
+                .select(col("unit").cast("long"),
+                  col("global_unit").cast("long"))
+                .as[(Long, Long)].collect().toMap))
+            require(prevAssign.nonEmpty,
+              s"block $blk drained before its predecessor $prevBlk was " +
+                "assigned — blocks must land in order (the reference's " +
+                "seed-first frontier guard)")
+            val prev = spark.read.parquet(blockDir(prevBlk))
+              .select("unit", "us")
+            val matrix = EventMatch.matrixLocal(
+              EventMatch.agreementMatrix(cur, prev, "unit", "us", deltaUs),
+              DriverMaxRows)
+              .getOrElse(throw new IllegalStateException(
+                s"block $blk agreement matrix outgrew $DriverMaxRows " +
+                  "rows — not catalog-scale; use " +
+                  "EventMatch.propagateGlobalIds"))
+            val inherited = EventMatch.mutualBestLocal(matrix, minPermille)
+              .flatMap { case (u, pu) => prevAssign.get(pu).map(u -> _) }
+              .toMap
+            val freshUnits = curUnits.filterNot(inherited.contains).sorted
+            (inherited ++ freshUnits.zipWithIndex
+              .map { case (u, r) => u -> (topId + 1L + r) })
+              .toSeq.map { case (u, g) => (blk, u, g) }
+        }
+        Populate.appendIdempotent(
+          spark.createDataFrame(assignment)
+            .toDF("block", "unit", "global_unit"),
+          assignmentsDir, Seq("block", "unit"))
+        maxId = (maxId.toSeq ++ assignment.map(_._3)).maxOption
+        lastAssigned =
+          Some(blk -> assignment.map { case (_, u, g) => u -> g }.toMap)
+      }
+    }
   }
 
   /** The drained assignment table, `(block, unit, global_unit)`. */

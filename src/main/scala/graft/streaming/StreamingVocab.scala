@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Populate, Vocab}
 
@@ -23,24 +22,12 @@ object StreamingVocab {
   def trainDrain(spark: SparkSession, sourceDir: String, countsDir: String,
                  checkpointDir: String, textCol: String,
                  schema: org.apache.spark.sql.types.StructType): Unit = {
-    // the metadata column must be bound at the SOURCE — inside foreachBatch
-    // the batch is a plain LogicalRDD and file lineage is gone
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-      .withColumn("__src", col("_metadata.file_path"))
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val rows = Vocab.wordCountsBy(batch, "__src", textCol)
-          .withColumnRenamed("__src", "src_file")
-        Populate.appendIdempotent(rows, countsDir, Seq("src_file", "word"))
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir,
+      bindSourceFile = true) { batch =>
+      val rows = Vocab.wordCountsBy(batch, "__src", textCol)
+        .withColumnRenamed("__src", "src_file")
+      Populate.appendIdempotent(rows, countsDir, Seq("src_file", "word"))
+    }
   }
 
   /** The accumulated `(word, freq)` table of a [[trainDrain]] store (empty
@@ -67,22 +54,12 @@ object StreamingVocab {
                   checkpointDir: String, idCol: String, textCol: String,
                   schema: org.apache.spark.sql.types.StructType,
                   merges: Seq[Vocab.BpeMerge]): Unit = {
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "64")
-      .parquet(sourceDir)
-    val query = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val enc = Vocab.encodeBpe(batch.select(col(idCol), col(textCol)),
-            idCol, textCol, merges)
-          .select(col(idCol), col("subwords"),
-            size(col("subwords")).cast("long").as("n_subwords"))
-        Populate.appendIdempotent(enc, tokensDir, Seq(idCol))
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
+      val enc = Vocab.encodeBpe(batch.select(col(idCol), col(textCol)),
+          idCol, textCol, merges)
+        .select(col(idCol), col("subwords"),
+          size(col("subwords")).cast("long").as("n_subwords"))
+      Populate.appendIdempotent(enc, tokensDir, Seq(idCol))
+    }
   }
 }

@@ -396,4 +396,47 @@ class GraphsSpec extends SparkSpec {
     // exactly the teleport mass after any round
     assert(r(4L) == 15L * Graphs.Scale / (100L * 4L))
   }
+
+  /** Jobs `body` starts, counted once the asynchronous listener bus has
+    * settled. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      var prev = -1
+      var cur = jobs.get()
+      while (prev != cur) { Thread.sleep(200); prev = cur; cur = jobs.get() }
+      (out, cur)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("linkPrediction budgets its driver path on wedges, not rows") {
+    // a 20-leaf star: 40 adjacency rows, but C(20, 2) = 190 wedges at the
+    // hub — within a 100-row budget by rows, over it by wedges
+    val star = (1L to 20L).map(n => (0L, n)).toDF("src", "dst")
+    def lp(budget: Int) = jobsOf(Graphs.linkPrediction(star, "src", "dst",
+      driverMaxEdges = budget))
+    val (distributed, distJobs) = lp(0)
+    val (driver, driverJobs) = lp(1000)
+    val (boundary, boundaryJobs) = lp(100)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Long, Long, Long, Boolean, Long)].collect().toSet
+    val want = rows(distributed)
+    assert(want.size == 190)
+    assert(rows(driver) == want)
+    assert(rows(boundary) == want)
+    // the driver path plans from its collect alone; the distributed path
+    // also cuts the adjacency, so it starts more jobs than the collect
+    assert(distJobs > 0)
+    assert(boundaryJobs > driverJobs,
+      s"over-budget star took the driver path ($boundaryJobs jobs, " +
+        s"driver path $driverJobs, distributed-only $distJobs)")
+  }
 }

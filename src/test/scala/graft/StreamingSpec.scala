@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.operators.Populate
 import graft.streaming.StreamOps
 
 class StreamingSpec extends SparkSpec {
@@ -185,5 +186,89 @@ class StreamingSpec extends SparkSpec {
     assert(out.length == 2)
     assert(out(0).getLong(0) == 2 && out(0).getDouble(3) == 2.0)
     assert(out(1).getLong(0) == 1 && out(1).getDouble(3) == 5.0)
+  }
+
+  // ---- the drain skeleton (StreamOps.drainFiles) ----
+
+  private val idSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("id",
+      org.apache.spark.sql.types.LongType)))
+
+  /** Land `ids` under `dir` as one parquet file named `name`. */
+  private def land(dir: java.nio.file.Path, name: String, ids: Seq[Long]): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-land")
+    ids.toDF("id").coalesce(1).write.mode("overwrite")
+      .parquet(tmp.resolve("out").toString)
+    val listing = java.nio.file.Files.list(tmp.resolve("out"))
+    val part = try listing.toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    finally listing.close()
+    java.nio.file.Files.createDirectories(dir)
+    java.nio.file.Files.move(part, dir.resolve(name))
+    ()
+  }
+
+  test("drainFiles rethrows a failed wave, leaves it uncommitted, and a re-run converges") {
+    val root = java.nio.file.Files.createTempDirectory("graft-drainfault")
+    val (src, ckpt) = (root.resolve("src"), root.resolve("ckpt").toString)
+    val (faulty, clean) = (root.resolve("faulty").toString,
+      root.resolve("clean").toString)
+    def drain(target: String, checkpoint: String, failOn: Option[Long] = None,
+              seen: collection.mutable.Buffer[Long] =
+                collection.mutable.Buffer.empty): Unit =
+      StreamOps.drainFiles(spark, src.toString, idSchema, checkpoint) { batch =>
+        seen ++= batch.as[Long].collect()
+        // the append lands BEFORE the fault: the retry must converge anyway
+        Populate.appendIdempotent(batch, target, Seq("id"))
+        if (failOn.exists(id => batch.filter(col("id") === id).count() > 0))
+          throw new IllegalStateException("injected wave fault")
+      }
+    land(src, "a.parquet", Seq(1L, 2L))
+    drain(faulty, ckpt)
+    land(src, "b.parquet", Seq(3L, 4L))
+    val e = intercept[Exception] {
+      drain(faulty, ckpt, failOn = Some(3L))
+    }
+    def chain(t: Throwable): Seq[Throwable] =
+      t +: Option(t.getCause).toSeq.flatMap(chain)
+    assert(chain(e).exists(c => Option(c.getMessage)
+      .exists(_.contains("injected wave fault"))), e.getMessage)
+    // batch 1 was planned (offsets/1) but never committed (commits/1)
+    assert(new java.io.File(ckpt, "commits/0").exists())
+    assert(new java.io.File(ckpt, "offsets/1").exists())
+    assert(!new java.io.File(ckpt, "commits/1").exists())
+    // the same checkpoint re-delivers exactly the failed batch
+    val redelivered = collection.mutable.Buffer.empty[Long]
+    drain(faulty, ckpt, seen = redelivered)
+    assert(redelivered.sorted == Seq(3L, 4L))
+    assert(new java.io.File(ckpt, "commits/1").exists())
+    // ... and converges to the table a fault-free run writes
+    drain(clean, root.resolve("ckpt-clean").toString)
+    def rows(t: String) = spark.read.parquet(t).as[Long].collect().sorted.toSeq
+    assert(rows(faulty) == Seq(1L, 2L, 3L, 4L))
+    assert(rows(faulty) == rows(clean))
+  }
+
+  test("drainFiles binds each row's landed file as __src only when asked") {
+    val root = java.nio.file.Files.createTempDirectory("graft-drainsrc")
+    val src = root.resolve("src")
+    land(src, "a.parquet", Seq(1L, 2L))
+    land(src, "b.parquet", Seq(3L))
+    val bound = collection.mutable.Buffer.empty[(Long, String)]
+    StreamOps.drainFiles(spark, src.toString, idSchema,
+      root.resolve("ckpt1").toString, bindSourceFile = true) { batch =>
+      bound ++= batch.select("id", "__src").as[(Long, String)].collect()
+    }
+    val fileOf = bound.map { case (id, path) =>
+      id -> java.nio.file.Paths.get(new java.net.URI(path)).getFileName.toString
+    }.toMap
+    assert(fileOf == Map(1L -> "a.parquet", 2L -> "a.parquet",
+      3L -> "b.parquet"))
+    val columns = collection.mutable.Buffer.empty[Seq[String]]
+    StreamOps.drainFiles(spark, src.toString, idSchema,
+      root.resolve("ckpt2").toString) { batch =>
+      columns += batch.columns.toSeq
+    }
+    assert(columns.nonEmpty && columns.forall(_ == Seq("id")))
   }
 }

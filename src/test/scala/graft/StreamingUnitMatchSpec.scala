@@ -85,4 +85,69 @@ class StreamingUnitMatchSpec extends SparkSpec {
     assert(chain(e).exists(c => Option(c.getMessage)
       .exists(_.contains("predecessor"))), e.getMessage)
   }
+
+  /** Row counts of the collects `body` runs over the table at `dir`, in
+    * order. Each recorded plan is re-executed afterwards: its file index
+    * was listed when the collect ran, so it returns the same rows. */
+  private def collectsOver(dir: String)(body: => Unit): Seq[Int] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (funcName == "collect") { seen.add(qe); () }
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    def reads(qe: QueryExecution, path: String) =
+      qe.optimizedPlan.collectLeaves().exists {
+        case l: LogicalRelation => l.relation match {
+          case h: HadoopFsRelation => h.location.rootPaths.exists(p =>
+            new java.io.File(p.toUri).getCanonicalPath ==
+              new java.io.File(path).getCanonicalPath)
+          case _ => false
+        }
+        case _ => false
+      }
+    val marker = Files.createTempDirectory("unitmatch_marker") + "/m"
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // the listener bus is asynchronous: a marker collect queued after
+      // the drain's collects shows they have all been delivered
+      Seq(1L).toDF("m").write.parquet(marker)
+      spark.read.parquet(marker).collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.toArray(Array.empty[QueryExecution]).exists(reads(_, marker)) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    seen.toArray(Array.empty[QueryExecution]).toSeq.filter(reads(_, dir))
+      .map(_.executedPlan.executeCollect().length)
+  }
+
+  test("a block's assignment collect holds only its predecessor's rows") {
+    val (src, trains, asg, ckpt) = dirs()
+    def wave(): Unit = StreamingUnitMatch.drain(spark, src, trains, asg,
+      ckpt, "block", "unit", "us", schema, deltaUs = 4L, minPermille = 500L)
+    // wave 1: blocks 0..4, four units each — every predecessor is the
+    // block assigned just before, carried on the driver
+    (0L to 4L).map(block(_, withNew = false)).reduce(_ unionByName _)
+      .write.mode("append").parquet(src)
+    assert(collectsOver(asg)(wave()).isEmpty,
+      "in-wave predecessors must come from the driver, not the table")
+    // wave 2: block 5 against the persisted block 4 — one catalog row per
+    // done block (5), then the predecessor's 4 units, never all 20 rows
+    block(5L, withNew = false).write.mode("append").parquet(src)
+    assert(collectsOver(asg)(wave()) == Seq(5, 4))
+    val drained = StreamingUnitMatch.loadAssignments(spark, asg)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+      .toMap
+    val oneShot = EventMatch.propagateGlobalIds(
+        (0L to 5L).map(block(_, withNew = false).select("unit", "us")),
+        "unit", "us", deltaUs = 4L, minPermille = 500L)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))
+      .toMap
+    assert(drained === oneShot)
+  }
 }
