@@ -688,7 +688,7 @@ object Dedup {
     * string/UUID ids into nulls, drop every edge, and "deduplicate" nothing
     * — so non-integral id columns are rejected loudly up front.
     */
-  private def requireIntegralIds(df: DataFrame, cols: Seq[String], who: String): Unit =
+  private[operators] def requireIntegralIds(df: DataFrame, cols: Seq[String], who: String): Unit =
     cols.foreach { c =>
       import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
       val dt = df.schema(df.schema.fieldIndex(c)).dataType
@@ -723,7 +723,8 @@ object Dedup {
     * driver union-find instead ([[driverComponents]]) — one collect of
     * catalog-scale state replaces diameter-many shuffle rounds, with
     * identical labels and no diameter limit. Set it to 0 to force the
-    * distributed loop.
+    * distributed loop; a non-`Local` checkpointer forces it too, since only
+    * the distributed loop leaves the durable final cut `Reliable` promises.
     *
     * Output: `(id, cluster)` for every node that appears in `pairs`;
     * `cluster` = min id in the component. Singletons never enter the edge
@@ -733,7 +734,7 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 25,
                           checkpointer: Checkpointer = Checkpointer.Local,
-                          driverMaxEdges: Long = 1L << 20): DataFrame = {
+                          driverMaxEdges: Long = DriverPath.MaxRows): DataFrame = {
     requireIntegralIds(pairs, Seq(aCol, bCol), "connectedComponents")
     val edges = checkpointer.cut(
       pairs.select(col(aCol).cast("long").as("src"),
@@ -744,17 +745,13 @@ object Dedup {
         .distinct()) // pairs may be an expensive LSH plan: run it ONCE
     // catalog-scale fast path: a near-dup edge list is a vanishing fraction
     // of the corpus, and below `driverMaxEdges` (default 2²⁰ directed
-    // edges = 16 MB of longs) a driver union-find replaces maxIter rounds
-    // of join+agg jobs with ONE collect — same catalog-scale discipline as
-    // IVF centers or classifier weights (the edge count is known for free:
-    // the cut just materialized it). Labels are identical by construction
+    // edges) a driver union-find replaces maxIter rounds of join+agg jobs
+    // with ONE collect of the cut — same catalog-scale discipline as IVF
+    // centers or classifier weights. Labels are identical by construction
     // (min member id per component); the distributed loop remains the path
     // for edge lists that outgrow the driver.
-    if (edges.count() <= driverMaxEdges) {
-      val out = driverComponents(pairs.sparkSession, edges)
-      checkpointer.release(edges)
-      return out
-    }
+    val fast = driverComponents(edges, driverMaxEdges, checkpointer)
+    if (fast.isDefined) return fast.get
     // `cutLabels` tracks the frame `cut` returned (release keys on object
     // identity); round N's cut is released as soon as round N+1 has
     // materialized — the cuts are eager, so nothing references it after
@@ -824,7 +821,7 @@ object Dedup {
   def connectedComponentsStars(pairs: DataFrame, aCol: String, bCol: String,
                                maxIter: Int = 50,
                                checkpointer: Checkpointer = Checkpointer.Local,
-                               driverMaxEdges: Long = 1L << 20): DataFrame = {
+                               driverMaxEdges: Long = DriverPath.MaxRows): DataFrame = {
     requireIntegralIds(pairs, Seq(aCol, bCol), "connectedComponentsStars")
     // canonical child>parent orientation from the start so the fixpoint
     // comparison below is orientation-stable
@@ -835,12 +832,8 @@ object Dedup {
         .select(greatest(col("__a"), col("__b")).as("u"),
           least(col("__a"), col("__b")).as("v"))
         .distinct())
-    if (edges0.count() <= driverMaxEdges) {
-      val out = driverComponents(pairs.sparkSession,
-        edges0.select(col("u").as("src"), col("v").as("dst")))
-      checkpointer.release(edges0)
-      return out
-    }
+    val fast = driverComponents(edges0, driverMaxEdges, checkpointer)
+    if (fast.isDefined) return fast.get
 
     def largeStar(e: DataFrame): DataFrame = {
       val adj = e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -891,27 +884,30 @@ object Dedup {
     }
   }
 
-  /** Driver union-find over a collected edge list — the fast path of
-    * [[connectedComponents]] below `driverMaxEdges`. Path-halving find +
-    * union by attaching the larger root under the smaller: since every node
-    * starts as its own root, the root of a tree is by induction the MIN
-    * member id of its component, so `find(n)` directly yields the label the
-    * distributed propagation converges to. Unbounded by graph diameter (no
-    * maxIter here: union-find closes any chain), deterministic regardless
-    * of edge order.
+  /** Driver union-find over a guarded collect of the cut `edges` — the
+    * fast path of [[connectedComponents]] and [[connectedComponentsStars]];
+    * None when [[DriverPath.collect]] picks the distributed path. The
+    * driver path only runs under the `Local` checkpointer, whose cuts need
+    * no release. Path-halving find + union by attaching the larger root
+    * under the smaller: since every node starts as its own root, the root
+    * of a tree is by induction the MIN member id of its component, so
+    * `find(n)` directly yields the label the distributed propagation
+    * converges to. Unbounded by graph diameter (no maxIter here:
+    * union-find closes any chain), deterministic regardless of edge order.
     *
     * Driver footprint at the 2²⁰-edge default is worst-case a few hundred
-    * MB (specialized long tuples ≈ 32 B/edge, plus ~80 B/entry of boxed
+    * MB (decoded long tuples ≈ 60 B/edge, plus ~80 B/entry of boxed
     * HashMap for up to 2·2²⁰ nodes) — NOT just the 16 MB of raw longs.
     * Size `driverMaxEdges` to the driver heap actually available.
     */
-  private def driverComponents(spark: org.apache.spark.sql.SparkSession,
-                               edges: DataFrame): DataFrame = {
-    // typed collect: Tuple2 is @specialized on Long, so this materializes
-    // primitive pairs instead of 100+ B GenericRows with boxed fields
-    val tupleEnc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
-    val collected = edges.as[(Long, Long)](tupleEnc).collect()
+  private def driverComponents(edges: DataFrame, budget: Long,
+                               checkpointer: Checkpointer): Option[DataFrame] = {
+    import DriverPath.pairs
+    val collected =
+      DriverPath.collect[(Long, Long)](edges, budget, checkpointer) match {
+        case Right(rows) => rows
+        case Left(_) => return None
+      }
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -934,8 +930,9 @@ object Dedup {
     nodes.forEach { n => out += ((n, find(n))) }
     // parallelize, not a LocalRelation: a local Seq in createDataset would
     // embed 2M labels in the PLAN (shipped with every task closure downstream)
-    spark.createDataset(spark.sparkContext.parallelize(out.toSeq))(tupleEnc)
-      .toDF("id", "cluster")
+    val spark = edges.sparkSession
+    Some(spark.createDataset(spark.sparkContext.parallelize(out.toSeq))(pairs)
+      .toDF("id", "cluster"))
   }
 
   /** Incremental cluster maintenance — the batch-append twin of

@@ -74,13 +74,12 @@ object EventMatch {
   }
 
   /** [[mutualBestMatch]]'s rule on collected matrix rows
-    * `(unit_a, unit_b, agreement_permille)` — the driver twin used by the
-    * size-guarded fast path in [[propagateGlobalIds]] and
-    * [[graft.streaming.StreamingUnitMatch]]: `minBy (score desc, partner
-    * asc)` per side is exactly `row_number() == 1` under the same order.
+    * `(unit_a, unit_b, agreement_permille)` — the driver twin behind
+    * [[assignLocal]]: `minBy (score desc, partner asc)` per side is exactly
+    * `row_number() == 1` under the same order.
     */
-  private[graft] def mutualBestLocal(rows: Seq[(Long, Long, Long)],
-                                     minPermille: Long): Seq[(Long, Long)] = {
+  private def mutualBestLocal(rows: Seq[(Long, Long, Long)],
+                              minPermille: Long): Seq[(Long, Long)] = {
     val f = rows.filter(_._3 >= minPermille)
     val bestA = f.groupBy(_._1).map { case (a, g) =>
       a -> g.minBy(t => (-t._3, t._2))._2 }
@@ -89,27 +88,43 @@ object EventMatch {
     f.collect { case (a, b, _) if bestA(a) == b && bestB(b) == a => (a, b) }
   }
 
-  /** The guarded collect behind the fast path: the POST-AGGREGATION
-    * agreement matrix is unit-catalog² at worst (never event-scale), same
-    * boundedness class as [[graft.operators.Dedup]]'s `driverMaxEdges`
-    * fast path. Returns None when the matrix outgrows `maxRows` (caller
-    * falls back to the distributed assignment).
+  /** One block's `unit → global_unit` assignment on the driver — the
+    * driver twin of one [[propagateGlobalIds]] round, shared with
+    * [[graft.streaming.StreamingUnitMatch]]. The block's unit catalog and,
+    * past the seed, its [[agreementMatrix]] against `prev` (the previous
+    * block's trains and assignment) go through [[DriverPath.collect]];
+    * `Left(reason)` when either must take the distributed path. The seed
+    * (`prev` None) keeps identity ids; otherwise mutual-best matches
+    * inherit the previous block's global id and the rest mint dense ids
+    * above `maxId`, ordered by unit id (assignDenseIds' order), exactly
+    * the distributed rules.
     */
-  private[graft] def matrixLocal(matrix: DataFrame, maxRows: Int)
-      : Option[Seq[(Long, Long, Long)]] = {
-    val rows = matrix
-      .select(col("unit_a"), col("unit_b"), col("agreement_permille"))
-      .limit(maxRows + 1).collect()
-    if (rows.length > maxRows) None
-    else Some(rows.toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))))
-  }
-
-  /** Distinct unit ids of one block, guarded like [[matrixLocal]]. */
-  private[graft] def unitsLocal(block: DataFrame, unitCol: String,
-                                maxRows: Int): Option[Seq[Long]] = {
-    val rows = block.select(col(unitCol).cast("long").as("u")).distinct()
-      .limit(maxRows + 1).collect()
-    if (rows.length > maxRows) None else Some(rows.toSeq.map(_.getLong(0)))
+  private[graft] def assignLocal(cur: DataFrame,
+                                 prev: Option[(DataFrame, Map[Long, Long])],
+                                 unitCol: String, usCol: String,
+                                 deltaUs: Long, minPermille: Long,
+                                 maxId: Long, budget: Long)
+      : Either[String, Map[Long, Long]] = {
+    import DriverPath.{longs, triples}
+    DriverPath.collect[Long](
+        cur.select(col(unitCol).cast("long").as("u")).distinct(), budget)
+      .flatMap { units =>
+        prev match {
+          case None => Right(units.map(u => u -> u).toMap)
+          case Some((prevBlock, prevAssign)) =>
+            DriverPath.collect[(Long, Long, Long)](
+                agreementMatrix(cur, prevBlock, unitCol, usCol, deltaUs)
+                  .select("unit_a", "unit_b", "agreement_permille"), budget)
+              .map { matrix =>
+                val inherited = mutualBestLocal(matrix.toSeq, minPermille)
+                  .flatMap { case (u, pu) => prevAssign.get(pu).map(u -> _) }
+                  .toMap
+                val fresh = units.filterNot(inherited.contains).sorted
+                inherited ++ fresh.zipWithIndex
+                  .map { case (u, r) => u -> (maxId + 1L + r) }
+              }
+        }
+      }
   }
 
   /** Mutual-best assignment over an [[agreementMatrix]]: a pair survives
@@ -147,79 +162,41 @@ object EventMatch {
   def propagateGlobalIds(blocks: Seq[DataFrame], unitCol: String,
                          usCol: String, deltaUs: Long,
                          minPermille: Long,
-                         driverMaxRows: Int = 1 << 20): DataFrame = {
+                         driverMaxRows: Int = DriverPath.MaxRows): DataFrame = {
     require(blocks.nonEmpty, "need at least one block")
-    val spark = blocks.head.sparkSession
     // FAST PATH (optimization r12, guide §1.2): everything AFTER the
     // distributed agreement aggregate is unit-catalog scale — the matrix is
     // ≤ |units|² rows and each block's assignment is |units| rows — yet the
     // distributed formulation paid ~10 shuffle stages (2 argmax windows,
     // 3 joins, a range-partitioned id mint, 2 lineage cuts) PER BLOCK on
     // catalog-sized tables (q253 measured 92 jobs / 14 s-class walls).
-    // Collect the matrix and unit set per block (guarded, the
-    // Dedup.driverMaxEdges discipline), assign on the driver with the
-    // IDENTICAL mutual-best + dense-mint rules, and return one local
-    // relation: one distributed aggregate per block, events never leave
-    // the cluster path. Falls back to the distributed loop when any
-    // block outgrows the guard.
-    val fast = propagateLocal(blocks, unitCol, usCol, deltaUs, minPermille,
-      driverMaxRows)
-    fast match {
-      case Some(rows) =>
-        spark.createDataFrame(rows).toDF("block", "unit", "global_unit")
-      case None =>
-        propagateDistributed(blocks, unitCol, usCol, deltaUs, minPermille)
-    }
-  }
-
-  /** Driver-side propagation (see [[propagateGlobalIds]]); None when any
-    * block's matrix or unit catalog outgrows `driverMaxRows`.
-    */
-  private def propagateLocal(blocks: Seq[DataFrame], unitCol: String,
-                             usCol: String, deltaUs: Long, minPermille: Long,
-                             driverMaxRows: Int)
-      : Option[Seq[(Long, Long, Long)]] = {
+    // Collect the matrix and unit set per block (guarded by
+    // DriverPath.collect), assign on the driver with the IDENTICAL
+    // mutual-best + dense-mint rules ([[assignLocal]]), and return one
+    // local relation: one distributed aggregate per block, events never
+    // leave the cluster path. Falls back to the distributed loop when any
+    // block must take the distributed path.
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
     var prevAssign = Map.empty[Long, Long]
     var maxId = Long.MinValue
     var i = 0
     while (i < blocks.length) {
-      val cur = blocks(i)
-      val assign: Map[Long, Long] =
-        if (i == 0) {
-          // seed block: identity ids (the reference seeds identity too)
-          unitsLocal(cur, unitCol, driverMaxRows) match {
-            case None => return None
-            case Some(us) => us.map(u => u -> u).toMap
-          }
-        } else {
-          val matrix = matrixLocal(
-            agreementMatrix(cur, blocks(i - 1), unitCol, usCol, deltaUs),
-            driverMaxRows) match {
-            case None => return None
-            case Some(m) => m
-          }
-          val curUnits = unitsLocal(cur, unitCol, driverMaxRows) match {
-            case None => return None
-            case Some(us) => us
-          }
-          // matched units inherit the PREVIOUS block's global id; the
-          // rest mint dense ids above the running max, ordered by unit id
-          // (assignDenseIds' order), exactly the distributed rules
-          val inherited = mutualBestLocal(matrix, minPermille)
-            .flatMap { case (u, pu) => prevAssign.get(pu).map(u -> _) }
-            .toMap
-          val freshUnits = curUnits.filterNot(inherited.contains).sorted
-          inherited ++ freshUnits.zipWithIndex
-            .map { case (u, r) => u -> (maxId + 1L + r) }
-        }
+      val prev = if (i == 0) None else Some(blocks(i - 1) -> prevAssign)
+      val assign = assignLocal(blocks(i), prev, unitCol, usCol, deltaUs,
+        minPermille, maxId, driverMaxRows) match {
+        case Right(a) => a
+        case Left(_) =>
+          return propagateDistributed(blocks, unitCol, usCol, deltaUs,
+            minPermille)
+      }
       assign.foreach { case (u, g) => out += ((i.toLong, u, g)) }
       if (assign.nonEmpty)
         maxId = math.max(maxId, assign.valuesIterator.max)
       prevAssign = assign
       i += 1
     }
-    Some(out.toSeq)
+    blocks.head.sparkSession.createDataFrame(out.toSeq)
+      .toDF("block", "unit", "global_unit")
   }
 
   private def propagateDistributed(blocks: Seq[DataFrame], unitCol: String,

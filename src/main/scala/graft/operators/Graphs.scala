@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import DriverPath.pairs
 
 /** Iterative graph analytics over edge lists — the rank-propagation
   * companion to [[Dedup]]'s connected components (label propagation). First
@@ -16,36 +18,49 @@ object Graphs {
     * 10⁻¹² grid of the unit mass. */
   val Scale: Long = 1000000000000L
 
-  /** Guard for the driver fast paths (optimization r13, the
-    * Dedup.driverMaxEdges / EventMatch.propagateGlobalIds discipline):
-    * what is collected is always the DEDUPED edge list — catalog-scale
-    * for the similarity-graph family — never raw input rows. Every
-    * operator keeps its distributed formulation as the fallback when the
-    * edge list outgrows this. */
-  val DriverMaxEdges: Int = 1 << 20
+  /** The canonical undirected projection of an edge list: `(a, b)` with
+    * `a < b`, one row per unordered pair, self-loops dropped. */
+  private def undirected(edges: DataFrame, src: Column, dst: Column)
+      : DataFrame =
+    edges.select(least(src, dst).as("a"), greatest(src, dst).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
 
-  /** Guarded collect of a two-long-column frame (a deduped edge list or a
-    * label table). None — i.e. "use the distributed path" — when the
-    * columns are not BIGINT (the distributed operators preserve narrower
-    * input id types in their output; the local twins must not widen
-    * them), when any id is null, when the frame outgrows `maxRows`, or
-    * when the caller passed a checkpointer other than `Local`: a
-    * `Reliable` caller is promised a durable final cut, which only the
-    * distributed path makes. The `limit` is unordered, which is fine:
-    * the rows are only used when NOT truncated, so which `maxRows + 1`
-    * rows surface is irrelevant (do not "fix" this into a sort).
-    */
-  private def collectedPairs(df: DataFrame, maxRows: Int,
-      checkpointer: Dedup.Checkpointer = Dedup.Checkpointer.Local)
-      : Option[Array[(Long, Long)]] = {
-    import org.apache.spark.sql.types.LongType
-    if (maxRows <= 0 || checkpointer != Dedup.Checkpointer.Local ||
-        !df.schema.fields.forall(_.dataType == LongType))
-      return None
-    val rows = df.limit(maxRows + 1).collect()
-    if (rows.length > maxRows) None
-    else if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-    else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
+  /** Both directions of an undirected `(a, b)` edge list as
+    * `(node, nbr)` rows. */
+  private def symmetric(und: DataFrame): DataFrame =
+    und.select(col("a").as("node"), col("b").as("nbr"))
+      .unionAll(und.select(col("b").as("node"), col("a").as("nbr")))
+
+  /** Neighbour sets of a collected undirected edge list. */
+  private def adjacency(es: Array[(Long, Long)])
+      : scala.collection.Map[Long, Set[Long]] = {
+    val adj = scala.collection.mutable.HashMap.empty[Long, Set[Long]]
+    es.foreach { case (a, b) =>
+      adj(a) = adj.getOrElse(a, Set.empty) + b
+      adj(b) = adj.getOrElse(b, Set.empty) + a
+    }
+    adj
+  }
+
+  /** The driver twin of [[triangleCounts]] over a collected `a < b` edge
+    * list and its [[adjacency]]: exact per-node counts need no tie-breaking
+    * argument — any enumeration that finds each triangle once matches. It
+    * walks each edge (a, b) and counts common neighbours w > b (the
+    * canonical a < b < w triple), crediting all three corners. */
+  private def trianglesLocal(es: Array[(Long, Long)],
+                             adj: scala.collection.Map[Long, Set[Long]])
+      : scala.collection.Map[Long, Long] = {
+    val cnt = scala.collection.mutable.HashMap.empty[Long, Long]
+    def bump(n: Long): Unit = cnt(n) = cnt.getOrElse(n, 0L) + 1L
+    es.foreach { case (a, b) =>
+      val (small, large) =
+        if (adj(a).size <= adj(b).size) (adj(a), adj(b)) else (adj(b), adj(a))
+      small.foreach { w =>
+        if (w > b && large.contains(w)) { bump(a); bump(b); bump(w) }
+      }
+    }
+    cnt
   }
 
   /** (count desc, label asc) argmax over neighbor labels — the driver twin
@@ -79,97 +94,10 @@ object Graphs {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int, dampingPct: Int = 85,
                checkpointer: Dedup.Checkpointer = Dedup.Checkpointer.Local,
-               driverMaxEdges: Int = DriverMaxEdges)
-      : DataFrame = {
-    require(iterations >= 0, "iterations must be >= 0")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      "dampingPct must be in [0, 100]")
-    val dedup = edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
-      .distinct()
-    // FAST PATH (optimization r13, guide §1.2/§5 — the q253 discipline):
-    // the deduped edge list is catalog-scale here; one guarded collect
-    // replaces O(iterations) rounds of 2 shuffles + an eager lineage cut
-    // each. The driver replays the IDENTICAL all-BIGINT arithmetic
-    // (r div deg, damping·S div 100 — positive longs, so SQL div ≡ Java /)
-    // and the expensive edge upstream runs exactly once, inside the
-    // collect. Distributed loop below is the unchanged fallback.
-    collectedPairs(dedup, driverMaxEdges, checkpointer) match {
-      case Some(es) =>
-        require(es.nonEmpty, "pageRank needs at least one edge")
-        val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
-        val n = nodes.length.toLong
-        val teleport = (100L - dampingPct) * Scale / (100L * n)
-        val deg = es.groupBy(_._1).map { case (s, g) => s -> g.length.toLong }
-        var rank = nodes.map(nd => nd -> Scale / n).toMap
-        var it = 0
-        while (it < iterations) {
-          val in = scala.collection.mutable.HashMap.empty[Long, Long]
-          es.foreach { case (s, d) =>
-            in(d) = in.getOrElse(d, 0L) + rank(s) / deg(s)
-          }
-          rank = nodes.map(nd =>
-            nd -> (teleport + dampingPct * in.getOrElse(nd, 0L) / 100)).toMap
-          it += 1
-        }
-        edges.sparkSession
-          .createDataFrame(nodes.toSeq.map(nd => (nd, rank(nd))))
-          .toDF("node", "rank_fx")
-      case None =>
-        pageRankDistributed(dedup, iterations, dampingPct, checkpointer)
-    }
-  }
-
-  private def pageRankDistributed(dedup: DataFrame, iterations: Int,
-                                  dampingPct: Int,
-                                  checkpointer: Dedup.Checkpointer)
-      : DataFrame = {
-    // cut: the edge list feeds the degree table and EVERY iteration's
-    // contribution join — uncut, an expensive upstream (a kNN scoring
-    // pass, say) re-executes once per round
-    val e = checkpointer.cut(dedup)
-    val nodes = e.select(col("__s").as("node"))
-      .union(e.select(col("__d").as("node"))).distinct()
-    val deg = e.groupBy("__s").agg(count(lit(1)).as("__deg"))
-    val n = nodes.count()
-    require(n > 0, "pageRank needs at least one edge")
-    val teleport = (100L - dampingPct) * Scale / (100L * n)
-    var ranks = checkpointer.cut(
-      nodes.withColumn("rank_fx", lit(Scale / n)))
-    try {
-      var it = 0
-      while (it < iterations) {
-        val contribs = e
-          .join(ranks.select(col("node").as("__s"), col("rank_fx")), Seq("__s"))
-          .join(deg, Seq("__s"))
-          .select(col("__d").as("node"),
-            expr("rank_fx div __deg").as("__c"))
-          .groupBy("node").agg(sum("__c").as("__in"))
-        val next = checkpointer.cut(
-          nodes.join(contribs, Seq("node"), "left")
-            .select(col("node"),
-              (lit(teleport) +
-                expr(s"$dampingPct * coalesce(__in, 0L) div 100"))
-                .as("rank_fx")))
-        checkpointer.release(ranks)
-        ranks = next
-        it += 1
-      }
-      // the result depends only on the final (eager) ranks cut — release
-      // the edge cut here so Reliable stores don't accrete one edges
-      // subdir per pageRank call (connectedComponents' discipline)
-      checkpointer.release(e)
-      // the final cut is intentionally NOT released — the caller consumes
-      // it (same contract as mergeComponents' last round)
-      ranks
-    } catch {
-      case t: Throwable =>
-        // failure path (lost executor, cancel): drop both live cuts, same
-        // as connectedComponents — don't leave them on the store
-        checkpointer.release(ranks)
-        checkpointer.release(e)
-        throw t
-    }
-  }
+               driverMaxEdges: Int = DriverPath.MaxRows)
+      : DataFrame =
+    rankWalk(edges.select(col(srcCol).as("__s"), col(dstCol).as("__d"))
+      .distinct(), None, iterations, dampingPct, checkpointer, driverMaxEdges)
 
   /** PERSONALIZED PageRank (Haveliwala 2002 / Jeh & Widom 2003): the
     * [[pageRank]] iteration with the teleport mass restricted to a SEED
@@ -193,32 +121,44 @@ object Graphs {
                            seeds: Seq[Long], iterations: Int,
                            dampingPct: Int = 85,
                            checkpointer: Dedup.Checkpointer = Dedup.Checkpointer.Local,
-                           driverMaxEdges: Int = DriverMaxEdges)
-      : DataFrame = {
+                           driverMaxEdges: Int = DriverPath.MaxRows)
+      : DataFrame =
+    rankWalk(edges.select(col(srcCol).cast("long").as("__s"),
+        col(dstCol).cast("long").as("__d")).distinct(),
+      Some(seeds), iterations, dampingPct, checkpointer, driverMaxEdges)
+
+  /** The rank iteration of [[pageRank]] (`seeds` = None: every node is a
+    * seed, so the teleport mass spreads over all `N` nodes) and of
+    * [[personalizedPageRank]] over a deduped `(__s, __d)` edge list.
+    */
+  private def rankWalk(dedup: DataFrame, seeds: Option[Seq[Long]],
+                       iterations: Int, dampingPct: Int,
+                       checkpointer: Dedup.Checkpointer,
+                       driverMaxEdges: Int): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
     require(dampingPct >= 0 && dampingPct <= 100,
       "dampingPct must be in [0, 100]")
-    require(seeds.nonEmpty, "personalizedPageRank needs at least one seed")
-    require(seeds.distinct.size == seeds.size, "seeds must be distinct")
-    val dedup = edges.select(col(srcCol).cast("long").as("__s"),
-      col(dstCol).cast("long").as("__d")).distinct()
-    // FAST PATH (optimization r13): the pageRank discipline — identical
-    // BIGINT trajectory with the teleport mass restricted to seeds, seed
-    // coverage checked as loudly as the distributed path.
-    collectedPairs(dedup, driverMaxEdges, checkpointer) match {
-      case Some(es) =>
+    seeds.foreach { s =>
+      require(s.nonEmpty, "personalizedPageRank needs at least one seed")
+      require(s.distinct.size == s.size, "seeds must be distinct")
+    }
+    // FAST PATH (optimization r13, guide §1.2/§5 — the q253 discipline):
+    // the deduped edge list is catalog-scale here; one guarded collect
+    // replaces O(iterations) rounds of 2 shuffles + an eager lineage cut
+    // each. The driver replays the IDENTICAL all-BIGINT arithmetic
+    // (r div deg, damping·S div 100 — positive longs, so SQL div ≡ Java /)
+    // and the expensive edge upstream runs exactly once, inside the
+    // collect. Seed coverage is checked as loudly as on the distributed
+    // path, which stays the fallback.
+    DriverPath.collect[(Long, Long)](dedup, driverMaxEdges, checkpointer) match {
+      case Right(es) =>
         val nodes = (es.map(_._1) ++ es.map(_._2)).distinct
-        val nodeSet = nodes.toSet
-        val seedCount = seeds.count(nodeSet.contains).toLong
-        require(seedCount == seeds.size,
-          s"personalizedPageRank: ${seeds.size - seedCount} seed(s) are not " +
-            "graph nodes — teleport mass would silently skew")
-        val ns = seeds.size.toLong
-        val seedSet = seeds.toSet
+        val isSeed = seeds.fold[Long => Boolean](_ => true)(_.toSet)
+        val ns = teleportBase(seeds, nodes.length, nodes.count(isSeed))
         val teleport = (100L - dampingPct) * Scale / (100L * ns)
         val deg = es.groupBy(_._1).map { case (s, g) => s -> g.length.toLong }
         var rank = nodes.map(nd =>
-          nd -> (if (seedSet(nd)) Scale / ns else 0L)).toMap
+          nd -> (if (isSeed(nd)) Scale / ns else 0L)).toMap
         var it = 0
         while (it < iterations) {
           val in = scala.collection.mutable.HashMap.empty[Long, Long]
@@ -226,35 +166,50 @@ object Graphs {
             in(d) = in.getOrElse(d, 0L) + rank(s) / deg(s)
           }
           rank = nodes.map(nd =>
-            nd -> ((if (seedSet(nd)) teleport else 0L) +
+            nd -> ((if (isSeed(nd)) teleport else 0L) +
               dampingPct * in.getOrElse(nd, 0L) / 100)).toMap
           it += 1
         }
-        edges.sparkSession
+        dedup.sparkSession
           .createDataFrame(nodes.toSeq.map(nd => (nd, rank(nd))))
           .toDF("node", "rank_fx")
-      case None =>
-        personalizedPageRankDistributed(dedup, seeds, iterations, dampingPct,
-          checkpointer)
+      case Left(_) =>
+        rankWalkDistributed(dedup, seeds, iterations, dampingPct, checkpointer)
     }
   }
 
-  private def personalizedPageRankDistributed(dedup: DataFrame,
-                                              seeds: Seq[Long],
-                                              iterations: Int,
-                                              dampingPct: Int,
-                                              checkpointer: Dedup.Checkpointer)
+  /** The teleport denominator, checked as loudly on both paths: the node
+    * count when every node is a seed, else |seeds| once every seed is
+    * found among the graph's nodes. On the distributed path this is its
+    * one job: a node count unseeded, a seed count seeded. */
+  private def teleportBase(seeds: Option[Seq[Long]], nodeCount: => Long,
+                           seedNodes: => Long): Long = seeds match {
+    case None =>
+      val n = nodeCount
+      require(n > 0, "pageRank needs at least one edge")
+      n
+    case Some(s) =>
+      val found = seedNodes
+      require(found == s.size,
+        s"personalizedPageRank: ${s.size - found} seed(s) are not " +
+          "graph nodes — teleport mass would silently skew")
+      s.size.toLong
+  }
+
+  private def rankWalkDistributed(dedup: DataFrame, seeds: Option[Seq[Long]],
+                                  iterations: Int, dampingPct: Int,
+                                  checkpointer: Dedup.Checkpointer)
       : DataFrame = {
+    // cut: the edge list feeds the degree table and EVERY iteration's
+    // contribution join — uncut, an expensive upstream (a kNN scoring
+    // pass, say) re-executes once per round
     val e = checkpointer.cut(dedup)
     val nodes = e.select(col("__s").as("node"))
       .union(e.select(col("__d").as("node"))).distinct()
     val deg = e.groupBy("__s").agg(count(lit(1)).as("__deg"))
-    val seedCount = nodes.filter(col("node").isin(seeds: _*)).count()
-    require(seedCount == seeds.size,
-      s"personalizedPageRank: ${seeds.size - seedCount} seed(s) are not " +
-        "graph nodes — teleport mass would silently skew")
-    val ns = seeds.size.toLong
-    val isSeed = col("node").isin(seeds: _*)
+    // unseeded, `when(true, …)` folds away in the optimizer
+    val isSeed = seeds.fold(lit(true))(s => col("node").isin(s: _*))
+    val ns = teleportBase(seeds, nodes.count(), nodes.filter(isSeed).count())
     val teleport = (100L - dampingPct) * Scale / (100L * ns)
     var ranks = checkpointer.cut(
       nodes.withColumn("rank_fx",
@@ -278,10 +233,17 @@ object Graphs {
         ranks = next
         it += 1
       }
+      // the result depends only on the final (eager) ranks cut — release
+      // the edge cut here so Reliable stores don't accrete one edges
+      // subdir per call (connectedComponents' discipline)
       checkpointer.release(e)
+      // the final cut is intentionally NOT released — the caller consumes
+      // it (same contract as mergeComponents' last round)
       ranks
     } catch {
       case t: Throwable =>
+        // failure path (lost executor, cancel): drop both live cuts, same
+        // as connectedComponents — don't leave them on the store
         checkpointer.release(ranks)
         checkpointer.release(e)
         throw t
@@ -319,38 +281,22 @@ object Graphs {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int,
                        checkpointer: Dedup.Checkpointer = Dedup.Checkpointer.Local,
-                       driverMaxEdges: Int = DriverMaxEdges)
+                       driverMaxEdges: Int = DriverPath.MaxRows)
       : DataFrame = {
     require(rounds >= 0, "rounds must be >= 0")
     // labels are node ids negated for the tie-break aggregate; a silent
-    // cast("long") of string/UUID ids would null every edge (the
-    // Dedup.requireIntegralIds discipline) — reject loudly instead
-    Seq(srcCol, dstCol).foreach { c =>
-      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-      val dt = edges.schema(edges.schema.fieldIndex(c)).dataType
-      require(dt == ByteType || dt == ShortType || dt == IntegerType ||
-        dt == LongType,
-        s"labelPropagation requires integral id columns; '$c' is $dt — " +
-          "hash non-numeric ids to longs first (e.g. xxhash64(id))")
-    }
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    // cast("long") of string/UUID ids would null every edge — reject loudly
+    Dedup.requireIntegralIds(edges, Seq(srcCol, dstCol), "labelPropagation")
+    val und = undirected(edges, col(srcCol).cast("long"),
+      col(dstCol).cast("long"))
     // FAST PATH (optimization r13): the synchronous rounds are pure
     // integer counting with a pinned tie-break — the driver twin adopts,
     // per node, the most frequent neighbor label with ties to the
     // SMALLEST label ((count desc, label asc) ≡ max(struct(count,
     // -label)), see [[bestLabel]]); rounds replay exactly.
-    collectedPairs(und, driverMaxEdges, checkpointer) match {
-      case Some(es) =>
-        val nbrs = scala.collection.mutable.HashMap
-          .empty[Long, List[Long]]
-        es.foreach { case (a, b) =>
-          nbrs(a) = b :: nbrs.getOrElse(a, Nil)
-          nbrs(b) = a :: nbrs.getOrElse(b, Nil)
-        }
+    DriverPath.collect[(Long, Long)](und, driverMaxEdges, checkpointer) match {
+      case Right(es) =>
+        val nbrs = adjacency(es)
         val nodes = nbrs.keys.toArray
         var labels = nodes.map(nd => nd -> nd).toMap
         var it = 0
@@ -367,13 +313,11 @@ object Graphs {
         return edges.sparkSession
           .createDataFrame(nodes.toSeq.map(nd => (nd, labels(nd))))
           .toDF("node", "community")
-      case None => ()
+      case Left(_) => ()
     }
     // symmetric neighbor list: every undirected edge twice — the join side
     // each round; cut once so an expensive upstream runs once, not per round
-    val nbrs = checkpointer.cut(
-      und.select(col("a").as("node"), col("b").as("nbr"))
-        .unionAll(und.select(col("b").as("node"), col("a").as("nbr"))))
+    val nbrs = checkpointer.cut(symmetric(und))
     var labels = checkpointer.cut(
       nbrs.select(col("node")).distinct()
         .withColumn("community", col("node")))
@@ -431,12 +375,8 @@ object Graphs {
   def modularityByCommunity(edges: DataFrame, srcCol: String, dstCol: String,
                             labels: DataFrame, nodeCol: String,
                             communityCol: String,
-                            driverMaxEdges: Int = DriverMaxEdges): DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+                            driverMaxEdges: Int = DriverPath.MaxRows): DataFrame = {
+    val und = undirected(edges, col(srcCol), col(dstCol))
     val lab = labels.select(col(nodeCol).as("__n"),
       col(communityCol).as("__comm"))
     // FAST PATH (optimization r13): per-community counting + the exact
@@ -444,18 +384,14 @@ object Graphs {
     // runs in BigInt (the DECIMAL(38,0) twin — both floor nonnegative
     // quotients). A label table with DUPLICATE node rows falls back: the
     // distributed joins would multiply edges where a map cannot.
-    (collectedPairs(und, driverMaxEdges), collectedPairs(lab, driverMaxEdges)) match {
-      case (Some(es), Some(labRows))
+    (DriverPath.collect[(Long, Long)](und, driverMaxEdges),
+      DriverPath.collect[(Long, Long)](lab, driverMaxEdges)) match {
+      case (Right(es), Right(labRows))
           if labRows.map(_._1).distinct.length == labRows.length =>
         val comm = labRows.toMap
         val m = es.length.toLong
-        require(m > 0, "modularity needs at least one edge")
-        val unlabeled = es.count { case (a, b) =>
-          !comm.contains(a) || !comm.contains(b) }.toLong
-        require(unlabeled == 0L,
-          s"modularityByCommunity: $unlabeled of $m edges have an endpoint " +
-            s"absent from the label table — label every graph node (labels " +
-            s"may carry extra nodes, never miss one)")
+        requireLabeled(m, es.count { case (a, b) =>
+          !comm.contains(a) || !comm.contains(b) }.toLong)
         val internal = scala.collection.mutable.HashMap.empty[Long, Long]
         val degSum = scala.collection.mutable.HashMap.empty[Long, Long]
         es.foreach { case (a, b) =>
@@ -491,12 +427,7 @@ object Graphs {
       sum(when(col("__ca").isNull || col("__cb").isNull, 1L).otherwise(0L))
         .as("unlabeled")).head()
     val m = head.getLong(0)
-    require(m > 0, "modularity needs at least one edge")
-    val unlabeled = if (head.isNullAt(1)) 0L else head.getLong(1)
-    require(unlabeled == 0L,
-      s"modularityByCommunity: $unlabeled of $m edges have an endpoint " +
-        s"absent from the label table — label every graph node (labels may " +
-        s"carry extra nodes, never miss one)")
+    requireLabeled(m, if (head.isNullAt(1)) 0L else head.getLong(1))
     val internal = tagged.filter(col("__ca") === col("__cb"))
       .groupBy(col("__ca").as("community"))
       .agg(count(lit(1)).as("internal_edges"))
@@ -520,6 +451,16 @@ object Graphs {
             s" div (CAST(4 AS DECIMAL(38,0)) * ${m}L * ${m}L)").cast("long"))
   }
 
+  /** [[modularityByCommunity]]'s input contract, checked alike on both
+    * paths: `m` deduped edges, `unlabeled` of them missing a label. */
+  private def requireLabeled(m: Long, unlabeled: Long): Unit = {
+    require(m > 0, "modularity needs at least one edge")
+    require(unlabeled == 0L,
+      s"modularityByCommunity: $unlabeled of $m edges have an endpoint " +
+        s"absent from the label table — label every graph node (labels may " +
+        s"carry extra nodes, never miss one)")
+  }
+
   /** Per-node triangle participation counts over the UNDIRECTED version of
     * an edge list: `(node, n_triangles)` for nodes in ≥ 1 triangle —
     * clustering structure of the similarity graph (a node's triangles =
@@ -535,38 +476,16 @@ object Graphs {
     * exactly once (its orientation-minimal apex).
     */
   def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String,
-                     driverMaxEdges: Int = DriverMaxEdges)
+                     driverMaxEdges: Int = DriverPath.MaxRows)
       : DataFrame = {
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    // FAST PATH (optimization r13): exact per-node triangle counts need no
-    // tie-breaking argument — any enumeration that finds each triangle
-    // once matches. The driver twin walks each undirected edge (a, b) and
-    // counts common neighbors w > b (the canonical a < b < w triple),
-    // crediting all three corners.
-    collectedPairs(und, driverMaxEdges) match {
-      case Some(es) =>
-        val adj = scala.collection.mutable.HashMap.empty[Long, Set[Long]]
-        es.foreach { case (a, b) =>
-          adj(a) = adj.getOrElse(a, Set.empty) + b
-          adj(b) = adj.getOrElse(b, Set.empty) + a
-        }
-        val cnt = scala.collection.mutable.HashMap.empty[Long, Long]
-        def bump(n: Long): Unit = cnt(n) = cnt.getOrElse(n, 0L) + 1L
-        es.foreach { case (a, b) =>
-          val (small, large) =
-            if (adj(a).size <= adj(b).size) (adj(a), adj(b)) else (adj(b), adj(a))
-          small.foreach { w =>
-            if (w > b && large.contains(w)) { bump(a); bump(b); bump(w) }
-          }
-        }
+    val und = undirected(edges, col(srcCol), col(dstCol))
+    // FAST PATH (optimization r13): see [[trianglesLocal]]
+    DriverPath.collect[(Long, Long)](und, driverMaxEdges) match {
+      case Right(es) =>
         return edges.sparkSession
-          .createDataFrame(cnt.toSeq.map { case (n, c) => (n, c) })
+          .createDataFrame(trianglesLocal(es, adjacency(es)).toSeq)
           .toDF("node", "n_triangles")
-      case None => ()
+      case Left(_) => ()
     }
     val deg = und.select(col("a").as("n"))
       .unionAll(und.select(col("b").as("n")))
@@ -619,15 +538,10 @@ object Graphs {
                       communityCol: String): DataFrame = {
     val lab = labels.select(col(nodeCol).as("node"),
       col(communityCol).as("community"))
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = undirected(edges, col(srcCol), col(dstCol))
     val m = und.count()
     if (m == 0) return lab
-    val sym = und.select(col("a").as("node"), col("b").as("nbr"))
-      .unionAll(und.select(col("b").as("node"), col("a").as("nbr")))
+    val sym = symmetric(und)
     val deg = sym.groupBy("node").agg(count(lit(1)).as("d"))
     // score the INPUT partition first: doubles as the label-coverage guard
     val qOld = modularityByCommunity(edges, srcCol, dstCol, lab, "node",
@@ -696,45 +610,37 @@ object Graphs {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
             rounds: Int,
             checkpointer: Dedup.Checkpointer = Dedup.Checkpointer.Local,
-            driverMaxEdges: Int = DriverMaxEdges)
+            driverMaxEdges: Int = DriverPath.MaxRows)
       : DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 0, "rounds must be >= 0")
-    val und = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = undirected(edges, col(srcCol), col(dstCol))
     // FAST PATH (optimization r13): synchronous peels are pure degree
     // counting — no ties to break. Each round drops nodes with current
     // degree < k, then keeps edges with both endpoints alive; the final
     // induced degrees are the output, exactly the distributed rounds.
-    collectedPairs(und, driverMaxEdges, checkpointer) match {
-      case Some(es0) =>
-        var es = es0
-        var it = 0
-        while (it < rounds) {
+    DriverPath.collect[(Long, Long)](und, driverMaxEdges, checkpointer) match {
+      case Right(es0) =>
+        def degrees(es: Array[(Long, Long)]) = {
           val deg = scala.collection.mutable.HashMap.empty[Long, Long]
           es.foreach { case (a, b) =>
             deg(a) = deg.getOrElse(a, 0L) + 1L
             deg(b) = deg.getOrElse(b, 0L) + 1L
           }
+          deg
+        }
+        var es = es0
+        var it = 0
+        while (it < rounds) {
+          val deg = degrees(es)
           es = es.filter { case (a, b) => deg(a) >= k && deg(b) >= k }
           it += 1
         }
-        val deg = scala.collection.mutable.HashMap.empty[Long, Long]
-        es.foreach { case (a, b) =>
-          deg(a) = deg.getOrElse(a, 0L) + 1L
-          deg(b) = deg.getOrElse(b, 0L) + 1L
-        }
-        return edges.sparkSession
-          .createDataFrame(deg.toSeq.map { case (n, d) => (n, d) })
+        return edges.sparkSession.createDataFrame(degrees(es).toSeq)
           .toDF("node", "deg")
-      case None => ()
+      case Left(_) => ()
     }
-    var sym = checkpointer.cut(
-      und.select(col("a").as("node"), col("b").as("nbr"))
-        .unionAll(und.select(col("b").as("node"), col("a").as("nbr"))))
+    var sym = checkpointer.cut(symmetric(und))
     try {
       var it = 0
       while (it < rounds) {
@@ -787,31 +693,15 @@ object Graphs {
     */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
                             dstCol: String,
-                            driverMaxEdges: Int = DriverMaxEdges): DataFrame = {
-    val dedup = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+                            driverMaxEdges: Int = DriverPath.MaxRows): DataFrame = {
+    val dedup = undirected(edges, col(srcCol), col(dstCol))
     // FAST PATH (optimization r13): degrees + the triangleCounts driver
     // twin + the nonnegative micro snap (SQL div ≡ Java / on nonnegative
     // longs). One collect instead of the localCheckpoint + three passes.
-    collectedPairs(dedup, driverMaxEdges) match {
-      case Some(es) =>
-        val adj = scala.collection.mutable.HashMap.empty[Long, Set[Long]]
-        es.foreach { case (a, b) =>
-          adj(a) = adj.getOrElse(a, Set.empty) + b
-          adj(b) = adj.getOrElse(b, Set.empty) + a
-        }
-        val tri = scala.collection.mutable.HashMap.empty[Long, Long]
-        def bump(n: Long): Unit = tri(n) = tri.getOrElse(n, 0L) + 1L
-        es.foreach { case (a, b) =>
-          val (small, large) =
-            if (adj(a).size <= adj(b).size) (adj(a), adj(b)) else (adj(b), adj(a))
-          small.foreach { w =>
-            if (w > b && large.contains(w)) { bump(a); bump(b); bump(w) }
-          }
-        }
+    DriverPath.collect[(Long, Long)](dedup, driverMaxEdges) match {
+      case Right(es) =>
+        val adj = adjacency(es)
+        val tri = trianglesLocal(es, adj)
         val out = adj.toSeq.map { case (n, ns) =>
           val d = ns.size.toLong
           val t = tri.getOrElse(n, 0L)
@@ -820,7 +710,7 @@ object Graphs {
         }
         return edges.sparkSession.createDataFrame(out)
           .toDF("node", "deg", "n_triangles", "cc_micro")
-      case None => ()
+      case Left(_) => ()
     }
     // cut the upstream edge construction ONCE: und feeds the degree
     // aggregate and all three triangle passes — without the cut an
@@ -862,30 +752,22 @@ object Graphs {
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
              rounds: Int,
              checkpointer: Dedup.Checkpointer = Dedup.Checkpointer.Local,
-             driverMaxEdges: Int = DriverMaxEdges)
+             driverMaxEdges: Int = DriverPath.MaxRows)
       : DataFrame = {
     require(k >= 3, "k-truss needs k >= 3 (k = 2 keeps every edge)")
     require(rounds >= 1, "need at least one peel round")
-    val dedup = edges
-      .select(least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val dedup = undirected(edges, col(srcCol), col(dstCol))
     // FAST PATH (optimization r13): per-round edge support = common
     // neighbors within the surviving edge set — pure counting; edges with
     // zero common neighbors never reach the support bar (k ≥ 3 ⇒
     // k − 2 ≥ 1), exactly like the distributed inner join.
-    collectedPairs(dedup, driverMaxEdges, checkpointer) match {
-      case Some(es0) =>
+    DriverPath.collect[(Long, Long)](dedup, driverMaxEdges, checkpointer) match {
+      case Right(es0) =>
         var es: Array[(Long, Long)] = es0
         var kept: Array[(Long, Long, Long)] = Array.empty
         var r = 0
         while (r < rounds) {
-          val adj = scala.collection.mutable.HashMap.empty[Long, Set[Long]]
-          es.foreach { case (a, b) =>
-            adj(a) = adj.getOrElse(a, Set.empty) + b
-            adj(b) = adj.getOrElse(b, Set.empty) + a
-          }
+          val adj = adjacency(es)
           kept = es.flatMap { case (a, b) =>
             val (small, large) =
               if (adj(a).size <= adj(b).size) (adj(a), adj(b))
@@ -899,7 +781,7 @@ object Graphs {
         }
         return edges.sparkSession.createDataFrame(kept.toSeq)
           .toDF("a", "b", "support")
-      case None => ()
+      case Left(_) => ()
     }
     // `release` takes the exact frame `cut` returned, so the cut and its
     // (a, b) projection are tracked separately across rounds
@@ -952,7 +834,7 @@ object Graphs {
     */
   def linkPrediction(edges: DataFrame, srcCol: String, dstCol: String,
                      maxDegree: Int = 10000,
-                     driverMaxEdges: Int = DriverMaxEdges): DataFrame = {
+                     driverMaxEdges: Int = DriverPath.MaxRows): DataFrame = {
     require(maxDegree >= 2, "maxDegree must be >= 2")
     val adjFrame = edges
       .select(col(srcCol).as("x"), col(dstCol).as("n"))
@@ -964,12 +846,9 @@ object Graphs {
     // wedges, degrees in the output stay the TRUE degrees; sorted
     // ascending neighbors make every pair (u, v) with u < v exactly once,
     // like the posexplode/slice expansion.
-    collectedPairs(adjFrame, driverMaxEdges) match {
-      case Some(rows) =>
-        val adj = scala.collection.mutable.HashMap.empty[Long, Set[Long]]
-        rows.foreach { case (x, n) =>
-          adj(x) = adj.getOrElse(x, Set.empty) + n
-        }
+    DriverPath.collect[(Long, Long)](adjFrame, driverMaxEdges) match {
+      case Right(rows) =>
+        val adj = adjacency(rows) // rows hold both directions already
         // the row guard bounds the adjacency, not its expansion: a center
         // of degree d makes C(d, 2) wedges, so a star within the row
         // budget can still blow up the driver — budget the wedges too
@@ -1002,7 +881,7 @@ object Graphs {
           return edges.sparkSession.createDataFrame(out)
             .toDF("u", "v", "cn", "deg_u", "deg_v", "is_edge", "jaccard_micro")
         }
-      case None => ()
+      case Left(_) => ()
     }
     val adj = adjFrame.localCheckpoint(true)
     val deg = adj.groupBy(col("x").as("node")).agg(count(lit(1)).as("deg"))
@@ -1045,7 +924,7 @@ object Graphs {
     */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
                           dstCol: String,
-                          driverMaxEdges: Int = DriverMaxEdges): DataFrame = {
+                          driverMaxEdges: Int = DriverPath.MaxRows): DataFrame = {
     val und = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .unionByName(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
       .filter(col("a") =!= col("b"))
@@ -1054,8 +933,8 @@ object Graphs {
     // integer sums — BigInt on the driver IS the DECIMAL(38,0) arithmetic
     // (both exact), wrapped back into the identical decimal schema so the
     // callers' BIGINT snap sees the same types.
-    collectedPairs(und, driverMaxEdges) match {
-      case Some(sym) =>
+    DriverPath.collect[(Long, Long)](und, driverMaxEdges) match {
+      case Right(sym) =>
         val deg = sym.groupBy(_._1).map { case (n, g) => n -> g.length.toLong }
         var nEndp = 0L
         var sumX = BigInt(0); var sumXy = BigInt(0); var sumXx = BigInt(0)
@@ -1078,7 +957,7 @@ object Graphs {
           dec(sumXx), dec(rNum), dec(rDen))
         return edges.sparkSession.createDataFrame(
           java.util.Collections.singletonList(row), schema)
-      case None => ()
+      case Left(_) => ()
     }
     val deg = und.groupBy(col("a").as("node"))
       .agg(count(lit(1)).as("deg"))

@@ -29,7 +29,7 @@ object Populate {
   def newKeys(keySource: DataFrame, existing: Option[DataFrame], pk: Seq[String]): DataFrame =
     existing match {
       case Some(done) =>
-        keySource.join(done.select(pk.map(col): _*).distinct(), pk, "left_anti")
+        keySource.join(done.select(pk.map(col): _*), pk, "left_anti")
       case None => keySource
     }
 
@@ -40,21 +40,6 @@ object Populate {
             (make: DataFrame => DataFrame): DataFrame =
     make(newKeys(keySource, existing, pk))
 
-  /** Idempotent append to a parquet table path: anti-join against current
-    * contents (skip_duplicates), then append. Returns rows written.
-    *
-    * Only a genuinely-absent table skips the dedup check; any other read
-    * failure (transient FS error, permissions, corrupt footer) rethrows —
-    * treating those as "empty table" would silently break skip_duplicates.
-    *
-    * Guarantee: idempotent under RETRIES of a single writer (re-running the
-    * same populate never duplicates rows). NOT safe under concurrent writers
-    * to the same table — plain parquet append has no atomic
-    * read-check-append. For multi-worker populates use
-    * [[appendIdempotentExclusive]], which restores the reference's
-    * MySQL-transaction safety (`acquisition.py:547-549`) via a staged
-    * commit under an exclusive lock.
-    */
   /** Read a parquet table that may not exist yet. ONLY a genuinely-absent
     * path maps to None; any other read failure (transient FS error,
     * permissions, corrupt footer) rethrows — treating those as "empty
@@ -80,11 +65,26 @@ object Populate {
     }
   }
 
+  /** Idempotent append to a parquet table path: anti-join against current
+    * contents (skip_duplicates), then append. Returns rows written.
+    *
+    * Only a genuinely-absent table skips the dedup check; any other read
+    * failure (transient FS error, permissions, corrupt footer) rethrows —
+    * treating those as "empty table" would silently break skip_duplicates.
+    *
+    * Guarantee: idempotent under RETRIES of a single writer (re-running the
+    * same populate never duplicates rows). NOT safe under concurrent writers
+    * to the same table — plain parquet append has no atomic
+    * read-check-append. For multi-worker populates use
+    * [[appendIdempotentExclusive]], which restores the reference's
+    * MySQL-transaction safety (`acquisition.py:547-549`) via a staged
+    * commit under an exclusive lock.
+    */
   def appendIdempotent(result: DataFrame, tablePath: String, pk: Seq[String]): Long = {
     val spark = result.sparkSession
     val existing = readIfExists(spark, tablePath)
     val fresh = existing match {
-      case Some(e) => result.join(e.select(pk.map(col): _*).distinct(), pk, "left_anti")
+      case Some(e) => result.join(e.select(pk.map(col): _*), pk, "left_anti")
       case None    => result
     }
     // Single pass, staged: the row count rides the write itself
@@ -378,7 +378,7 @@ object Populate {
     }
     try {
       val fresh = readIfNonEmpty(spark, fs, table) match {
-        case Some(e) => result.join(e.select(pk.map(col): _*).distinct(), pk, "left_anti")
+        case Some(e) => result.join(e.select(pk.map(col): _*), pk, "left_anti")
         case None    => result
       }
       val staging = new Path(table, s".staging-${java.util.UUID.randomUUID()}")

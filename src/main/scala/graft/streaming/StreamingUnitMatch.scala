@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{EventMatch, Populate}
+import graft.operators.{DriverPath, EventMatch, Populate}
 
 /** Streaming/incremental twin of
   * [[graft.operators.EventMatch.propagateGlobalIds]] — the reference's
@@ -35,11 +35,6 @@ import graft.operators.{EventMatch, Populate}
   * train rows on `(block, unit, us)`.
   */
 object StreamingUnitMatch {
-
-  /** Guard for the driver-side assignment collects (the
-    * Dedup.driverMaxEdges discipline): unit catalogs and the
-    * post-aggregation agreement matrix, never event rows. */
-  private val DriverMaxRows: Int = 1 << 20
 
   def drain(spark: SparkSession, sourceDir: String, trainsDir: String,
             assignmentsDir: String, checkpointDir: String,
@@ -80,66 +75,48 @@ object StreamingUnitMatch {
       // assigned last with its unit → global_unit map
       var maxId = doneBlocks.values.maxOption
       var lastAssigned = Option.empty[(Long, Map[Long, Long])]
-      // per-block assignment runs ON THE DRIVER (the propagateGlobalIds
-      // fast path, optimization r12): the assignment table and the
-      // post-aggregation agreement matrix are unit-catalog scale by this
-      // drain's own contract, so only the agreement AGGREGATE stays a
-      // cluster job — the mutual-best windows, inherit join and dense
-      // mint were ~8 shuffle stages per block on catalog-sized tables.
-      // Rules are byte-identical (EventMatch.mutualBestLocal + sorted
-      // dense mint above the running max).
+      // per-block assignment runs ON THE DRIVER through the one-shot's own
+      // EventMatch.assignLocal (the propagateGlobalIds fast path): unit
+      // catalogs and the agreement matrix are catalog scale by this
+      // drain's contract, so only the agreement AGGREGATE is a cluster job
       newBlocks.foreach { blk =>
         val cur = spark.read.parquet(blockDir(blk)).select("unit", "us")
-        val curUnits = EventMatch.unitsLocal(cur, "unit", DriverMaxRows)
-          .getOrElse(throw new IllegalStateException(
-            s"block $blk unit catalog outgrew $DriverMaxRows rows — " +
-              "not catalog-scale; use EventMatch.propagateGlobalIds"))
-        val assignment: Seq[(Long, Long, Long)] = maxId match {
-          case None =>
-            // first assignment = the seed block (identity ids, like
-            // propagateGlobalIds); newBlocks is sorted, so this is the
-            // smallest block the stream has delivered — the landing
-            // contract makes that the true seed
-            curUnits.map(u => (blk, u, u))
-          case Some(topId) =>
-            val prevBlk = blk - 1
-            // the predecessor's map: the block just assigned in this wave,
-            // else one collect of that block's rows alone
-            val prevAssign = lastAssigned.collect {
-              case (b, m) if b == prevBlk => m
-            }.getOrElse(assigned0.fold(Map.empty[Long, Long])(
-              _.filter(col("block") === prevBlk)
-                .select(col("unit").cast("long"),
-                  col("global_unit").cast("long"))
-                .as[(Long, Long)].collect().toMap))
-            require(prevAssign.nonEmpty,
-              s"block $blk drained before its predecessor $prevBlk was " +
-                "assigned — blocks must land in order (the reference's " +
-                "seed-first frontier guard)")
-            val prev = spark.read.parquet(blockDir(prevBlk))
-              .select("unit", "us")
-            val matrix = EventMatch.matrixLocal(
-              EventMatch.agreementMatrix(cur, prev, "unit", "us", deltaUs),
-              DriverMaxRows)
-              .getOrElse(throw new IllegalStateException(
-                s"block $blk agreement matrix outgrew $DriverMaxRows " +
-                  "rows — not catalog-scale; use " +
-                  "EventMatch.propagateGlobalIds"))
-            val inherited = EventMatch.mutualBestLocal(matrix, minPermille)
-              .flatMap { case (u, pu) => prevAssign.get(pu).map(u -> _) }
-              .toMap
-            val freshUnits = curUnits.filterNot(inherited.contains).sorted
-            (inherited ++ freshUnits.zipWithIndex
-              .map { case (u, r) => u -> (topId + 1L + r) })
-              .toSeq.map { case (u, g) => (blk, u, g) }
+        // the first assignment is the seed block (identity ids, like
+        // propagateGlobalIds); newBlocks is sorted, so this is the
+        // smallest block the stream has delivered — the landing contract
+        // makes that the true seed
+        val prev = maxId.map { _ =>
+          val prevBlk = blk - 1
+          // the predecessor's map: the block just assigned in this wave,
+          // else one collect of that block's rows alone
+          val prevAssign = lastAssigned.collect {
+            case (b, m) if b == prevBlk => m
+          }.getOrElse(assigned0.fold(Map.empty[Long, Long])(
+            _.filter(col("block") === prevBlk)
+              .select(col("unit").cast("long"),
+                col("global_unit").cast("long"))
+              .as[(Long, Long)].collect().toMap))
+          require(prevAssign.nonEmpty,
+            s"block $blk drained before its predecessor $prevBlk was " +
+              "assigned — blocks must land in order (the reference's " +
+              "seed-first frontier guard)")
+          spark.read.parquet(blockDir(prevBlk)).select("unit", "us") ->
+            prevAssign
+        }
+        val assign = EventMatch.assignLocal(cur, prev, "unit", "us",
+            deltaUs, minPermille, maxId.getOrElse(Long.MinValue),
+            DriverPath.MaxRows) match {
+          case Right(a) => a
+          case Left(reason) => throw new IllegalStateException(
+            s"block $blk cannot be assigned on the driver ($reason); " +
+              "use EventMatch.propagateGlobalIds")
         }
         Populate.appendIdempotent(
-          spark.createDataFrame(assignment)
+          spark.createDataFrame(assign.toSeq.map { case (u, g) => (blk, u, g) })
             .toDF("block", "unit", "global_unit"),
           assignmentsDir, Seq("block", "unit"))
-        maxId = (maxId.toSeq ++ assignment.map(_._3)).maxOption
-        lastAssigned =
-          Some(blk -> assignment.map { case (_, u, g) => u -> g }.toMap)
+        maxId = (maxId.toSeq ++ assign.values).maxOption
+        lastAssigned = Some(blk -> assign)
       }
     }
   }

@@ -24,19 +24,6 @@ class DrainSkeletonSpec extends AnyFunSuite {
       t <- tokens if text.contains(t)
     } yield (path, t)).sorted
 
-  private def mainSources: Map[String, String] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
-    assert(java.nio.file.Files.isDirectory(root),
-      s"src/main/scala not found at ${root.toAbsolutePath}")
-    val s = java.nio.file.Files.walk(root)
-    try scala.jdk.CollectionConverters.IteratorHasAsScala(s.iterator()).asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => p.toString -> new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8))
-      .toMap
-    finally s.close()
-  }
-
   test("checker flags a planted hand-rolled drain") {
     val planted = Map(
       owner -> "spark.readStream ... Trigger.AvailableNow()",
@@ -48,7 +35,7 @@ class DrainSkeletonSpec extends AnyFunSuite {
   }
 
   test("only StreamOps.drainFiles builds a file-stream drain") {
-    val files = mainSources
+    val files = MainSources.read()
     assert(files.contains(owner), s"$owner not found")
     tokens.foreach(t => assert(files(owner).contains(t), s"$owner lost $t"))
     val bad = offenders(files)
