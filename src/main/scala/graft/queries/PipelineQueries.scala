@@ -1490,7 +1490,7 @@ object PipelineQueries {
       wave()
       docs.filter(col("doc_id") % 2 === 1).write.mode("append").parquet(src)
       wave()
-      val comps = graft.operators.Populate.readReplaced(s, clusters).get
+      val comps = graft.operators.Populate.readIfExists(s, clusters).get
         .withColumnRenamed("id", "doc_id")
       val clustered = docs.select("doc_id").join(comps, Seq("doc_id"), "left")
         .select(col("doc_id"),

@@ -1049,7 +1049,7 @@ object SystemQueries {
           sum(when(col("event_type") =!= "view", 1L).otherwise(0L))
         else count(lit(1))
         val rows = Populate.derive(allUsers,
-            Populate.readReplaced(s, tblA), Seq("user_id")) { nk =>
+            Populate.readIfExists(s, tblA), Seq("user_id")) { nk =>
           ev.join(nk, Seq("user_id"), "left_semi")
             .groupBy("user_id")
             .agg(counted.cast("long").as("n_events"))
@@ -1058,9 +1058,9 @@ object SystemQueries {
         Populate.appendIdempotent(rows, tblA, Seq("user_id"))
       }
       def populateB(): Unit = {
-        val a = Populate.readReplaced(s, tblA).get
+        val a = Populate.readIfExists(s, tblA).get
         val rows = Populate.derive(a.select("user_id"),
-            Populate.readReplaced(s, tblB), Seq("user_id")) { nk =>
+            Populate.readIfExists(s, tblB), Seq("user_id")) { nk =>
           a.join(nk, Seq("user_id"), "left_semi")
             .select(col("user_id"),
               (col("n_events") * 10L + col("version")).as("score"))
@@ -1072,8 +1072,8 @@ object SystemQueries {
         Seq(tblA -> Seq("user_id"), tblB -> Seq("user_id")),
         allUsers.filter(col("user_id") % 7 === 0))
       populateA(2); populateB()
-      Populate.readReplaced(s, tblB).get
-        .join(Populate.readReplaced(s, tblA).get, Seq("user_id"))
+      Populate.readIfExists(s, tblB).get
+        .join(Populate.readIfExists(s, tblA).get, Seq("user_id"))
         .select("user_id", "n_events", "version", "score")
         .orderBy("user_id")
     }),
@@ -1106,7 +1106,7 @@ object SystemQueries {
         // keySrc: (user_id, version) — derive missing users under the
         // version their request carries
         val rows = Populate.derive(keySrc,
-            Populate.readReplaced(s, tblA).map(_.select("user_id")),
+            Populate.readIfExists(s, tblA).map(_.select("user_id")),
             Seq("user_id")) { nk =>
           ev.join(nk, Seq("user_id"))
             .groupBy("user_id", "version")
@@ -1116,9 +1116,9 @@ object SystemQueries {
         Populate.appendIdempotent(rows, tblA, Seq("user_id"))
       }
       def populateB(): Unit = {
-        val a = Populate.readReplaced(s, tblA).get
+        val a = Populate.readIfExists(s, tblA).get
         val rows = Populate.derive(a.select("user_id"),
-            Populate.readReplaced(s, tblB), Seq("user_id")) { nk =>
+            Populate.readIfExists(s, tblB), Seq("user_id")) { nk =>
           a.join(nk, Seq("user_id"), "left_semi")
             .select(col("user_id"),
               (col("n_events") * 10L + col("version")).as("score"))
@@ -1150,8 +1150,8 @@ object SystemQueries {
         .withColumn("version", lit(3L))
         .write.mode("append").parquet(reqs)
       wave()
-      Populate.readReplaced(s, tblB).get
-        .join(Populate.readReplaced(s, tblA).get, Seq("user_id"))
+      Populate.readIfExists(s, tblB).get
+        .join(Populate.readIfExists(s, tblA).get, Seq("user_id"))
         .select("user_id", "n_events", "version", "score")
         .orderBy("user_id")
     }),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Populate
+
 /** Physical layout utilities — the bronze-layer partitioning discipline
   * (SURVEY.md §7.1: parquet partitioned by `(experiment, device, stream,
   * chunk_start)` so every read is a pruned scan; the reference's codec
@@ -127,13 +129,14 @@ object Layout {
     * schema, and hive partition values (encoded in dir names, untouched)
     * are preserved exactly — q123 oracles a round trip through the rewrite.
     *
-    * Publish per leaf is replaceAtomic-style: write to a dot-prefixed
-    * staged sibling (invisible to readers), mark complete, swap via
-    * delete + rename. A crash mid-swap leaves either the old leaf (staged
-    * superseded, deleted on the next run) or a completeness-marked staged
-    * dir with the leaf missing — the next [[compact]] call finishes the
-    * rename before planning (spec-pinned). Re-running after success is a
-    * no-op: compacted leaves no longer exceed their target file count.
+    * Each leaf is published through [[graft.operators.Populate.replaceAtomic]],
+    * whose dot-prefixed staged sibling is invisible to readers listing the
+    * table. A crash mid-swap leaves either the old leaf (staged superseded,
+    * retired on the next run) or a completeness-marked staged dir with the
+    * leaf missing, which the next [[compact]] call publishes through the
+    * reader's recovery step before planning (spec-pinned). Re-running after
+    * success is a no-op: compacted leaves no longer exceed their target
+    * file count.
     */
   def compact(spark: SparkSession, tablePath: String,
               targetBytes: Long = 128L << 20,
@@ -145,47 +148,36 @@ object Layout {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
 
     def isVisible(name: String) = !name.startsWith(".") && !name.startsWith("_")
-    def stagedFor(leaf: Path) =
-      new Path(leaf.getParent, "." + leaf.getName + StagedSuffix)
-
-    // root-level staged dirs live NEXT TO the root (same convention as
-    // Populate.replaceAtomic), so the in-tree walk below never sees them —
-    // recover/retire the root's own leftovers first
-    locally {
-      val staged = stagedFor(root)
-      if (fs.exists(staged)) {
-        val complete = fs.exists(new Path(staged, CompleteMarker))
-        if (!fs.exists(root)) {
-          require(complete, s"compact: $staged has no completeness marker " +
-            s"and $root is gone — inconsistent state, not auto-fixable")
-          if (!fs.rename(staged, root))
-            throw new java.io.IOException(s"failed to recover $root")
-          fs.delete(new Path(root, CompleteMarker), false)
-        } else fs.delete(staged, true)
+    // a staged sibling left by a crashed rewrite: `compact` is the writer,
+    // so beside a live leaf it is a superseded attempt and retired; with
+    // the leaf gone, the reader's recovery step publishes it if complete.
+    // True when the leaf was recovered.
+    def settle(leaf: Path, staged: Path): Boolean =
+      if (fs.exists(leaf)) { fs.delete(staged, true); false }
+      else {
+        require(Populate.recoverStaged(fs, leaf), s"compact: $staged has no " +
+          s"completeness marker and $leaf is gone — inconsistent state, not " +
+          "auto-fixable")
+        true
       }
-    }
 
-    // pass 1 — recover/retire staged leftovers, then list leaf contents
+    // the root's staged sibling lives NEXT TO the root, so the in-tree
+    // walk below never sees it — settle it first
+    val rootStaged = Populate.stagedFor(root)
+    if (fs.exists(rootStaged)) settle(root, rootStaged)
+
+    // pass 1 — settle staged leftovers, then list leaf contents
     val leaves = scala.collection.mutable.Map.empty[Path, Vector[(String, Long)]]
     def walk(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
       val name = st.getPath.getName
-      if (st.isDirectory && name.endsWith(StagedSuffix)) {
-        val leaf = new Path(st.getPath.getParent,
-          name.stripPrefix(".").stripSuffix(StagedSuffix))
-        val complete = fs.exists(new Path(st.getPath, CompleteMarker))
-        if (!fs.exists(leaf)) {
-          // crashed between delete and rename: the staged dir IS the data
-          require(complete, s"compact: ${st.getPath} has no completeness " +
-            s"marker and $leaf is gone — inconsistent state, not auto-fixable")
-          if (!fs.rename(st.getPath, leaf))
-            throw new java.io.IOException(s"failed to recover $leaf")
-          fs.delete(new Path(leaf, CompleteMarker), false)
-          walk(leaf)
-        } else fs.delete(st.getPath, true) // superseded attempt
-      } else if (st.isDirectory && isVisible(name)) walk(st.getPath)
-      else if (st.isFile && isVisible(name))
-        leaves.updateWith(st.getPath.getParent)(prev =>
-          Some(prev.getOrElse(Vector.empty) :+ (name, st.getLen)))
+      Populate.stagedTarget(st.getPath).filter(_ => st.isDirectory) match {
+        case Some(leaf) => if (settle(leaf, st.getPath)) walk(leaf)
+        case None if st.isDirectory && isVisible(name) => walk(st.getPath)
+        case None if st.isFile && isVisible(name) =>
+          leaves.updateWith(st.getPath.getParent)(prev =>
+            Some(prev.getOrElse(Vector.empty) :+ (name, st.getLen)))
+        case None => ()
+      }
     }
     walk(root)
 
@@ -203,15 +195,8 @@ object Layout {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val stats = work.map { case (leaf, before, n, bytes) => Future {
-        val staged = stagedFor(leaf)
-        fs.delete(staged, true)
-        spark.read.parquet(leaf.toString).coalesce(n)
-          .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-        fs.create(new Path(staged, CompleteMarker), true).close()
-        fs.delete(leaf, true)
-        if (!fs.rename(staged, leaf))
-          throw new java.io.IOException(s"failed to publish $staged over $leaf")
-        fs.delete(new Path(leaf, CompleteMarker), false)
+        Populate.replaceAtomic(
+          spark.read.parquet(leaf.toString).coalesce(n), leaf.toString)
         val after = fs.listStatus(leaf)
           .count(st => st.isFile && isVisible(st.getPath.getName))
         CompactStat(leaf.toString, before, after, bytes)
@@ -219,9 +204,6 @@ object Layout {
       stats.map(Await.result(_, Duration.Inf))
     } finally pool.shutdown()
   }
-
-  private val StagedSuffix = ".__compact_staged"
-  private val CompleteMarker = "_GRAFT_STAGED_COMPLETE"
 
   /** Pruned read of one time range [start, end): lexicographic
     * (chunk_date, chunk_hour) bounds as partition filters — only the hourly

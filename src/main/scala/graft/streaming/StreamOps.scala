@@ -64,22 +64,19 @@ object StreamOps {
   }
 
   /** The newest row per `key` of an append-only keyed state table at
-    * `stateDir`: the argmax of `struct(stateCols…)`, so `stateCols.head`
-    * (a `last_us`-style frontier) decides and replayed or superseded
-    * appends are harmless. Output `(key, stateCols…)`; `None` before the
-    * first wave wrote state. Reads every past wave's rows — compaction is
-    * the caller's (`Populate.compactLatest`).
+    * `stateDir`, read through [[Populate.readIfExists]] (so a state table
+    * whose compaction crashed mid-swap reads its staged snapshot) and
+    * reduced by [[Populate.latestPerKey]]: the argmax of
+    * `struct(stateCols…)`, so `stateCols.head` (a `last_us`-style
+    * frontier) decides and replayed or superseded appends are harmless.
+    * Output `(key, stateCols…)`; `None` before the first wave wrote state.
+    * Reads every past wave's rows — compaction is the caller's
+    * ([[Populate.compactLatest]], which keeps the same newest row).
     */
   def readLatest(spark: SparkSession, stateDir: String,
                  stateCols: Seq[String]): Option[DataFrame] =
-    Populate.readIfExists(spark, stateDir).map(latestPerKey(_, stateCols))
-
-  /** [[readLatest]]'s argmax over rows already in hand. */
-  private[streaming] def latestPerKey(rows: DataFrame,
-                                      stateCols: Seq[String]): DataFrame =
-    rows.groupBy("key")
-      .agg(max(struct(stateCols.map(col): _*)).as("__s"))
-      .select(col("key") +: stateCols.map(c => col(s"__s.$c").as(c)): _*)
+    Populate.readIfExists(spark, stateDir)
+      .map(Populate.latestPerKey(_, Seq("key"), stateCols))
 
   /** Per-(key, 1-hour chunk) sample counts + bounds — the streaming Chunk
     * catalog (reference `Chunk` table). With a watermark, late rows beyond

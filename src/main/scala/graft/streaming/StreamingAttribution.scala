@@ -74,7 +74,7 @@ object StreamingAttribution {
       // so a touch with us < frontier − windowUs can never fall inside
       // any new conversion's lookback frame — the wave's window pass is
       // O(batch ∪ in-window buffer) regardless of all-time touch volume
-      val buffered = Populate.readReplaced(spark, touchesDir)
+      val buffered = Populate.readIfExists(spark, touchesDir)
         .map { b =>
           val sel = b.select("key", "us", "tie", "ty")
           frontier match {

@@ -99,7 +99,7 @@ object StreamingDedup {
         Populate.appendIdempotent(cached, indexDir, Seq(idCol, "band"))
         clustersDir.foreach { dir =>
           val newPairs = cands.select("id_a", "id_b")
-          val existing = Populate.readReplaced(spark, dir)
+          val existing = Populate.readIfExists(spark, dir)
           val merged = existing match {
             case Some(e) => Dedup.mergeComponents(e, newPairs, "id_a", "id_b")
             case None => Dedup.connectedComponents(newPairs, "id_a", "id_b")

@@ -19,8 +19,10 @@ import graft.operators.{Checks, Populate}
   * At 100 TB: per-wave work is one aggregation of the batch (map-side
   * partials; the append carries distinct cells, not rows); the report
   * pass scales with the cell table (distinct (key, value) pairs on the
-  * integer grid), not the sample volume. Compact the cell store with
-  * `Populate.compactLatest` when file counts grow.
+  * integer grid), not the sample volume. Compact the cell store's small
+  * files with [[graft.sources.Layout.compact]] when file counts grow:
+  * every row is a distinct `(src_file, keys…, value)` cell, so there is
+  * no superseded row for `Populate.compactLatest` to drop.
   */
 object StreamingKsDrift {
 

@@ -80,7 +80,7 @@ object StreamingResample {
             .select("key", "grid_ts", "value_micro")
       }
       Populate.appendIdempotent(out, gridDir, Seq("key", "grid_ts"))
-      val newState = StreamOps.latestPerKey(kept, StateCols)
+      val newState = Populate.latestPerKey(kept, Seq("key"), StateCols)
       Populate.appendIdempotent(newState, stateDir, Seq("key", "t"))
     }
   }

@@ -68,14 +68,14 @@ class CompactSpec extends SparkSpec {
       spark.sessionState.newHadoopConf())
     // simulate the crash window: staged dir complete, leaf deleted
     val leaf = new Path(root, "p=p1")
-    val staged = new Path(root, ".p=p1.__compact_staged")
+    val staged = new Path(root, ".p=p1.__staged")
     spark.read.parquet(leaf.toString).coalesce(1)
       .write.parquet(staged.toString)
     fs.create(new Path(staged, "_GRAFT_STAGED_COMPLETE"), true).close()
     fs.delete(leaf, true)
     // ...and a half-written (markerless) staged dir beside a LIVE leaf,
     // which must be retired, not published
-    val stale = new Path(root, ".p=p2.__compact_staged")
+    val stale = new Path(root, ".p=p2.__staged")
     fs.mkdirs(stale)
     val stats = Layout.compact(spark, root, targetBytes = 1L << 30)
     assert(!fs.exists(staged) && !fs.exists(stale))
@@ -90,7 +90,7 @@ class CompactSpec extends SparkSpec {
     fixture(root)
     val fs = new Path(root).getFileSystem(
       spark.sessionState.newHadoopConf())
-    val staged = new Path(root, ".p=p0.__compact_staged")
+    val staged = new Path(root, ".p=p0.__staged")
     fs.mkdirs(staged)
     fs.delete(new Path(root, "p=p0"), true)
     val e = intercept[IllegalArgumentException] {

@@ -15,6 +15,26 @@ import graft.operators.Populate
 class ConcurrentAppendSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Jobs `body` starts, counted once the asynchronous listener bus has
+    * settled. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      var prev = -1
+      var cur = jobs.get()
+      while (prev != cur) { Thread.sleep(200); prev = cur; cur = jobs.get() }
+      (out, cur)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("two concurrent writers with overlapping keys never duplicate PKs") {
     val path = java.nio.file.Files.createTempDirectory("conc_append").toString + "/t"
     // three rounds of two writers whose key ranges overlap by half — every
@@ -100,24 +120,41 @@ class ConcurrentAppendSpec extends SparkSpec {
     // alone must NOT count (mapreduce.fileoutputcommitter.marksuccessfuljobs
     // is deployment-controlled): a marker-less staged dir means the crash
     // predates the table delete, so the live table is the truth.
-    val staged = java.nio.file.Paths.get(root, "t.__staged")
+    val staged = java.nio.file.Paths.get(root, ".t.__staged")
     java.nio.file.Files.createDirectories(staged)
     java.nio.file.Files.write(staged.resolve("part-junk.parquet"), Array[Byte](1))
     java.nio.file.Files.write(staged.resolve("_SUCCESS"), Array.empty[Byte])
-    assert(Populate.readReplaced(spark, path).get
+    assert(Populate.readIfExists(spark, path).get
       .collect().map(_.getString(1)).toSeq == Seq("v2"))
 
     // crash window 2: complete staged copy (replaceAtomic's own marker
     // present), table deleted (crash between delete and rename) —
-    // readReplaced publishes the staged snapshot
+    // readIfExists publishes the staged snapshot
     Seq((1L, "v3")).toDF("id", "v").write.mode("overwrite")
       .parquet(staged.toString)
     java.nio.file.Files.write(staged.resolve("_GRAFT_STAGED_COMPLETE"),
       Array.empty[Byte])
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
-    assert(Populate.readReplaced(spark, path).get
+    assert(Populate.readIfExists(spark, path).get
       .collect().map(_.getString(1)).toSeq == Seq("v3"))
     // and the recovery is durable: the table is back in place
     assert(spark.read.parquet(path).collect().map(_.getString(1)).toSeq == Seq("v3"))
+  }
+
+  test("an exclusive append into an existing table launches no more jobs than a plain one") {
+    val root = java.nio.file.Files.createTempDirectory("conc_append_jobs").toString
+    val (plain, exclusive) = (root + "/plain", root + "/exclusive")
+    def rows(from: Long, to: Long, src: String) =
+      spark.range(from, to).select(col("id").as("pk"), lit(src).as("src"))
+    Seq(plain, exclusive).foreach(t =>
+      Populate.appendIdempotent(rows(0, 50, "old"), t, Seq("pk")))
+    val batch = rows(25, 100, "new")
+    val (nPlain, plainJobs) = jobsOf(
+      Populate.appendIdempotent(batch, plain, Seq("pk")))
+    val (nExclusive, exclusiveJobs) = jobsOf(
+      Populate.appendIdempotentExclusive(batch, exclusive, Seq("pk")))
+    assert(nPlain == 50 && nExclusive == 50)
+    assert(exclusiveJobs <= plainJobs, s"the exclusive append launched " +
+      s"$exclusiveJobs jobs, the plain one $plainJobs")
   }
 }

@@ -24,21 +24,21 @@ class PopulateInvalidateSpec extends SparkSpec {
   private def populateBoth(parent: String, child: String,
                            version: Int): Unit = {
     val keySrc = spark.range(0, 40).select(col("id").as("k"))
-    val p = Populate.derive(keySrc, Populate.readReplaced(spark, parent),
+    val p = Populate.derive(keySrc, Populate.readIfExists(spark, parent),
       Seq("k"))(nk => nk.select(col("k"),
         (col("k") * 10L + version).as("v")))
     Populate.appendIdempotent(p, parent, Seq("k"))
-    val pNow = Populate.readReplaced(spark, parent).get
+    val pNow = Populate.readIfExists(spark, parent).get
     val c = Populate.derive(pNow.select("k"),
-      Populate.readReplaced(spark, child), Seq("k"))(nk =>
+      Populate.readIfExists(spark, child), Seq("k"))(nk =>
       pNow.join(nk, Seq("k"), "left_semi")
         .select(col("k"), (col("v") + 1L).as("w")))
     Populate.appendIdempotent(c, child, Seq("k"))
   }
 
   private def readBoth(parent: String, child: String): Map[Long, (Long, Long)] =
-    Populate.readReplaced(spark, parent).get
-      .join(Populate.readReplaced(spark, child).get, Seq("k"))
+    Populate.readIfExists(spark, parent).get
+      .join(Populate.readIfExists(spark, child).get, Seq("k"))
       .select("k", "v", "w").as[(Long, Long, Long)]
       .collect().map(r => r._1 -> ((r._2, r._3))).toMap
 
@@ -53,7 +53,7 @@ class PopulateInvalidateSpec extends SparkSpec {
     // downstream-first order, 8 keys each
     assert(removed === Seq(child -> 8L, parent -> 8L))
     // the invalidated keys are gone from BOTH tables, others intact
-    val afterP = Populate.readReplaced(spark, parent).get
+    val afterP = Populate.readIfExists(spark, parent).get
       .select("k").as[Long].collect().toSet
     assert(afterP === (0L until 40L).filterNot(_ % 5 == 0).toSet)
     populateBoth(parent, child, version = 2)
@@ -127,7 +127,7 @@ class PopulateInvalidateSpec extends SparkSpec {
     val removed = Populate.invalidate(spark, Seq(t -> Seq("k1", "k2")),
       Seq((1L, "a")).toDF("k1", "k2"))
     assert(removed === Seq(t -> 1L))
-    assert(Populate.readReplaced(spark, t).get.select("v").as[Long]
+    assert(Populate.readIfExists(spark, t).get.select("v").as[Long]
       .collect().toSet === Set(11L, 12L))
   }
 }

@@ -27,12 +27,12 @@ class StreamingRecurationSpec extends SparkSpec {
     // bootstrap: v(k) = k*10 + rule, child w = v + 1
     def populate(keys: DataFrame): Unit = {
       val p = Populate.derive(keys,
-        Populate.readReplaced(spark, parent).map(_.select("k")), Seq("k"))(
+        Populate.readIfExists(spark, parent).map(_.select("k")), Seq("k"))(
         nk => nk.select(col("k"), (col("k") * 10L + col("rule")).as("v")))
       Populate.appendIdempotent(p, parent, Seq("k"))
-      val pNow = Populate.readReplaced(spark, parent).get
+      val pNow = Populate.readIfExists(spark, parent).get
       val c = Populate.derive(pNow.select("k"),
-        Populate.readReplaced(spark, child), Seq("k"))(nk =>
+        Populate.readIfExists(spark, child), Seq("k"))(nk =>
         pNow.join(nk, Seq("k"), "left_semi")
           .select(col("k"), (col("v") + 1L).as("w")))
       Populate.appendIdempotent(c, child, Seq("k"))
@@ -52,8 +52,8 @@ class StreamingRecurationSpec extends SparkSpec {
       .filter(col("k") % 4 === 0).write.mode("append").parquet(reqs)
     wave(ckpt)
     def state(): Map[Long, (Long, Long)] =
-      Populate.readReplaced(spark, parent).get
-        .join(Populate.readReplaced(spark, child).get, Seq("k"))
+      Populate.readIfExists(spark, parent).get
+        .join(Populate.readIfExists(spark, child).get, Seq("k"))
         .select("k", "v", "w").as[(Long, Long, Long)]
         .collect().map(r => r._1 -> ((r._2, r._3))).toMap
     val got = state()
