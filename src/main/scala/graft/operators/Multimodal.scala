@@ -458,10 +458,12 @@ object Multimodal {
   }
 
   /** REAL video frame sampling for MJPEG-AVI blob columns: one output row
-    * per sampled frame with the frame's actual JPEG bytes — the
-    * blob-column twin of [[graft.sources.AviMjpeg.videoFrames]] (which
-    * streams from files) and the real version of [[sampleFrames]] (which
-    * byte-slices opaque blobs). Non-AVI / corrupt blobs yield zero frames.
+    * per sampled frame with the frame's actual JPEG bytes, through the same
+    * RIFF walk as the `graft-avi` file scan
+    * ([[graft.sources.AviMjpeg.parseBytes]]). Files belong to that scan;
+    * this serves AVIs already held in a binary column, and is the real
+    * version of [[sampleFrames]] (which byte-slices opaque blobs).
+    * Non-AVI / corrupt blobs yield zero frames.
     * Memory per task is bounded by `maxFrames` decoded chunks, and skipped
     * frames cost 8 header bytes in the walker.
     */

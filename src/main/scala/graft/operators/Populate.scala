@@ -35,12 +35,16 @@ import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, struct}
 object Populate {
 
   /** Keys still to do: declared upstream keys minus already-materialized keys
-    * (J7 anti join — THE core primitive, SURVEY.md §2.3).
+    * (J7 anti join — THE core primitive, SURVEY.md §2.3), in `keySource`'s
+    * column order. A USING join puts the pk columns first; projecting back
+    * keeps every append's part files in one column order, whether or not
+    * the table existed (Spark infers a table's schema from one footer).
     */
   def newKeys(keySource: DataFrame, existing: Option[DataFrame], pk: Seq[String]): DataFrame =
     existing match {
       case Some(done) =>
         keySource.join(done.select(pk.map(col): _*), pk, "left_anti")
+          .select(keySource.columns.map(c => col("`" + c.replace("`", "``") + "`")): _*)
       case None => keySource
     }
 

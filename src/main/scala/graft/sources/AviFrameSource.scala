@@ -18,26 +18,28 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 for MJPEG-AVI frame extraction — `format("graft-avi")`.
   *
-  * The idiomatic-Spark face of [[AviMjpeg.videoFrames]]: a real scan
-  * Catalyst can reason about, with the pruning that matters for video:
+  * The one AVI file reader: [[AviMjpeg.videoFrames]] is a call into this
+  * source. A real scan Catalyst can reason about, with the pruning that
+  * matters for video:
   *
   *  - **column pruning reaches the payload**: a query that does not select
   *    `frame_jpeg` (fps audits, frame counts, drop detection — the CameraQC
   *    family) walks ONLY 8-byte RIFF chunk headers; no frame byte is ever
   *    read, let alone decoded. `.explain` shows the pruned read schema.
-  *  - one file per partition, opened as a Hadoop FS stream in its task —
-  *    a container is never materialized whole; memory is bounded by one
-  *    frame (or by nothing at all when the payload column is pruned).
-  *  - `everyNth` / `maxFrames` options bound output exactly like
-  *    [[AviMjpeg.videoFrames]].
+  *  - files pack into byte-budgeted tasks ([[Packing]]); each is opened as
+  *    a Hadoop FS stream in its task, one at a time — a container is never
+  *    materialized whole; memory is bounded by one frame (or by nothing at
+  *    all when the payload column is pruned).
+  *  - `everyNth` / `maxFrames` options bound the output per file.
   *  - **`frame_index` upper bounds push into the walk**: a
   *    `frame_index <= N` predicate becomes the walker's stop condition, so
   *    a head slice of an hour-long recording costs N+1 chunk headers of IO
   *    instead of a full-container walk. `.explain` shows the pushed bound.
   *
   * Options: `everyNth` (sample stride, default 1), `maxFrames` (per-file
-  * cap, default 64). Multi-path loads and recursive directory expansion
-  * follow the `graft-clock` conventions.
+  * cap, default 64), `maxPartitionBytes`. Multi-path loads, recursive
+  * directory expansion and the failure on a path that matches nothing are
+  * `graft-clock`'s ([[Packing.listFiles]]).
   *
   * Reference analogue: `aeon/dj_pipeline/utils/video.py:29-62`
   * (`retrieve_video_frames`) — the slice-of-frames read, as a declarative
@@ -57,17 +59,10 @@ private[sources] final case class AviFrameOptions(
     maxPartitionBytes: Long = Packing.DefaultMaxPartitionBytes)
 
 private[sources] object AviFrameOptions {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
   def apply(properties: JMap[String, String]): AviFrameOptions = {
     def opt(k: String): Option[String] =
       Option(properties.get(k)).filter(_.nonEmpty)
-    val paths = opt("paths")
-      .map(js => mapper.readValue(js, classOf[Array[String]]).toSeq)
-      .getOrElse(opt("path").toSeq)
-    require(paths.nonEmpty,
-      "graft-avi requires at least one path: " +
-        "spark.read.format(\"graft-avi\").load(<glob>, ...)")
+    val paths = Packing.loadPaths(properties, "graft-avi")
     val everyNth = opt("everyNth").map(_.toInt).getOrElse(1)
     val maxFrames = opt("maxFrames").map(_.toInt).getOrElse(64)
     require(everyNth > 0 && maxFrames > 0,
@@ -142,22 +137,14 @@ private[sources] class AviScan(opts: AviFrameOptions, required: StructType,
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // metadata-only listing (same conventions as graft-clock): recursive
-    // directory expansion, all byte IO in executors
-    val spark = SparkSession.active
-    val fs0 = new org.apache.hadoop.fs.Path(opts.paths.head)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def expand(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (st.isDirectory) fs0.listStatus(st.getPath).toSeq.flatMap(expand) else Seq(st)
-    val files = opts.paths.toArray.flatMap { g =>
-      val p = new org.apache.hadoop.fs.Path(g)
-      Option(fs0.globStatus(p)).getOrElse(Array.empty).toSeq
-    }.flatMap(expand)
-      .filter(_.isFile)
+    // metadata-only listing (the graft-clock rule, [[Packing.listFiles]]);
+    // all byte IO in executors
+    val files = Packing.listFiles(opts.paths,
+      SparkSession.active.sparkContext.hadoopConfiguration)
       .map(st => (st.getPath.toString, st.getLen))
     // small files pack into byte-budgeted partitions (see [[Packing]]);
     // each file is still walked (and pruned) individually
-    Packing.pack(files.toSeq, opts.maxPartitionBytes)
+    Packing.pack(files, opts.maxPartitionBytes)
       .map(paths => AviFilesPartition(paths): InputPartition)
       .toArray
   }

@@ -2,9 +2,7 @@ package graft.sources
 
 import java.io.{DataInputStream, EOFException, InputStream}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
 /** MJPEG-AVI container reader (S7 — the REAL video pixel path).
@@ -20,8 +18,9 @@ import org.apache.spark.sql.types._
   *  - the walker is STREAMING: it reads chunk headers (8 bytes each) and
   *    `skip()`s unsampled frame payloads, so sampling every Nth frame costs
   *    8 bytes per skipped frame, not the payload;
-  *  - [[videoFrames]] opens each file as a Hadoop FS stream inside a task —
-  *    a file is never materialized whole, memory is bounded by one frame;
+  *  - [[videoFrames]] (the `graft-avi` scan) opens each file as a Hadoop
+  *    FS stream inside a task — a file is never materialized whole, memory
+  *    is bounded by one frame;
   *  - per-file frame caps bound task output exactly like
   *    [[graft.operators.Multimodal.sampleFrames]].
   *
@@ -77,11 +76,15 @@ object AviMjpeg {
     }
   }
 
-  /** Walk one RIFF segment, collecting `avih` metadata and every
-    * `everyNth`-th video chunk (`##dc`/`##db`) up to `maxFrames`. LISTs
-    * (`hdrl`, `movi`, nested `rec `) are entered, not skipped, so the walk is
-    * a single linear pass; everything else (`idx1`, `strh`, `JUNK`, audio
-    * `##wb`) is skipped by size. Returns None when the stream is not an AVI.
+  /** Walk one AVI to the end (or to `maxFrames`), collecting `avih`
+    * metadata and every `everyNth`-th video chunk — the eager form of
+    * [[frameIterator]], on the same walk. Closes `raw`. Returns None when
+    * the stream is not an AVI.
+    *
+    * `totalFrames` is exact when the walk reaches the end of the stream;
+    * an early stop (frame cap hit) trusts the header's declared count. A
+    * container that turns corrupt mid-walk yields the frames before the
+    * corruption, as in [[frameIterator]].
     *
     * `withPayload = false` records sampled frame INDICES but skips every
     * payload (jpeg = null): the whole walk touches only 8-byte chunk
@@ -89,82 +92,24 @@ object AviMjpeg {
     */
   def parse(raw: InputStream, everyNth: Int = 1,
             maxFrames: Int = Int.MaxValue,
-            withPayload: Boolean = true): Option[(AviInfo, Vector[AviFrame])] = {
-    require(everyNth > 0 && maxFrames > 0)
-    val in = new DataInputStream(raw)
-    try {
-      if (readFourCC(in) != "RIFF") return None
-      readU32LE(in) // RIFF size — EOF terminates the walk instead
-      if (readFourCC(in) != "AVI ") return None
+            withPayload: Boolean = true): Option[(AviInfo, Vector[AviFrame])] =
+    try walk(raw, everyNth, maxFrames, withPayload, Long.MaxValue).map { w =>
+      val frames = w.toVector
+      (w.info.copy(totalFrames =
+        if (w.reachedEof || w.headerFrames == 0) w.videoChunks else w.headerFrames),
+        frames)
+    } finally raw.close()
 
-      var width = 0; var height = 0
-      var usPerFrame = 0L; var headerFrames = 0L
-      var videoChunks = 0L
-      val frames = Vector.newBuilder[AviFrame]
-      var collected = 0
-      var walkedToEof = false
-
-      try {
-        while (collected < maxFrames || videoChunks == 0) {
-          val id = readFourCC(in)
-          val size = readU32LE(in)
-          val padded = size + (size & 1) // chunks are word-aligned
-          id match {
-            case "LIST" =>
-              readFourCC(in) // hdrl | movi | rec  | … — descend either way
-            case "RIFF" =>
-              // OpenDML continuation segment (frames past the 1 GiB AVI 1.0
-              // boundary land in RIFF('AVIX') segments): consume the form
-              // type and keep walking — the frame stream continues inside
-              readFourCC(in)
-            case "avih" =>
-              // dwMicroSecPerFrame, 3 skipped u32s, dwTotalFrames, 2 skipped,
-              // 1 skipped, dwWidth, dwHeight (avih is ≥ 40 bytes by spec)
-              usPerFrame = readU32LE(in)
-              skipFully(in, 12)
-              headerFrames = readU32LE(in)
-              skipFully(in, 12)
-              width = readU32LE(in).toInt
-              height = readU32LE(in).toInt
-              skipFully(in, padded - 40)
-            case _ if id(0).isDigit && id(1).isDigit &&
-                      id(2) == 'd' && (id(3) == 'c' || id(3) == 'b') =>
-              val take = videoChunks % everyNth == 0 && collected < maxFrames
-              if (take && size > 0 && size <= MaxFrameBytes) {
-                if (withPayload) {
-                  val buf = new Array[Byte](size.toInt)
-                  in.readFully(buf)
-                  frames += AviFrame(videoChunks, buf)
-                  skipFully(in, padded - size)
-                } else {
-                  frames += AviFrame(videoChunks, null)
-                  skipFully(in, padded)
-                }
-                collected += 1
-              } else skipFully(in, padded)
-              videoChunks += 1
-            case _ =>
-              skipFully(in, padded)
-          }
-        }
-      } catch { case _: EOFException => walkedToEof = true } // end of segment
-
-      // A full walk counts frames exactly; an early stop (frame cap hit)
-      // trusts the header's declared count instead.
-      val totalFrames =
-        if (walkedToEof || headerFrames == 0) videoChunks else headerFrames
-      Some((AviInfo(width, height, usPerFrame, totalFrames), frames.result()))
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally in.close()
-  }
-
-  /** The streaming walker behind [[frameIterator]]: pull-based — each
-    * `hasNext` advances the RIFF walk to the next sampled video chunk, so
-    * live memory is ONE frame no matter what `maxFrames` is. Header fields
-    * populate as `hdrl` is walked (before the first frame in a conformant
-    * container). A stream that turns corrupt mid-walk ends the iteration at
-    * the frames already yielded (per-file P5 discipline: a bad tail means
-    * fewer rows, not a task kill).
+  /** The one RIFF walk behind [[parse]] and [[frameIterator]]: pull-based —
+    * each `hasNext` advances the walk to the next sampled video chunk, so
+    * live memory is ONE frame no matter what `maxFrames` is. LISTs (`hdrl`,
+    * `movi`, nested `rec `) and OpenDML `RIFF('AVIX')` continuation segments
+    * are entered, not skipped, so the walk is a single linear pass;
+    * everything else (`idx1`, `strh`, `JUNK`, audio `##wb`) is skipped by
+    * size. Header fields populate as `hdrl` is walked (before the first
+    * frame in a conformant container). A stream that turns corrupt mid-walk
+    * ends the iteration at the frames already yielded (per-file P5
+    * discipline: a bad tail means fewer rows, not a task kill).
     */
   private final class FrameWalk(in: DataInputStream, everyNth: Int,
                                 maxFrames: Int, withPayload: Boolean,
@@ -172,10 +117,15 @@ object AviMjpeg {
       extends Iterator[AviFrame] {
     var width = 0; var height = 0
     var usPerFrame = 0L; var headerFrames = 0L
-    private var videoChunks = 0L
+    /** Video chunks walked so far, sampled or not. */
+    var videoChunks = 0L
+    /** True once the walk hit the end of the stream (not a cap or bound). */
+    var reachedEof = false
     private var collected = 0
     private var done = false
     private var pending: AviFrame = null
+
+    def info: AviInfo = AviInfo(width, height, usPerFrame, headerFrames)
 
     private def step(): Unit =
       try {
@@ -189,6 +139,8 @@ object AviMjpeg {
               case "LIST" | "RIFF" =>
                 readFourCC(in) // descend into hdrl/movi/rec /AVIX segments
               case "avih" =>
+                // dwMicroSecPerFrame, 3 skipped u32s, dwTotalFrames, 2 skipped,
+                // 1 skipped, dwWidth, dwHeight (avih is ≥ 40 bytes by spec)
                 usPerFrame = readU32LE(in)
                 skipFully(in, 12)
                 headerFrames = readU32LE(in)
@@ -217,7 +169,10 @@ object AviMjpeg {
             }
           }
         }
-      } catch { case scala.util.control.NonFatal(_) => done = true }
+      } catch {
+        case _: EOFException => reachedEof = true; done = true
+        case scala.util.control.NonFatal(_) => done = true
+      }
 
     override def hasNext: Boolean = {
       if (pending == null && !done) step()
@@ -229,13 +184,13 @@ object AviMjpeg {
     }
   }
 
-  /** Lazy twin of [[parse]] — header info plus a ONE-PASS iterator of
+  /** Lazy form of [[parse]] — header info plus a ONE-PASS iterator of
     * sampled frames, with live memory bounded by a single frame (the eager
     * [[parse]] buffers up to `maxFrames` × frame size; this never does).
     * The CALLER owns `raw`: keep it open until the iterator is exhausted,
     * then close it. `info.totalFrames` here is the header's DECLARED count
     * (exact counting needs a full walk — that is [[parse]]'s job); the
-    * row-producing consumers ([[videoFrames]], `graft-avi`) never read it.
+    * row-producing consumer (`graft-avi`) never reads it.
     * Returns None when the stream is not an AVI.
     *
     * `maxIndex` is the pushed-down upper bound on `frame_index` (from a
@@ -247,17 +202,23 @@ object AviMjpeg {
   def frameIterator(raw: InputStream, everyNth: Int = 1,
                     maxFrames: Int = Int.MaxValue,
                     withPayload: Boolean = true,
-                    maxIndex: Long = Long.MaxValue): Option[(AviInfo, Iterator[AviFrame])] = {
+                    maxIndex: Long = Long.MaxValue): Option[(AviInfo, Iterator[AviFrame])] =
+    walk(raw, everyNth, maxFrames, withPayload, maxIndex).map { w =>
+      w.hasNext // prime through hdrl so the info fields are populated
+      (w.info, w)
+    }
+
+  /** Check the RIFF/AVI magic and start a [[FrameWalk]] after it; None when
+    * the stream is not an AVI. */
+  private def walk(raw: InputStream, everyNth: Int, maxFrames: Int,
+                   withPayload: Boolean, maxIndex: Long): Option[FrameWalk] = {
     require(everyNth > 0 && maxFrames > 0)
     val in = new DataInputStream(raw)
     try {
       if (readFourCC(in) != "RIFF") return None
       readU32LE(in) // RIFF size — EOF terminates the walk instead
       if (readFourCC(in) != "AVI ") return None
-      val walk = new FrameWalk(in, everyNth, maxFrames, withPayload, maxIndex)
-      walk.hasNext // prime through hdrl so the info fields are populated
-      Some((AviInfo(walk.width, walk.height, walk.usPerFrame,
-        walk.headerFrames), walk))
+      Some(new FrameWalk(in, everyNth, maxFrames, withPayload, maxIndex))
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
@@ -468,58 +429,22 @@ object AviMjpeg {
     StructField("frame_jpeg", BinaryType, nullable = false)))
 
   /** Distributed frame extraction over a directory of MJPEG-AVI files — the
-    * reference's `retrieve_video_frames` slice as one scan. The listing is a
-    * metadata-only `binaryFile` scan (content column unselected, never
-    * fetched); each task then re-opens its files as Hadoop FS streams and
-    * walks them LAZILY ([[frameIterator]]), so live memory per task is ONE
-    * frame — not `maxFramesPerFile` × frame size — and every `everyNth`
-    * stride costs only chunk-header reads on the skipped frames. Streams
-    * close on exhaustion; a task-completion listener closes the in-flight
-    * one if the consumer stops early (e.g. a LIMIT).
+    * reference's `retrieve_video_frames` slice as one scan. Loads the
+    * `graft-avi` V2 source ([[AviFrameSource]]) with `everyNth` and
+    * `maxFrames = maxFramesPerFile`: each task walks its files LAZILY
+    * ([[frameIterator]]), so live memory per task is ONE frame — not
+    * `maxFramesPerFile` × frame size — and every `everyNth` stride costs
+    * only chunk-header reads on the skipped frames.
     *
     * Non-AVI files yield zero rows; a file that turns corrupt mid-walk
     * yields the frames before the corruption (P5 discipline is per-file
     * here: a bad file is observable via an anti-join against the listing).
+    * A path that matches no file fails the scan.
     */
   def videoFrames(spark: SparkSession, pathGlob: String, everyNth: Int = 1,
-                  maxFramesPerFile: Int = 64): DataFrame = {
-    val listing = spark.read.format("binaryFile").load(pathGlob).select(col("path"))
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val enc = RowEncoder.encoderFor(frameSchema)
-    listing.mapPartitions { rows =>
-      val open = new Array[java.io.InputStream](1)
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit] { _ =>
-          if (open(0) != null) open(0).close()
-        })
-      rows.flatMap { r =>
-        val pathStr = r.getString(0)
-        val p = new org.apache.hadoop.fs.Path(pathStr)
-        val in = p.getFileSystem(conf.value).open(p)
-        open(0) = in
-        frameIterator(in, everyNth, maxFramesPerFile) match {
-          case None =>
-            in.close(); open(0) = null
-            Iterator.empty
-          case Some((info, frames)) =>
-            val fps: Any =
-              if (info.microSecPerFrame > 0) 1e6 / info.microSecPerFrame else null
-            new Iterator[Row] {
-              override def hasNext: Boolean = {
-                val h = frames.hasNext
-                if (!h && open(0) != null) { open(0).close(); open(0) = null }
-                h
-              }
-              override def next(): Row = {
-                val f = frames.next()
-                val t: Any =
-                  if (info.microSecPerFrame > 0) f.index * info.microSecPerFrame / 1e6
-                  else null
-                Row(pathStr, info.width, info.height, fps, f.index, t, f.jpeg)
-              }
-            }
-        }
-      }
-    }(enc)
-  }
+                  maxFramesPerFile: Int = 64): DataFrame =
+    spark.read.format("graft-avi")
+      .option("everyNth", everyNth.toString)
+      .option("maxFrames", maxFramesPerFile.toString)
+      .load(pathGlob)
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.{ByteBuffer, ByteOrder}
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.expressions.Window
@@ -18,9 +16,9 @@ import graft.functions.{StatsFunctions, TimeFunctions}
   * reader family is one distributed scan:
   *
   *  - flat binaries (`np.fromfile(dtype).reshape(-1, n)`,
-  *    `aeon/schema/ephys.py:12-23`) → `binaryFile` scan + per-partition
-  *    decode. No driver-side loops: one task per file group, rows stream out
-  *    of a ByteBuffer.
+  *    `aeon/schema/ephys.py:12-23`) → the `graft-clock` V2 scan
+  *    ([[ClockBinarySource]], the one decoder of the family). No driver-side
+  *    loops: one task per file group, rows stream out of a ByteBuffer.
   *  - HarpSync CSV (`aeon/schema/ephys.py:26-33`) → `spark.read.csv` with an
   *    explicit schema + HARP-seconds → timestamp promotion.
   *  - per-file sync-model regression (`aeon/schema/ephys.py:35-71`
@@ -35,12 +33,6 @@ import graft.functions.{StatsFunctions, TimeFunctions}
   * pruning — SURVEY.md §1.1).
   */
 object BronzeIngest {
-
-  /** Columns every binary ingest emits alongside the decoded payload. */
-  private def withFileCols(payload: Seq[StructField]): StructType =
-    StructType(
-      StructField("file", StringType, nullable = false) +:
-      StructField("row_index", LongType, nullable = false) +: payload)
 
   /** Flat float32 binary (`np.fromfile(dtype="<f4").reshape(-1, n)`,
     * reference `aeon/schema/ephys.py:12-23` Binary reader): one row per
@@ -60,18 +52,19 @@ object BronzeIngest {
   }
 
   /** Flat uint64 binary (ONIX Clock, `aeon/schema/ephys.py:74-76`): ticks as
-    * LongType (reference range stays below 2^63).
+    * LongType (reference range stays below 2^63). Loads the `graft-clock`
+    * V2 source (`format=u64`); `colName` renames its `clock` column.
     */
   def flatBinaryU64(spark: SparkSession, pathGlob: String,
-                    colName: String = "clock"): DataFrame = {
-    val schema = withFileCols(Seq(StructField(colName, LongType, nullable = false)))
-    decodeBinary(spark, pathGlob, schema)(u64Decode)
-  }
+                    colName: String = "clock"): DataFrame =
+    u64(spark, Seq(pathGlob), colName)
 
-  private val u64Decode: (Array[Byte], String) => Iterator[Row] = { (bytes, file) =>
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    (0L until bytes.length / 8).iterator.map(r => Row(file, r, buf.getLong((r * 8).toInt)))
-  }
+  private def u64(spark: SparkSession, paths: Seq[String], colName: String): DataFrame =
+    clockAs(spark.read.format("graft-clock").option("format", "u64").load(paths: _*),
+      colName)
+
+  private def clockAs(df: DataFrame, colName: String): DataFrame =
+    if (colName == "clock") df else df.withColumnRenamed("clock", colName)
 
   /** Flat uint16 binary reshaped to n channels (AmplifierData,
     * `aeon/dj_pipeline/spike_sorting.py:266-290`): per-sample array column +
@@ -89,22 +82,6 @@ object BronzeIngest {
       .option("format", "u16").option("channels", nChannels.toString)
       .option("gain", gain.toString).option("offset", offset.toString)
     clockDir.fold(r)(d => r.option("clock", d)).load(pathGlob)
-  }
-
-  private def decodeBinary(spark: SparkSession, pathGlob: String, schema: StructType)
-                          (decode: (Array[Byte], String) => Iterator[Row]): DataFrame =
-    decodeBinaryPaths(spark, Globs.expand(spark, pathGlob), schema)(decode)
-
-  private def decodeBinaryPaths(spark: SparkSession, paths: Seq[String], schema: StructType)
-                               (decode: (Array[Byte], String) => Iterator[Row]): DataFrame = {
-    val enc = RowEncoder.encoderFor(schema)
-    if (paths.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val files = spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path"), col("content"))
-    files.mapPartitions { rows =>
-      rows.flatMap(r => decode(r.getAs[Array[Byte]]("content"), r.getAs[String]("path")))
-    }(enc)
   }
 
   /** Per-file clock stats from O(1) reads — the distributed form of the
@@ -147,10 +124,11 @@ object BronzeIngest {
 
   /** Clock-range decode with per-file pruning (S4/S10 interval reads): files
     * whose `[clock_min, clock_max]` misses `[lo, hi]` are dropped on stats
-    * alone — two 8-byte reads, NEVER a decode — and only survivors stream
-    * through the uint64 decoder. `sliceRows=false` keeps survivors whole
-    * (the reference's load-qualifying-chunks shape); `true` adds the exact
-    * row predicate for sub-file boundaries.
+    * alone — two 8-byte reads, NEVER a decode — and only survivors load
+    * through `graft-clock`. `sliceRows=false` keeps survivors whole (the
+    * reference's load-qualifying-chunks shape); `true` adds the exact row
+    * predicate for sub-file boundaries. No survivor gives an empty frame
+    * with the `(file, row_index, <colName>)` schema.
     *
     * The surviving path list rides through the driver — file-index-scale
     * metadata, the same class of touch as any catalog-driven scan.
@@ -161,8 +139,10 @@ object BronzeIngest {
     val keep = clockFileStats(spark, pathGlob)
       .filter(col("clock_max") >= lo && col("clock_min") <= hi)
       .select("file").collect().map(_.getString(0)).toSeq
-    val schema = withFileCols(Seq(StructField(colName, LongType, nullable = false)))
-    val decoded = decodeBinaryPaths(spark, keep, schema)(u64Decode)
+    val decoded =
+      if (keep.isEmpty) clockAs(spark.createDataFrame(
+        java.util.Collections.emptyList[Row](), ClockBinarySource.Schema), colName)
+      else u64(spark, keep, colName)
     if (sliceRows) decoded.filter(col(colName).between(lo, hi)) else decoded
   }
 

@@ -51,13 +51,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * the pair fails loudly rather than misaligning.
   *
   * Multi-path loads (`load(p1, p2, ...)` — Spark passes a JSON `paths`
-  * property) are supported; directories expand RECURSIVELY to their files.
+  * property) are supported; directories expand RECURSIVELY to their files,
+  * and a path that matches nothing fails the scan ([[Packing.listFiles]]).
   *
   * Planning lists files (metadata only); all IO — the 16 stat bytes and any
-  * decode — happens in executors, one partition per file. This is the
-  * idiomatic-Spark upgrade over `binaryFile` + `mapPartitions`
-  * ([[BronzeIngest.flatBinaryU64]], kept for glob-free embedding in larger
-  * ingest flows): queries compose with plain `filter`, and Catalyst sees a
+  * decode — happens in executors, files packed into byte-budgeted tasks.
+  * This is the one decoder of the flat binary family: the reader functions
+  * [[BronzeIngest.flatBinaryU64]], [[BronzeIngest.flatBinaryU64Range]],
+  * [[BronzeIngest.flatBinaryF32]] and [[BronzeIngest.flatBinaryU16]] are
+  * calls into it. Queries compose with plain `filter`, and Catalyst sees a
   * scan it can reason about.
   */
 class ClockBinarySource extends TableProvider with DataSourceRegister {
@@ -114,19 +116,10 @@ private[sources] case class FlatBinaryOptions(
 }
 
 private[sources] object FlatBinaryOptions {
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
   def apply(properties: JMap[String, String]): FlatBinaryOptions = {
     def opt(k: String): Option[String] =
       Option(properties.get(k)).filter(_.nonEmpty)
-    // load(p) arrives as 'path'; load(p1, p2, ...) as a JSON 'paths' array
-    val paths = opt("paths")
-      .map(js => mapper.readValue(js, classOf[Array[String]]).toSeq)
-      .getOrElse(opt("path").toSeq)
-    require(paths.nonEmpty,
-      "graft-clock requires at least one path: " +
-        "spark.read.format(\"graft-clock\").load(<glob>, ...)")
-
+    val paths = Packing.loadPaths(properties, "graft-clock")
     val format = opt("format").getOrElse("u64")
     require(Set("u64", "f32", "u16").contains(format),
       s"graft-clock format must be u64, f32, or u16 (got '$format')")
@@ -260,7 +253,7 @@ private[sources] class ClockScan(opts: FlatBinaryOptions, required: StructType,
                                  pushed: Array[Filter], lo: Long, hi: Long,
                                  aggCodes: Option[Array[Int]] = None,
                                  aggDesc: Seq[String] = Nil)
-    extends Scan with Batch {
+    extends Scan with Batch with SupportsReportStatistics {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
@@ -268,30 +261,30 @@ private[sources] class ClockScan(opts: FlatBinaryOptions, required: StructType,
       s"PushedFilters: [${pushed.mkString(", ")}] " +
       s"PushedAggregates: [${aggDesc.mkString(", ")}]"
 
+  // metadata-only listing, once per scan: the size estimate and the
+  // partition plan read the same files; every byte of file IO happens in
+  // executors
+  private lazy val listed = Packing.listFiles(opts.paths,
+    SparkSession.active.sparkContext.hadoopConfiguration)
+
+  /** The listed file bytes, the size Spark's own file sources report: join
+    * planning broadcasts a small clock stream instead of shuffling it. */
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): java.util.OptionalLong =
+      java.util.OptionalLong.of(listed.map(_.getLen).sum)
+    override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
+  }
+
   override def planInputPartitions(): Array[InputPartition] = {
-    // metadata-only listing; every byte of file IO happens in executors.
-    // Directories expand RECURSIVELY to their files — silently planning
-    // zero partitions for a nested layout would return empty data with no
-    // signal.
-    val spark = SparkSession.active
-    val fs0 = new org.apache.hadoop.fs.Path(opts.paths.head)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def expand(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (st.isDirectory) fs0.listStatus(st.getPath).toSeq.flatMap(expand) else Seq(st)
-    val files = opts.paths.toArray.flatMap { g =>
-      val p = new org.apache.hadoop.fs.Path(g)
-      Option(fs0.globStatus(p)).getOrElse(Array.empty).toSeq
-    }.flatMap(expand)
-      .filter(_.isFile)
-      .map { st =>
-        require(st.getLen < Int.MaxValue.toLong,
-          s"graft-clock file ${st.getPath} is ${st.getLen} bytes; the format " +
-            "contract caps files below 2 GiB (hour-sized chunks)")
-        (ClockFilePartition(st.getPath.toString, st.getLen), st.getLen)
-      }
+    val files = listed.map { st =>
+      require(st.getLen < Int.MaxValue.toLong,
+        s"graft-clock file ${st.getPath} is ${st.getLen} bytes; the format " +
+          "contract caps files below 2 GiB (hour-sized chunks)")
+      (ClockFilePartition(st.getPath.toString, st.getLen), st.getLen)
+    }
     // small files pack into byte-budgeted partitions (see [[Packing]]);
     // per-file clock-range skipping is unchanged inside each partition
-    Packing.pack(files.toSeq, opts.maxPartitionBytes)
+    Packing.pack(files, opts.maxPartitionBytes)
       .map(fs => ClockFilesPartition(fs): InputPartition)
       .toArray
   }

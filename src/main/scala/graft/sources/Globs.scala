@@ -1,9 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Driver-side glob expansion for the V1 file readers.
+/** Driver-side glob expansion for the V1 file readers, and the
+  * "matched no files" rule the V2 sources' listing ([[Packing.listFiles]])
+  * shares.
   *
   * Spark's V1 `DataSource.resolveRelation` probes the LITERAL path string for
   * a streaming-sink metadata directory before globbing, so every glob-path
@@ -23,12 +25,17 @@ object Globs {
   /** Concrete paths matching `pattern`; the pattern itself if it has no glob
     * characters (plain files/dirs keep Spark's native handling).
     */
-  def expand(spark: SparkSession, pattern: String): Seq[String] = {
-    if (!isGlob(pattern)) return Seq(pattern)
-    val p = new Path(pattern)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matched = Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil)
+  def expand(spark: SparkSession, pattern: String): Seq[String] =
+    if (!isGlob(pattern)) Seq(pattern)
+    else statuses(new Path(pattern).getFileSystem(
+      spark.sparkContext.hadoopConfiguration), pattern).map(_.getPath.toString)
+
+  /** The statuses `pattern` matches (a plain path matches itself when it
+    * exists); a pattern that matches nothing throws.
+    */
+  def statuses(fs: FileSystem, pattern: String): Seq[FileStatus] = {
+    val matched = Option(fs.globStatus(new Path(pattern))).map(_.toSeq).getOrElse(Nil)
     require(matched.nonEmpty, s"Path glob matched no files: $pattern")
-    matched.map(_.getPath.toString)
+    matched
   }
 }

@@ -1,10 +1,15 @@
 package graft.sources
 
+import java.util.{Map => JMap}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.PartitionReader
 
-/** Size-bounded file bin-packing shared by the `graft-clock` / `graft-avi` /
-  * `graft-zarr` V2 sources.
+/** The file-source planning rules shared by the `graft-clock` / `graft-avi`
+  * / `graft-zarr` V2 sources: which files a load names ([[loadPaths]],
+  * [[listFiles]]) and how they group into tasks ([[pack]]).
   *
   * Each of these sources naturally reads one FILE (or zarr chunk) per task —
   * the right granularity for hour-sized chunk files, but a scheduler
@@ -21,6 +26,42 @@ import org.apache.spark.sql.connector.read.PartitionReader
   * Memory per task is one open reader, exactly as unpacked.
   */
 private[graft] object Packing {
+
+  private val jsonMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The paths a file source was loaded with: `load(p)` arrives as the
+    * `path` option, `load(p1, p2, ...)` as a JSON `paths` array. At least
+    * one is required; `source` names the format in the error.
+    */
+  def loadPaths(properties: JMap[String, String], source: String): Seq[String] = {
+    def opt(k: String): Option[String] = Option(properties.get(k)).filter(_.nonEmpty)
+    val paths = opt("paths")
+      .map(js => jsonMapper.readValue(js, classOf[Array[String]]).toSeq)
+      .getOrElse(opt("path").toSeq)
+    require(paths.nonEmpty, s"$source requires at least one path: " +
+      s"spark.read.format(\"$source\").load(<glob>, ...)")
+    paths
+  }
+
+  /** Every file under `paths`, in listing order: each path is a glob
+    * ([[Globs.statuses]]: one that matches nothing throws), and a matched
+    * directory expands RECURSIVELY to its files — planning zero partitions
+    * for a nested layout would return empty data with no signal. Entries
+    * named `.*` or `_*` inside a directory are skipped, the rule Spark's
+    * own file index applies (checksum sidecars, `_SUCCESS` markers).
+    * Metadata only; no file is opened.
+    */
+  def listFiles(paths: Seq[String], conf: Configuration): Seq[FileStatus] = {
+    val fs = new Path(paths.head).getFileSystem(conf)
+    def hidden(st: FileStatus): Boolean = {
+      val name = st.getPath.getName
+      name.startsWith(".") || name.startsWith("_")
+    }
+    def expand(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filterNot(hidden).flatMap(expand)
+      else Seq(st)
+    paths.flatMap(p => Globs.statuses(fs, p)).flatMap(expand).filter(_.isFile)
+  }
 
   /** Parquet's default `spark.sql.files.maxPartitionBytes`. */
   val DefaultMaxPartitionBytes: Long = 128L * 1024 * 1024

@@ -3,7 +3,6 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,13 +19,15 @@ import org.apache.spark.sql.types._
   * dtypes, and `null` / `zlib` / `gzip` / `blosc` compressors — blosc
   * (zarr-python's DEFAULT, what real processed ephys stores use) via
   * [[Blosc]], the pure-Scala container codec over Spark's own bundled
-  * lz4/zstd/snappy libraries, byte- and bit-shuffle filters both. Only
+  * lz4/zstd/snappy libraries, byte- and bit-shuffle filters both.
   *
-  * Scale shape: ONE task per chunk file. A zarr chunk is the store's own
-  * memory bound (the writer sized it to fit in RAM); each task reads and
-  * inflates exactly one chunk, emits its rows, and never sees the rest of
-  * the array. The chunk-grid listing is catalog-scale driver metadata, the
-  * same class as any file-source listing.
+  * This object holds the format: the header parse, the chunk codecs and the
+  * writers. Reading is the `graft-zarr` DataSource V2 ([[ZarrTableSource]]);
+  * [[read]] is a call into it. A zarr chunk is the store's own memory bound
+  * (the writer sized it to fit in RAM); a task inflates one chunk at a time,
+  * emits its rows, and never sees the rest of the array. The chunk-grid
+  * enumeration is catalog-scale driver metadata, the same class as any
+  * file-source listing.
   */
 object ZarrSource {
 
@@ -44,11 +45,13 @@ object ZarrSource {
       s"only 1-D/2-D zarr arrays supported, got shape $shape")
     require(shape.length == chunks.length, "shape/chunks rank mismatch")
 
-    /** Bytes per element, from the numpy dtype string (e.g. `<u2`, `<f4`). */
-    def elemBytes: Int = dtype.drop(2).toInt
-
     /** Chunk-grid extent per dimension: ceil(shape / chunks). */
     def grid: Seq[Long] = shape.zip(chunks).map { case (s, c) => (s + c - 1) / c }
+  }
+
+  object ZarrMeta {
+    /** Bytes per element, from the numpy dtype string (e.g. `<u2`, `<f4`). */
+    def elemBytes(dtype: String): Int = dtype.drop(2).toInt
   }
 
   @transient private lazy val jsonMapper =
@@ -98,84 +101,77 @@ object ZarrSource {
       })
   }
 
-  /** Inflate one chunk payload to its raw C-order buffer. */
-  private def decompress(bytes: Array[Byte], compressor: Option[String],
-                         rawLen: Int): Array[Byte] = compressor match {
-    case None => bytes
-    case Some("zlib") =>
-      val inf = new java.util.zip.Inflater()
-      try {
-        inf.setInput(bytes)
-        val out = new Array[Byte](rawLen)
-        var off = 0
-        var stalled = false
-        while (off < rawLen && !inf.finished() && !stalled) {
-          val n = inf.inflate(out, off, rawLen - off)
-          // inflate()==0 with more output expected means the stream is
-          // truncated/corrupt (needsInput with nothing left to give) — fail
-          // the task instead of spinning forever.
-          if (n == 0 && !inf.finished()) stalled = true else off += n
-        }
-        require(off == rawLen, s"zlib chunk inflated to $off of $rawLen bytes")
-        out
-      } finally inf.end()
-    case Some("gzip") =>
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val out = new Array[Byte](rawLen)
-        var off = 0
-        var n = 0
-        while (off < rawLen && n >= 0) {
-          n = in.read(out, off, rawLen - off)
-          if (n > 0) off += n
-        }
-        require(off == rawLen, s"gzip chunk inflated to $off of $rawLen bytes")
-        out
-      } finally in.close()
-    case Some("blosc") =>
-      val out = Blosc.decompress(bytes)
-      require(out.length == rawLen,
-        s"blosc chunk inflated to ${out.length} of $rawLen bytes")
-      out
-    // numcodecs' RAW codec ids (stores written with Zstd()/LZ4() instead of
-    // Blosc(...)): zstd = a bare zstd frame; lz4 = int32-LE original-size
-    // prefix + one lz4 block
-    case Some("zstd") =>
-      val out = com.github.luben.zstd.Zstd.decompress(bytes, rawLen)
-      require(out.length == rawLen,
-        s"zstd chunk inflated to ${out.length} of $rawLen bytes")
-      out
-    case Some("lz4") =>
-      require(bytes.length >= 4, "numcodecs-lz4 chunk shorter than its prefix")
-      val declared = ByteBuffer.wrap(bytes, 0, 4)
-        .order(ByteOrder.LITTLE_ENDIAN).getInt
-      require(declared == rawLen,
-        s"numcodecs-lz4 chunk declares $declared bytes, expected $rawLen")
-      val out = new Array[Byte](rawLen)
-      val n = net.jpountz.lz4.LZ4Factory.fastestInstance().safeDecompressor()
-        .decompress(bytes, 4, bytes.length - 4, out, 0)
-      require(n == rawLen, s"lz4 chunk inflated to $n of $rawLen bytes")
-      out
-    case Some(other) => throw new IllegalArgumentException(s"compressor $other")
-  }
-
-  /** [[decompress]] + little-endian wrap — the chunk-decode entry point the
-    * `graft-zarr` V2 reader shares with [[read]]. */
+  /** Inflate one chunk payload to its raw C-order buffer, wrapped
+    * little-endian for [[readElemAt]]. */
   private[sources] def inflateChunk(bytes: Array[Byte], compressor: Option[String],
-                                    rawLen: Int): ByteBuffer =
-    ByteBuffer.wrap(decompress(bytes, compressor, rawLen))
-      .order(ByteOrder.LITTLE_ENDIAN)
-
-  /** Public-within-package alias of [[readElem]] for the V2 reader. */
-  private[sources] def readElemAt(buf: ByteBuffer, idx: Int, dtype: String): Double =
-    readElem(buf, idx, dtype)
+                                    rawLen: Int): ByteBuffer = {
+    val raw = compressor match {
+      case None => bytes
+      case Some("zlib") =>
+        val inf = new java.util.zip.Inflater()
+        try {
+          inf.setInput(bytes)
+          val out = new Array[Byte](rawLen)
+          var off = 0
+          var stalled = false
+          while (off < rawLen && !inf.finished() && !stalled) {
+            val n = inf.inflate(out, off, rawLen - off)
+            // inflate()==0 with more output expected means the stream is
+            // truncated/corrupt (needsInput with nothing left to give) — fail
+            // the task instead of spinning forever.
+            if (n == 0 && !inf.finished()) stalled = true else off += n
+          }
+          require(off == rawLen, s"zlib chunk inflated to $off of $rawLen bytes")
+          out
+        } finally inf.end()
+      case Some("gzip") =>
+        val in = new java.util.zip.GZIPInputStream(
+          new java.io.ByteArrayInputStream(bytes))
+        try {
+          val out = new Array[Byte](rawLen)
+          var off = 0
+          var n = 0
+          while (off < rawLen && n >= 0) {
+            n = in.read(out, off, rawLen - off)
+            if (n > 0) off += n
+          }
+          require(off == rawLen, s"gzip chunk inflated to $off of $rawLen bytes")
+          out
+        } finally in.close()
+      case Some("blosc") =>
+        val out = Blosc.decompress(bytes)
+        require(out.length == rawLen,
+          s"blosc chunk inflated to ${out.length} of $rawLen bytes")
+        out
+      // numcodecs' RAW codec ids (stores written with Zstd()/LZ4() instead of
+      // Blosc(...)): zstd = a bare zstd frame; lz4 = int32-LE original-size
+      // prefix + one lz4 block
+      case Some("zstd") =>
+        val out = com.github.luben.zstd.Zstd.decompress(bytes, rawLen)
+        require(out.length == rawLen,
+          s"zstd chunk inflated to ${out.length} of $rawLen bytes")
+        out
+      case Some("lz4") =>
+        require(bytes.length >= 4, "numcodecs-lz4 chunk shorter than its prefix")
+        val declared = ByteBuffer.wrap(bytes, 0, 4)
+          .order(ByteOrder.LITTLE_ENDIAN).getInt
+        require(declared == rawLen,
+          s"numcodecs-lz4 chunk declares $declared bytes, expected $rawLen")
+        val out = new Array[Byte](rawLen)
+        val n = net.jpountz.lz4.LZ4Factory.fastestInstance().safeDecompressor()
+          .decompress(bytes, 4, bytes.length - 4, out, 0)
+        require(n == rawLen, s"lz4 chunk inflated to $n of $rawLen bytes")
+        out
+      case Some(other) => throw new IllegalArgumentException(s"compressor $other")
+    }
+    ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
+  }
 
   /** Typed element read from a chunk buffer as Double (ephys payloads are
     * small ints / floats — double is lossless for all supported widths
     * except full-range u8/i8-exceeding longs, which ephys never uses).
     */
-  private def readElem(buf: ByteBuffer, idx: Int, dtype: String): Double = {
+  private[sources] def readElemAt(buf: ByteBuffer, idx: Int, dtype: String): Double = {
     val kind = dtype(1); val width = dtype(2)
     (kind, width) match {
       case ('u', '1') => (buf.get(idx) & 0xFF).toDouble
@@ -203,105 +199,29 @@ object ZarrSource {
   /** Read a zarr store into `(file, row_index, channels)` rows with optional
     * gain/offset µV conversion — the drop-in twin of
     * [[BronzeIngest.flatBinaryU16]] for the compressed path
-    * (`spike_sorting.py:209-211` scaling).
+    * (`spike_sorting.py:209-211` scaling). A call into the `graft-zarr`
+    * source ([[ZarrTableSource]]), which owns the decode.
     *
-    * `rowRange = Some((lo, hi))` (inclusive) PRUNES chunk files before any
-    * IO — chunk i covers rows `[i·chunkRows, (i+1)·chunkRows)`, so a time
-    * slice of a long recording opens only the overlapping chunks (the
-    * parquet row-group-pruning analogue; the reference's interval reads get
-    * this via `onix_imu.py:112-130`-style bound checks). The exact row
-    * predicate is applied on top, so the result is precisely the slice.
+    * `rowRange = Some((lo, hi))` (inclusive) becomes a `row_index` filter
+    * that the scan absorbs to PRUNE chunk files before any IO — chunk i
+    * covers rows `[i·chunkRows, (i+1)·chunkRows)`, so a time slice of a long
+    * recording opens only the overlapping chunks (the parquet
+    * row-group-pruning analogue; the reference's interval reads get this via
+    * `onix_imu.py:112-130`-style bound checks). Spark re-applies the exact
+    * row predicate, so the result is precisely the slice.
     *
     * 2-D stores must chunk the channel dimension in full (`chunks(1) ==
-    * shape(1)`, the layout the time-seriescompression writer emits) so each
+    * shape(1)`, the layout the time-series compression writer emits) so each
     * sample's channels live in one chunk file and no regrouping shuffle is
     * needed; a channel-split store fails fast with the layout in the message.
     */
   def read(spark: SparkSession, storePath: String,
            gain: Double = 1.0, offset: Double = 0.0,
            rowRange: Option[(Long, Long)] = None): DataFrame = {
-    val meta = readMeta(spark, storePath)
-    if (meta.shape.length == 2)
-      require(meta.chunks(1) == meta.shape(1).toInt,
-        s"channel-split zarr layout ${meta.chunks} for shape ${meta.shape}: " +
-          "samples span chunk files; rechunk with chunks=(t, n_channels)")
-
-    // Chunk-grid → file list (driver-side, catalog-scale: one entry per chunk
-    // FILE, the same metadata class as a parquet file listing). A row-range
-    // read keeps only chunks whose extent overlaps [lo, hi] — no pruned
-    // chunk is ever listed, opened, or inflated.
-    val sep = meta.dimSeparator
-    val cr0 = meta.chunks.head.toLong
-    val inRange: Long => Boolean = rowRange match {
-      case Some((lo, hi)) => i => i * cr0 <= hi && (i + 1) * cr0 - 1 >= lo
-      case None => _ => true
-    }
-    val coords: Seq[Seq[Long]] = meta.grid match {
-      case Seq(g0) => (0L until g0).filter(inRange).map(Seq(_))
-      case Seq(g0, g1) =>
-        for (i <- (0L until g0).filter(inRange); j <- 0L until g1) yield Seq(i, j)
-    }
-    val files = coords.map(c =>
-      (new org.apache.hadoop.fs.Path(storePath, c.mkString(sep)).toString, c.head))
-
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val enc = RowEncoder.encoderFor(schema)
-    val nRows = meta.shape.head
-    val nCols = if (meta.shape.length == 2) meta.shape(1).toInt else 1
-    val chunkRows = meta.chunks.head
-    val storeName = storePath
-
-    spark.createDataFrame(files).toDF("path", "chunk_row")
-      .repartition(math.min(files.size, 64).max(1))
-      .mapPartitions { rows =>
-        rows.flatMap { r =>
-          val p = new org.apache.hadoop.fs.Path(r.getString(0))
-          val chunkRow = r.getLong(1)
-          val fs = p.getFileSystem(conf.value)
-          if (!fs.exists(p)) {
-            // absent chunk file = every element is fill_value (the zarr
-            // sparse-store contract) — materialize it instead of silently
-            // dropping rows; a null fill_value leaves nothing an absent
-            // chunk could legally decode to, so fail loudly
-            val fill = meta.fillValue.getOrElse(throw new
-              IllegalArgumentException(s"chunk $p absent and fill_value is " +
-                "null: the store defines no value for missing chunks"))
-            val base = chunkRow * chunkRows
-            val validRows = math.min(chunkRows.toLong, nRows - base).toInt
-            val vals = Array.fill(nCols)(fill * gain + offset)
-            (0 until validRows).iterator.map(lr => Row(storeName, base + lr,
-              vals.clone()))
-          }
-          else {
-            val in = fs.open(p)
-            val raw =
-              try {
-                val out = new java.io.ByteArrayOutputStream()
-                org.apache.hadoop.io.IOUtils.copyBytes(in, out, 64 * 1024, false)
-                out.toByteArray
-              } finally in.close()
-            val rawLen = chunkRows * nCols * meta.elemBytes
-            val buf = ByteBuffer.wrap(decompress(raw, meta.compressor, rawLen))
-              .order(ByteOrder.LITTLE_ENDIAN)
-            val base = chunkRow * chunkRows
-            // edge chunks are written full-size but only rows < shape count
-            val validRows = math.min(chunkRows.toLong, nRows - base).toInt
-            (0 until validRows).iterator.map { lr =>
-              val vals = new Array[Double](nCols)
-              var c = 0
-              while (c < nCols) {
-                vals(c) = readElem(buf, lr * nCols + c, meta.dtype) * gain + offset
-                c += 1
-              }
-              Row(storeName, base + lr, vals)
-            }
-          }
-        }
-      }(enc) match {
-        // exact slice on top of the chunk pruning
-        case df => rowRange.fold(df) { case (lo, hi) =>
-          df.filter(col("row_index").between(lo, hi)) }
-      }
+    val df = spark.read.format("graft-zarr")
+      .option("gain", gain.toString).option("offset", offset.toString)
+      .load(storePath)
+    rowRange.fold(df) { case (lo, hi) => df.filter(col("row_index").between(lo, hi)) }
   }
 
   /** The raw→compressed path convention (`ephys_utils.py:24-72`
@@ -340,17 +260,15 @@ object ZarrSource {
       dtype, compressor)
     data.grouped(cr).zipWithIndex.foreach { case (chunk, ci) =>
       // edge chunks are stored FULL-SIZE (zarr contract), zero-padded
-      val buf = ByteBuffer.allocate(cr * nCols * elemBytesOf(dtype))
+      val buf = ByteBuffer.allocate(cr * nCols * ZarrMeta.elemBytes(dtype))
         .order(ByteOrder.LITTLE_ENDIAN)
       chunk.foreach(row => row.foreach(v => putElem(buf, v, dtype)))
-      val payload = compressChunk(buf.array(), compressor, elemBytesOf(dtype))
+      val payload = compressChunk(buf.array(), compressor, ZarrMeta.elemBytes(dtype))
       val cOut = fs.create(
         new org.apache.hadoop.fs.Path(storePath, s"$ci.0"), true)
       try cOut.write(payload) finally cOut.close()
     }
   }
-
-  private[sources] def elemBytesOf(dtype: String): Int = dtype.drop(2).toInt
 
   /** Write the `.zarray` header (driver-side, the store's only metadata) and
     * return the effective chunk row count. Shared by [[write]] and
@@ -501,7 +419,7 @@ object ZarrSource {
     val nChunks = ((n + cr - 1) / cr).toInt
 
     val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    val elemBytes = elemBytesOf(dtype)
+    val elemBytes = ZarrMeta.elemBytes(dtype)
     // cast channels to array<double>: array<float> input gets a defined
     // widening instead of a bare ClassCastException inside the task loop
     df.select(floor(col(rowCol) / cr).as("__chunk"),

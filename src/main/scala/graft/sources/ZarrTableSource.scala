@@ -19,17 +19,18 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 for zarr v2 stores — `format("graft-zarr")`.
   *
-  * The declarative face of [[ZarrSource.read]]: `row_index` range filters
-  * push down through Catalyst to CHUNK-FILE pruning (chunk i covers rows
-  * `[i·chunkRows, (i+1)·chunkRows)`), so
+  * The one zarr decoder: [[ZarrSource.read]] is a call into this source.
+  * `row_index` range filters push down through Catalyst to CHUNK-FILE
+  * pruning (chunk i covers rows `[i·chunkRows, (i+1)·chunkRows)`), so
   * `spark.read.format("graft-zarr").load(store).filter($"row_index" between
   * (lo, hi))` opens only the overlapping chunk files — the parquet
-  * row-group-pruning analogue, now visible to the optimizer instead of a
-  * function argument. Filters stay residual (Spark re-applies the exact row
-  * predicate), matching `graft-clock`'s contract.
+  * row-group-pruning analogue, visible to the optimizer. Filters stay
+  * residual (Spark re-applies the exact row predicate), matching
+  * `graft-clock`'s contract.
   *
-  * Options: `gain`, `offset` (µV scaling, default 1/0). One task per chunk
-  * file; the chunk is the memory bound ([[ZarrSource]] scale notes).
+  * Options: `gain`, `offset` (µV scaling, default 1/0), `maxPartitionBytes`.
+  * Chunks pack into byte-budgeted tasks ([[Packing]]) and decode one at a
+  * time; the chunk is the memory bound ([[ZarrSource]] scale notes).
   */
 class ZarrTableSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -206,7 +207,7 @@ private[sources] class ZarrScan(opts: ZarrTableOptions, required: StructType,
           meta.compressor, meta.fillValue)
         // weight = the chunk's RAW size — the decompressed buffer is the
         // task's actual memory bound, and no file listing is needed
-        (c, meta.chunks.head.toLong * nCols * meta.elemBytes)
+        (c, meta.chunks.head.toLong * nCols * ZarrSource.ZarrMeta.elemBytes(meta.dtype))
       }
     // pruning happened above; packing only groups the surviving chunks
     Packing.pack(chunks, opts.maxPartitionBytes)
@@ -306,7 +307,7 @@ private[sources] class ZarrPartitionReader(
             out.toByteArray
           } finally in.close()
         buf = ZarrSource.inflateChunk(raw, part.compressor,
-          part.chunkRows * part.nCols * ZarrSource.elemBytesOf(part.dtype))
+          part.chunkRows * part.nCols * ZarrSource.ZarrMeta.elemBytes(part.dtype))
       }
       loaded = true
     }

@@ -146,14 +146,13 @@ class AviMjpegSpec extends SparkSpec {
 
     val v2 = spark.read.format("graft-avi")
       .option("everyNth", "5").option("maxFrames", "8").load(dir + "/*")
-    // full-schema read matches the mapPartitions reader row for row
-    val viaFn = AviMjpeg.videoFrames(spark, dir + "/*", everyNth = 5,
-      maxFramesPerFile = 8)
-      .select("file", "width", "height", "frame_index")
-      .orderBy("file", "frame_index").collect()
+    // full-schema read matches the frames the spec wrote, row for row:
+    // every 5th of cam0's 12 frames and of cam1's 5
     val viaV2 = v2.select("file", "width", "height", "frame_index")
       .orderBy("file", "frame_index").collect()
-    assert(viaV2.map(_.toSeq).toSeq == viaFn.map(_.toSeq).toSeq)
+      .map(r => (r.getString(0).split('/').last, r.getInt(1), r.getInt(2), r.getLong(3)))
+    assert(viaV2.toSeq == Seq(("cam0.avi", 32, 16, 0L), ("cam0.avi", 32, 16, 5L),
+      ("cam0.avi", 32, 16, 10L), ("cam1.avi", 64, 48, 0L)))
     // payload is real when selected
     val jpegs = v2.select("frame_jpeg").collect()
     assert(jpegs.nonEmpty && jpegs.forall { r =>

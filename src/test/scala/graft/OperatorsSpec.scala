@@ -737,6 +737,20 @@ class OperatorsSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 3)
   }
 
+  test("Populate.appendIdempotent keeps the input's column order in every part file") {
+    // pk last: a USING anti join would move it first in the second append
+    val dir = java.nio.file.Files.createTempDirectory("populate_order").toString + "/t"
+    assert(Populate.appendIdempotent(Seq(("a", 1L)).toDF("v", "k"), dir, Seq("k")) == 1)
+    assert(Populate.appendIdempotent(Seq(("b", 2L)).toDF("v", "k"), dir, Seq("k")) == 1)
+    val parts = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(parts.length >= 2)
+    // each footer alone, as Spark's schema inference reads one of them
+    parts.foreach { f =>
+      assert(spark.read.parquet(f.getPath).columns.toSeq == Seq("v", "k"), f.getName)
+    }
+  }
+
   test("Populate.appendIdempotent rethrows when the existing table is unreadable") {
     // A corrupt footer must NOT be treated as "table absent" — that would
     // skip the dedup check and double-insert on the next healthy read.
