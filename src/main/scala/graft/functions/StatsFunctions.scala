@@ -64,19 +64,6 @@ object StatsFunctions {
       round(avg(finite), 4).as("mean"))
   }
 
-  /** Timestamp stats `(min, max, count, sampling_rate_hz)` where the rate is
-    * `1e6 / median(diff(ts_micros))` (`stats.py:26-39` uses 1e9/median ns
-    * diff; Spark timestamps are µs). Median diff must be computed with a lag
-    * window BEFORE aggregation; this takes the pre-computed diff column.
-    */
-  def timestampStats(ts: Column, diffMicros: Column): Column =
-    struct(
-      min(ts).as("min"),
-      max(ts).as("max"),
-      count(ts).as("count"),
-      round(lit(1e6) / percentile(diffMicros, lit(0.5)), 4)
-        .as("sampling_rate_hz"))
-
   /** Per-group OLS of y ~ x, as `(slope, intercept, r2, n)` — the HarpSync
     * sync-model aggregate (`schema/ephys.py:43-68`). Pure built-ins
     * (`regr_slope` family), so the model is a struct of coefficients, never a

@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.time.{Instant, LocalDateTime, ZoneOffset}
+import java.time.{Instant, LocalDateTime}
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.Column
@@ -54,12 +54,6 @@ object TimeFunctions {
     cap.map(c => least(end, c)).getOrElse(end)
   }
 
-  /** Round a timestamp to microseconds. Spark timestamps are already µs-native
-    * so this is identity on TimestampType — kept as the explicit fetch-edge
-    * contract (reference `__init__.py:100-105` rounds pandas ns → µs).
-    */
-  def roundMicros(ts: Column): Column = timestamp_micros(unix_micros(ts))
-
   /** Parse an epoch directory name in either reference format:
     * `2026-04-15T09-03-01` (hyphenated) or `2026-04-15T090301Z` (compact)
     * (reference `time_utils.py:6-17`). Column version: try both patterns.
@@ -97,9 +91,4 @@ object TimeFunctions {
 
   def instantToHarp(i: Instant): Double =
     i.getEpochSecond.toDouble + i.getNano / 1e9 - HarpEpochOffsetSeconds.toDouble
-
-  /** For completeness: LocalDateTime (naive-as-UTC, reference discipline
-    * SURVEY.md §7.5.3) → Instant.
-    */
-  def naiveUtc(ldt: LocalDateTime): Instant = ldt.toInstant(ZoneOffset.UTC)
 }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
-import graft.expressions.{VecCosine, VecDot, VecSimhashBuckets}
+import graft.expressions.{BoundedTopK, FastRound, VecCosine, VecDot, VecSimhashBuckets}
 
 /** Embedding-vector math over `Array[Float]` (or `Array[Double]`) columns
   * (similarity-search pack, driver brief).
@@ -32,6 +32,21 @@ object VectorFunctions {
     * Single fused loop (dot + both norms) in generated code.
     */
   def cosine(a: Column, b: Column): Column = binary(VecCosine.apply)(a, b)
+
+  /** `round(score, scale)` on a double: the same bits as Spark's `round`,
+    * without its `BigDecimal` detour except near `.5` ties
+    * (graft.expressions.FastRound). */
+  def fastRound(score: Column, scale: Int): Column =
+    GraftColumnBridge.column(FastRound(GraftColumnBridge.expression(score), scale))
+
+  /** Aggregate: the `k` best rows of each group by (score desc, id asc), as
+    * `array<struct<rank, id, score>>` in rank order, exactly the ranks
+    * `row_number()` gives over that order; ids must be integral
+    * (graft.expressions.BoundedTopK). Project a computed score into its own
+    * column first: the aggregate evaluates its inputs interpreted. */
+  def boundedTopK(score: Column, id: Column, k: Int): Column =
+    GraftColumnBridge.column(BoundedTopK(GraftColumnBridge.eagerExpression(score),
+      GraftColumnBridge.eagerExpression(id), k).toAggregateExpression())
 
   /** Deterministic PORTABLE hyperplanes for LSH bucketing: `nBits`
     * Rademacher (±1) planes of `dim` components, component signs derived

@@ -1416,10 +1416,6 @@ object Dedup {
         round((col("n_grams") - col("n_distinct")).cast("double") /
           col("n_grams"), 4))
 
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming64(a: String, b: String): org.apache.spark.sql.Column =
-    bit_count(col(a).bitwiseXOR(col(b)))
-
   /** LSH bucket rows `(idCol, band, bucket)` for a batch of documents — the
     * persistable unit of an incremental dedup index. One row per (doc,
     * band); the bucket key is the band's minhash slice as a string

@@ -672,15 +672,6 @@ object Graphs {
     kCore(edges, srcCol, dstCol, k, rounds)
       .filter(col("deg") < k).isEmpty
 
-  /** Has [[kTruss]] reached its fixpoint after `rounds` peels? True iff
-    * every surviving edge already meets the support bar — the same
-    * convergence probe contract as [[kCoreConverged]]. */
-  def kTrussConverged(edges: DataFrame, srcCol: String, dstCol: String,
-                      k: Int, rounds: Int): Boolean =
-    kTruss(edges, srcCol, dstCol, k, rounds + 1)
-      .count() ==
-      kTruss(edges, srcCol, dstCol, k, rounds).count()
-
   /** Per-node local clustering coefficient as the exact integer micro
     * `cc_micro = (2·T(n)·10⁶) div (d(n)·(d(n)−1))` — triangle closure
     * rate around each node, the standard local-density signal next to

@@ -106,13 +106,4 @@ object IntervalJoin {
       .withColumnsRenamed(
         right.columns.filterNot(equiKeys.contains).map(c => s"__r_$c" -> c).toMap)
   }
-
-  /** Naive overlap join — correct and simple; Spark plans BNLJ when one side
-    * broadcasts. Use when one side is a small dimension (sync models, epochs).
-    */
-  def overlapBroadcastRight(left: DataFrame, right: DataFrame,
-                            lStart: Column, lEnd: Column,
-                            rStart: Column, rEnd: Column,
-                            joinType: String = "inner"): DataFrame =
-    left.join(broadcast(right), lStart <= rEnd && rStart <= lEnd, joinType)
 }

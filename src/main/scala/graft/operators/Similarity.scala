@@ -13,7 +13,8 @@ import graft.functions.VectorFunctions
   *    query side broadcasts (queries ≪ corpus) into an all-pairs join
   *    whose corpus side is first spread over the default parallelism (one
   *    linear shuffle in front of quadratic scoring, see [[rankedPairs]]);
-  *    top-k per query via window rank on the joined result.
+  *    top-k per query via a bounded top-k aggregate on the scored pairs
+  *    (see [[rankTail]]).
   *  - `lshTopK`: the 100 TB path — both sides bucketed by random-hyperplane
   *    signatures (graft.functions.VectorFunctions.simhashBucket); candidates
   *    come from an equi-join on bucket id, exact cosine re-rank only within
@@ -63,26 +64,36 @@ object Similarity {
     else (resolveDim(dim, df, vecCol), deriveBits(df.count(), targetPop))
 
   /** Rank tail of every top-k path: round the score to `scoreDigits` when
-    * set, rank per query on (score desc, id), keep ranks `loRank..hiRank`
-    * (WindowGroupLimit pre-filters at `hiRank`). Output: (queryIdCol,
-    * idCol, `__rank`, scoreCol). */
+    * set ([[VectorFunctions.fastRound]], Spark's `round` bit for bit), rank
+    * per query on (score desc, id) and keep ranks `loRank..hiRank`. The
+    * ranks are `row_number`'s over that order, from one
+    * [[VectorFunctions.boundedTopK]] aggregate per query: a fixed-width
+    * `hiRank`-entry buffer, so Spark plans a hash aggregate with a partial
+    * step before the shuffle, and no sort of the scored pairs. The score is
+    * projected into its own column beneath the aggregate, which keeps the
+    * cosine and the rounding in codegen'd code. `idCol` must be integral.
+    * Output: (queryIdCol, idCol, `__rank`, scoreCol). */
   private def rankTail(pairs: DataFrame, idCol: String, queryIdCol: String,
                        score: Column, scoreCol: String,
                        scoreDigits: Option[Int],
-                       loRank: Int, hiRank: Int): DataFrame = {
-    val w = Window.partitionBy(col(queryIdCol))
-      .orderBy(col(scoreCol).desc, col(idCol))
-    pairs.withColumn(scoreCol, scoreDigits.fold(score)(d => round(score, d)))
-      .withColumn("__rank", row_number().over(w))
-      .filter(col("__rank").between(loRank, hiRank))
-      .select(col(queryIdCol), col(idCol), col("__rank"), col(scoreCol))
-  }
+                       loRank: Int, hiRank: Int): DataFrame =
+    pairs
+      .select(col(queryIdCol), col(idCol),
+        scoreDigits.fold(score)(d => VectorFunctions.fastRound(score, d))
+          .as(scoreCol))
+      .groupBy(col(queryIdCol))
+      .agg(VectorFunctions.boundedTopK(col(scoreCol), col(idCol), hiRank)
+        .as("__top"))
+      .select(col(queryIdCol),
+        explode(slice(col("__top"), loRank, hiRank - loRank + 1)).as("__e"))
+      .select(col(queryIdCol), col("__e.id").as(idCol),
+        col("__e.rank").as("__rank"), col("__e.score").as(scoreCol))
 
   /** The all-pairs kernels: every (corpus, query) pair but self-pairs,
     * queries broadcast, then [[rankTail]]. The corpus is round-robin spread
     * over the default parallelism first, never sized by file bytes: a small
     * file is one split, which would run the whole join, score, `round` and
-    * window pre-sort as one task. The exchange moves each corpus row once,
+    * partial top-k as one task. The exchange moves each corpus row once,
     * is planned without a job, and AQE keeps its explicit partition count;
     * rows tied on (score, id) are identical, so no result changes. */
   private def rankedPairs(corpus: DataFrame, queries: DataFrame,
@@ -125,8 +136,9 @@ object Similarity {
     *
     * Scale shape: identical to [[bruteForceTopK]] — the shared
     * [[rankedPairs]] tail (corpus spread over the default parallelism,
-    * query side broadcast, per-query rank window); the band filter rides
-    * the WindowGroupLimit pre-filter at `hiRank`.
+    * query side broadcast, per-query bounded top-k); the top-k keeps
+    * `hiRank` entries per query and the band slices ranks
+    * `loRank..hiRank` out of them.
     */
   def rankBand(corpus: DataFrame, queries: DataFrame,
                idCol: String, queryIdCol: String, vecCol: String,
@@ -210,8 +222,9 @@ object Similarity {
           val pid = row.getLong(row.fieldIndex("id"))
           picks += ((r, pid, row.getLong(row.fieldIndex("__sc"))))
           val pv = typedlit(row.getSeq[Float](row.fieldIndex("__v")).toSeq)
-          val sim = floor(round(VectorFunctions.cosine(col("__v"), pv),
-            simDigits) * lit(1000000.0)).cast("long")
+          val sim = floor(VectorFunctions.fastRound(
+            VectorFunctions.cosine(col("__v"), pv), simDigits) *
+            lit(1000000.0)).cast("long")
           val next = checkpointer.cut(
             rem.filter(col("id") =!= pid)
               .withColumn("__ms",
@@ -366,7 +379,8 @@ object Similarity {
       val x = element_at(vec, i + 1).cast("double")
       if (maxs(i) == mins(i)) lit(0)
       else least(lit(255), greatest(lit(0),
-        round((x - lit(mins(i))) * lit(255.0 / (maxs(i) - mins(i))), 0)
+        VectorFunctions.fastRound(
+          (x - lit(mins(i))) * lit(255.0 / (maxs(i) - mins(i))), 0)
           .cast("int")))
     }
     array(codes: _*)
@@ -695,7 +709,7 @@ object Similarity {
     }: _*)
 
   /** Shared IVF tail: exact cosine over (cell-joined) candidates, top-k per
-    * query via window rank, optional rounded ranking. */
+    * query through [[rankTail]], optional rounded ranking. */
   private def rankCandidates(assigned: DataFrame, probes: DataFrame,
                              idCol: String, queryIdCol: String, vecCol: String,
                              k: Int, scoreDigits: Option[Int]): DataFrame =
@@ -976,7 +990,7 @@ object Similarity {
     val rawKc = best.getField("kc")
     val assigned = corpus.select(col(idCol), col(vecCol),
       best.getField("i").as("cell"),
-      scoreDigits.fold(rawKc)(d => round(rawKc, d)).as("__kc"))
+      scoreDigits.fold(rawKc)(d => VectorFunctions.fastRound(rawKc, d)).as("__kc"))
     // the guarded assignment feeds BOTH sides of the pair join AND the
     // final keeper join — cut it once (same discipline as
     // connectedComponents' edge list) or the full-corpus scan + quantizer
@@ -994,20 +1008,22 @@ object Similarity {
       .join(guarded.select(col(idCol).as("id_b"), col(vecCol).as("__vb"),
         col("cell")), Seq("cell"))
       .filter(col("id_a") < col("id_b"))
-      .filter(scoreDigits.fold(rawCos)(d => round(rawCos, d)) >= threshold)
+      .filter(scoreDigits.fold(rawCos)(d => VectorFunctions.fastRound(rawCos, d)) >=
+        threshold)
       .select("id_a", "id_b")
     val comps = Dedup.connectedComponents(pairs, "id_a", "id_b",
         checkpointer = checkpointer)
       .withColumnRenamed("id", "__cid")
     // keeper = highest centroid cosine ("closest to centroid" — the
     // SemDeDup ablation found the keeper choice barely matters; this one is
-    // deterministic and engine-replayable), ties on id
-    val wKeep = Window.partitionBy(col("cluster"))
-      .orderBy(col("__kc").desc, col(idCol))
+    // deterministic and engine-replayable), ties on id: the cluster's top-1
+    // under the rank tail's order
+    val keeper = VectorFunctions.boundedTopK(col("__kc"), col(idCol), 1)
+      .over(Window.partitionBy(col("cluster")))
     guarded
       .join(comps, col(idCol) === col("__cid"), "left")
       .withColumn("cluster", coalesce(col("cluster"), col(idCol).cast("long")))
-      .withColumn("is_kept", row_number().over(wKeep) === 1)
+      .withColumn("is_kept", col(idCol) <=> keeper.getItem(0).getField("id"))
       .select(col(idCol), col("cell"), col("cluster"), col("is_kept"))
   }
 
@@ -1054,7 +1070,7 @@ object Similarity {
     val idx = idxTouched.join(flooded(idxTouched), Seq("cell"), "left_anti")
     val batch = newAssigned.join(flooded(newAssigned), Seq("cell"), "left_anti")
     val rawCos = VectorFunctions.cosine(col("__va"), col("__vb"))
-    val cos = scoreDigits.fold(rawCos)(d => round(rawCos, d))
+    val cos = scoreDigits.fold(rawCos)(d => VectorFunctions.fastRound(rawCos, d))
     val vsIndex = idx
       .select(col(idCol).as("__ia"), col(vecCol).as("__va"), col("cell"))
       .join(batch.select(col(idCol).as("__ib"), col(vecCol).as("__vb"),
