@@ -139,14 +139,21 @@ case class WinnowFingerprints(child: Expression, shingleN: Int, windowSize: Int)
 }
 
 /** Fused per-document DISTINCT word n-gram set — the set-similarity unit of
-  * [[graft.operators.Dedup.prefixFilterJaccard]] / `containmentJoin` as ONE
-  * codegen pass per row. The composed shape (posexplode words → window lead
-  * → concat → distinct) pays a doc-keyed window shuffle plus a corpus-wide
-  * distinct for values each document can compute alone; this expression
-  * makes the token-set table a MAP-ONLY projection, so the whole shingle
-  * stream reaches its first real aggregate without a shuffle. Gram
-  * construction is [[TextSignatures.foreachGram]] — the same kernel the
-  * signature family hangs its fused-equals-composed contract on.
+  * [[graft.operators.Dedup.prefixFilterJaccard]], `containmentJoin` and
+  * `withShingles` as ONE codegen pass per row. The composed shape
+  * (posexplode words → window lead → concat → distinct) pays a doc-keyed
+  * window shuffle plus a corpus-wide distinct for values each document can
+  * compute alone; this expression makes the token-set table a MAP-ONLY
+  * projection, so the whole shingle stream reaches its first real aggregate
+  * without a shuffle. Gram construction is [[TextSignatures.foreachGram]] —
+  * the same kernel the signature family hangs its fused-equals-composed
+  * contract on.
+  *
+  * Callers evaluate it once per document: `prefixFilterJaccard` explodes
+  * it straight into the (doc, token) rows of its one ordered-set table,
+  * and the array-valued callers project it through `Dedup`'s run-once
+  * helper. A plain `filter(isNotNull)` over the projection would be pushed
+  * beneath it and run the kernel twice per row.
   *
   * Input must already be normalized ([[graft.functions.TextFunctions.normalizeForDedup]]).
   * Null when the document has no complete gram (fewer than `n` words, or

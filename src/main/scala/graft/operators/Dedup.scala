@@ -99,35 +99,44 @@ object Dedup {
     */
   def minhashSignaturesFused(docs: DataFrame, idCol: String, textCol: String,
                              numHashes: Int = 64, shingleN: Int = 3): DataFrame =
-    docs.select(col(idCol),
-        graft.functions.HashFunctions.minhashSignature(
-          TextFunctions.normalizeForDedup(col(textCol)), numHashes, shingleN)
-          .as("minhash"))
-      .filter(col("minhash").isNotNull)
+    nonNullKernel(docs, col(idCol), "minhash",
+      graft.functions.HashFunctions.minhashSignature(
+        TextFunctions.normalizeForDedup(col(textCol)), numHashes, shingleN))
 
   /** [[simhashSignatures]] fused into one codegen pass per document — same
     * rationale and equality guarantee as [[minhashSignaturesFused]] (the
     * null filter matches the composed shape, which emits no group for a
     * null-text doc). */
   def simhashSignaturesFused(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol),
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.expressions.SimhashSignature(
-            org.apache.spark.sql.GraftColumnBridge.expression(
-              TextFunctions.normalizeForDedup(col(textCol))))).as("simhash"))
-      .filter(col("simhash").isNotNull)
+    nonNullKernel(docs, col(idCol), "simhash",
+      org.apache.spark.sql.GraftColumnBridge.column(
+        graft.expressions.SimhashSignature(
+          org.apache.spark.sql.GraftColumnBridge.expression(
+            TextFunctions.normalizeForDedup(col(textCol))))))
 
   /** [[winnowFingerprints]] fused into one codegen pass per document — same
     * rationale and equality guarantee as [[minhashSignaturesFused]]. */
   def winnowFingerprintsFused(docs: DataFrame, idCol: String, textCol: String,
                               shingleN: Int = 3, windowSize: Int = 4): DataFrame =
-    docs.select(col(idCol),
-        org.apache.spark.sql.GraftColumnBridge.column(
-          graft.expressions.WinnowFingerprints(
-            org.apache.spark.sql.GraftColumnBridge.expression(
-              TextFunctions.normalizeForDedup(col(textCol))),
-            shingleN, windowSize)).as("fingerprints"))
-      .filter(col("fingerprints").isNotNull)
+    nonNullKernel(docs, col(idCol), "fingerprints",
+      org.apache.spark.sql.GraftColumnBridge.column(
+        graft.expressions.WinnowFingerprints(
+          org.apache.spark.sql.GraftColumnBridge.expression(
+            TextFunctions.normalizeForDedup(col(textCol))),
+          shingleN, windowSize)))
+
+  /** `(id, name)`: `kernel` projected beside `id`, rows where it is null
+    * dropped, and the kernel evaluated ONCE per row. The plain
+    * `select(kernel).filter(isNotNull)` shape lets Catalyst push the filter
+    * beneath the projection, and the executed plan then runs the kernel in
+    * both the `Filter` and the `Project` — twice per row. Projecting it
+    * through a one-element `inline` puts the filter above a `Generate`,
+    * whose generated columns no predicate can be pushed past; the stage
+    * stays whole-stage codegen'd. */
+  private def nonNullKernel(docs: DataFrame, id: Column, name: String,
+                            kernel: Column): DataFrame =
+    docs.select(id, inline(array(struct(kernel.as(name)))))
+      .filter(col(name).isNotNull)
 
   /** All unordered pairs within each key-group, SINGLE PASS over the input:
     * group → sorted payload array → explode (element, strictly-later
@@ -206,27 +215,37 @@ object Dedup {
     * sharing no prefix token are pruned WITHOUT being scored. Rare-first
     * ordering makes prefix postings the SHORTEST lists in the corpus.
     *
-    * Scale shape: the token-set table is a MAP-ONLY projection (fused
-    * [[graft.expressions.DistinctShingles]] — no doc-keyed window, no
-    * corpus-wide distinct); df is one vocabulary aggregate; per-doc
-    * ordering is an in-group `sort_array` (never a global sort); prefix
-    * postings group into ONE shuffle with in-place pair expansion
-    * ([[pairsWithinGroups]], `maxPosting` bounds the m²/2 blow-up of
-    * boilerplate tokens — the cap is a SCALE GUARD, not part of the exact
-    * semantics: a posting longer than the cap is dropped whole, losing any
-    * qualifying pair whose only shared prefix token sits in it. Callers
-    * needing the exact PPJoin contract pass `maxPosting = Int.MaxValue`,
-    * as the oracled q158 does); candidates collapse through ONE pair-keyed
-    * aggregate carrying the exact positional bound (see inline proof);
-    * verification explodes pairs to (pair, side) and joins the map-only
-    * doc-array table ONCE (the q65 exchange-reuse discipline — two
-    * differently-consumed joins would re-derive the corpus-wide array
-    * table per side).
+    * Scale shape: each document is tokenized ONCE, into one table keyed
+    * by doc id that carries its ordered token set and serves both the
+    * prefix index and verification.
+    *  - The token rows are a map-only `explode` of the fused
+    *    [[graft.expressions.DistinctShingles]] set (`explode` drops null
+    *    and empty sets, so the kernel runs once per row and no null filter
+    *    is pushed beneath it).
+    *  - df is a window `count` partitioned by token: the disk-spilling
+    *    `WindowExec` buffer of [[pairsWithinGroups]], not a per-token
+    *    aggregate joined back, so a boilerplate token's posting list is
+    *    never held in one aggregation buffer.
+    *  - Per-doc ordering is an in-group `sort_array` (never a global sort).
+    *  - Prefix postings group into ONE shuffle with in-place pair expansion
+    *    ([[pairsWithinGroups]]; `maxPosting` bounds the m²/2 blow-up of
+    *    boilerplate tokens — the cap is a SCALE GUARD, not part of the exact
+    *    semantics: a posting longer than the cap is dropped whole, losing
+    *    any qualifying pair whose only shared prefix token sits in it.
+    *    Callers needing the exact PPJoin contract pass
+    *    `maxPosting = Int.MaxValue`, as the oracled q158 does).
+    *  - Candidates collapse through ONE pair-keyed aggregate carrying the
+    *    exact positional bound (see inline proof).
+    *  - Verification joins the ordered-set table once per side; both reads
+    *    share its id-keyed exchange (the plan shows `ReusedExchange`).
+    *    Both arrays are distinct sets, so `|A∪B| = mA + mB − |A∩B|` exactly.
     *
     * All-integer semantics: the gate is `100·|A∩B| ≥ pct·|A∪B|` and the
     * prefix length uses `⌈pct·m/100⌉ = (pct·m + 99) div 100` — no float
     * appears anywhere, so any engine replays the pair set exactly.
     * Output: `(id_a, id_b, inter_size, union_size)`, id_a < id_b.
+    * Ids must be unique and non-null: rows sharing an id merge into one
+    * token set, and a null id pairs with nothing.
     *
     * @param n the set unit: 1 = distinct words; ≥ 2 = distinct word
     *          n-gram shingles ([[TextFunctions.shingles]] — the q65/q67
@@ -234,27 +253,16 @@ object Dedup {
     */
   def prefixFilterJaccard(docs: DataFrame, idCol: String, textCol: String,
                           thresholdPct: Int, n: Int = 1,
-                          maxPosting: Int = 10000,
-                          checkpointer: Checkpointer = Checkpointer.Local)
-      : DataFrame = {
+                          maxPosting: Int = 10000): DataFrame = {
     require(thresholdPct >= 1 && thresholdPct <= 100,
       "thresholdPct must be in [1, 100]")
     require(n >= 1, "n must be >= 1")
-    // per-doc distinct shingle ARRAYS in one codegen pass (n = 1 is the
-    // distinct-words set) — the token-set table is a MAP-ONLY projection,
-    // so tokenization reaches its first aggregate without the doc-keyed
-    // window shuffle + corpus-wide distinct the exploded shape paid
-    val docArrays = docs.select(col(idCol).as("__id"),
-        TextFunctions.distinctShinglesFused(
-          TextFunctions.normalizeForDedup(col(textCol)), n).as("__toks"))
-      .filter(col("__toks").isNotNull)
-    // cut: the exploded set feeds BOTH the df aggregate and the ordered-set
-    // build — uncut, tokenization runs once per consumer (cheap here, but
-    // the cut also caps the plan for the two joins below)
-    val tokset = checkpointer.cut(
-      docArrays.select(col("__id"), explode(col("__toks")).as("__t")))
-    val dfc = tokset.groupBy("__t").agg(count(lit(1)).as("__df"))
-    val ts = tokset.join(dfc, Seq("__t"))
+    // (doc, token) rows: n = 1 is the distinct-words set
+    val tokset = docs.select(col(idCol).as("__id"),
+      explode(TextFunctions.distinctShinglesFused(
+        TextFunctions.normalizeForDedup(col(textCol)), n)).as("__t"))
+    val ts = tokset
+      .withColumn("__df", count(lit(1)).over(Window.partitionBy("__t")))
       .groupBy("__id")
       .agg(sort_array(collect_list(struct(col("__df"), col("__t"))))
         .as("__o"))
@@ -302,20 +310,14 @@ object Dedup {
         least(col("__ma") - col("__w"), col("__mb") - col("__v")) >=
         expr(s"($thresholdPct * (__ma + __mb) + ${denom - 1}) div $denom"))
       .select("id_a", "id_b")
-    // verification joins the MAP-ONLY doc-array table (set algebra doesn't
-    // need the df ordering), so the ordered-set build is consumed exactly
-    // once by the prefix index and needs no cut
-    cands
-      .select(col("id_a"), col("id_b"),
-        explode(array(col("id_a"), col("id_b"))).as("__id"))
-      .join(docArrays, Seq("__id"))
-      .groupBy("id_a", "id_b")
-      .agg(collect_list(col("__toks")).as("__two"))
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(element_at(col("__two"), 1),
-          element_at(col("__two"), 2))).cast("long").as("inter_size"),
-        size(array_union(element_at(col("__two"), 1),
-          element_at(col("__two"), 2))).cast("long").as("union_size"))
+    def side(x: String): DataFrame = ts.select(col("__id").as(s"id_$x"),
+      col("__toks").as(s"__t$x"), col("__m").as(s"__m$x"))
+    cands.join(side("a"), "id_a").join(side("b"), "id_b")
+      .withColumn("inter_size",
+        size(array_intersect(col("__ta"), col("__tb"))).cast("long"))
+      .select(col("id_a"), col("id_b"), col("inter_size"),
+        (col("__ma") + col("__mb") - col("inter_size")).cast("long")
+          .as("union_size"))
       .filter(col("inter_size") * lit(100L) >=
         lit(thresholdPct.toLong) * col("union_size"))
   }
@@ -351,10 +353,9 @@ object Dedup {
     // map-only token-set tables (fused DistinctShingles; n = 1 is the
     // distinct-words set) — same rationale as [[prefixFilterJaccard]]
     def unitArrays(df: DataFrame, id: String, text: String): DataFrame =
-      df.select(col(id).as("__id"),
-          TextFunctions.distinctShinglesFused(
-            TextFunctions.normalizeForDedup(col(text)), n).as("__toks"))
-        .filter(col("__toks").isNotNull)
+      nonNullKernel(df, col(id).as("__id"), "__toks",
+        TextFunctions.distinctShinglesFused(
+          TextFunctions.normalizeForDedup(col(text)), n))
     val docArrays = unitArrays(docs, idCol, textCol)
     val docSet = checkpointer.cut(
       docArrays.select(col("__id"), explode(col("__toks")).as("__t")))
@@ -519,10 +520,9 @@ object Dedup {
     */
   def withShingles(docs: DataFrame, idCol: String, textCol: String,
                    n: Int = 3): DataFrame =
-    docs.select(col(idCol),
-        TextFunctions.distinctShinglesFused(
-          TextFunctions.normalizeForDedup(col(textCol)), n).as("shingles"))
-      .filter(col("shingles").isNotNull)
+    nonNullKernel(docs, col(idCol), "shingles",
+      TextFunctions.distinctShinglesFused(
+        TextFunctions.normalizeForDedup(col(textCol)), n))
 
   /** Hashed shingle-set table `(idCol, shingle_hashes: array<long>)`: the
     * portable 60-bit hash of each shingle instead of the string. Jaccard over
@@ -542,12 +542,11 @@ object Dedup {
     */
   def withHashedShingles(docs: DataFrame, idCol: String, textCol: String,
                          n: Int = 3): DataFrame =
-    docs.select(col(idCol),
-        transform(
-          TextFunctions.distinctShinglesFused(
-            TextFunctions.normalizeForDedup(col(textCol)), n),
-          s => HashFunctions.portableHash60(s)).as("shingle_hashes"))
-      .filter(col("shingle_hashes").isNotNull)
+    nonNullKernel(docs, col(idCol), "shingle_hashes",
+      transform(
+        TextFunctions.distinctShinglesFused(
+          TextFunctions.normalizeForDedup(col(textCol)), n),
+        s => HashFunctions.portableHash60(s)))
 
   /** Exact Jaccard between two precomputed shingle-array columns (native
     * array_intersect/union — the cheap per-pair form).

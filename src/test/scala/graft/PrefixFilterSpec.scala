@@ -151,4 +151,71 @@ class PrefixFilterSpec extends SparkSpec {
     for (pct <- Seq(40, 70))
       assert(run(corpus, pct) == brute(corpus, pct), s"pct=$pct")
   }
+
+  /** Distinct word 3-shingles of `t` (empty when `t` has < 3 words). */
+  private def shingles3(t: String): Set[String] =
+    t.toLowerCase.replaceAll("[^a-z0-9\\s]", " ").trim
+      .split("\\s+").filter(_.nonEmpty).sliding(3).filter(_.length == 3)
+      .map(_.mkString(" ")).toSet
+
+  /** The brute all-pairs scan over precomputed unit sets. */
+  private def bruteSets(sets: Seq[(Long, Set[String])], pct: Int)
+      : Set[(Long, Long, Long, Long)] =
+    (for {
+      (a, sa) <- sets if sa.nonEmpty; (b, sb) <- sets if sb.nonEmpty && a < b
+      inter = (sa & sb).size.toLong
+      uni = (sa | sb).size.toLong
+      if inter * 100L >= pct.toLong * uni
+    } yield (a, b, inter, uni)).toSet
+
+  private def rows(df: org.apache.spark.sql.DataFrame)
+      : Set[(Long, Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      r.getLong(3))).toSet
+
+  test("random shingle corpora at pct 30 (longest prefix), 1 and 8 partitions") {
+    // edited copies of a few base word runs, so 3-shingle Jaccard spreads
+    // across the whole range rather than sitting at 0 or 1
+    val rnd = new scala.util.Random(23)
+    val vocab = ('a' to 'p').map(c => s"w$c")
+    val bases = Seq.fill(4)(Seq.fill(16)(vocab(rnd.nextInt(vocab.size))))
+    val corpus = (0L until 48L).map { i =>
+      val ws = bases(rnd.nextInt(bases.size)).map(w =>
+        if (rnd.nextInt(6) == 0) vocab(rnd.nextInt(vocab.size)) else w)
+      i -> ws.drop(rnd.nextInt(4)).take(6 + rnd.nextInt(11)).mkString(" ")
+    }
+    val want = bruteSets(corpus.map { case (i, t) => i -> shingles3(t) }, 30)
+    assert(want.size >= 20, "fixture has too few qualifying pairs")
+    assert(want.exists { case (_, _, i, u) => i * 100 < 60 * u },
+      "fixture has no pair in the low-Jaccard band")
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    for (p <- Seq(1, 8)) {
+      spark.conf.set(key, p.toString)
+      try {
+        val got = rows(Dedup.prefixFilterJaccard(
+          corpus.toDF("doc_id", "text").repartition(p), "doc_id", "text",
+          thresholdPct = 30, n = 3))
+        assert(got == want, s"partitions=$p")
+      } finally spark.conf.set(key, before)
+    }
+  }
+
+  test("null text, a text too short to shingle and a null id pair with nothing") {
+    val docs: Seq[(Option[Long], String)] = Seq(
+      Some(0L) -> "the quick brown fox jumps over the lazy dog",
+      Some(1L) -> "the quick brown fox jumps over a lazy dog",
+      Some(2L) -> null,
+      Some(3L) -> "lazy dog",
+      None -> "the quick brown fox jumps over the lazy dog",
+      Some(4L) -> "quick brown fox jumps over the lazy dog today")
+    val valid = docs.collect { case (Some(i), t) if t != null => i -> t }
+    for ((n, unit) <- Seq[(Int, String => Set[String])](1 -> norm, 3 -> shingles3)) {
+      val got = rows(Dedup.prefixFilterJaccard(docs.toDF("doc_id", "text"),
+        "doc_id", "text", thresholdPct = 30, n = n))
+      val want = bruteSets(valid.map { case (i, t) => i -> unit(t) }, 30)
+      assert(got == want, s"n=$n")
+      assert(want.nonEmpty, s"n=$n: fixture has no qualifying pair")
+    }
+  }
 }
