@@ -339,28 +339,32 @@ object Dedup {
     * immediately — the BM25 posting-restriction shape.
     *
     * All-integer gate (`100·|Q∩D| ≥ pct·|Q|`); output
-    * `(query_id, doc_id, inter_size, q_size)`.
+    * `(query_id, doc_id, inter_size, q_size)`. Ids must be unique and
+    * non-null: rows sharing an id merge into one token set, and a null id
+    * pairs with nothing.
     */
   def containmentJoin(docs: DataFrame, idCol: String, textCol: String,
                       queries: DataFrame, queryIdCol: String,
                       queryTextCol: String, thresholdPct: Int,
-                      n: Int = 3,
-                      checkpointer: Checkpointer = Checkpointer.Local)
-      : DataFrame = {
+                      n: Int = 3): DataFrame = {
     require(thresholdPct >= 1 && thresholdPct <= 100,
       "thresholdPct must be in [1, 100]")
     require(n >= 1, "n must be >= 1")
-    // map-only token-set tables (fused DistinctShingles; n = 1 is the
-    // distinct-words set) — same rationale as [[prefixFilterJaccard]]
-    def unitArrays(df: DataFrame, id: String, text: String): DataFrame =
-      nonNullKernel(df, col(id).as("__id"), "__toks",
-        TextFunctions.distinctShinglesFused(
-          TextFunctions.normalizeForDedup(col(text)), n))
-    val docArrays = unitArrays(docs, idCol, textCol)
-    val docSet = checkpointer.cut(
-      docArrays.select(col("__id"), explode(col("__toks")).as("__t")))
-    val qSet = unitArrays(queries, queryIdCol, queryTextCol)
-      .select(col("__id"), explode(col("__toks")).as("__t"))
+    // (id, token) rows of the fused DistinctShingles set (n = 1 is the
+    // distinct-words set; `explode` drops null and empty sets). The null-id
+    // filter is the one the joins on id infer: stated here, every read of
+    // a side's table plans the same subtree, so they share its exchange
+    def tokens(df: DataFrame, id: String, text: String): DataFrame =
+      df.filter(col(id).isNotNull).select(col(id).as("__id"),
+        explode(TextFunctions.distinctShinglesFused(
+          TextFunctions.normalizeForDedup(col(text)), n)).as("__t"))
+    // the corpus is tokenized ONCE, into one id-keyed set table: the df
+    // count, the candidate postings and verification all read it and
+    // share its exchange
+    val docTable = tokens(docs, idCol, textCol).groupBy("__id")
+      .agg(collect_list(col("__t")).as("__toks"))
+    val docSet = docTable.select(col("__id"), explode(col("__toks")).as("__t"))
+    val qSet = tokens(queries, queryIdCol, queryTextCol)
     val dfc = docSet.groupBy("__t").agg(count(lit(1)).as("__df"))
     // corpus rarity for the query ordering; unseen tokens get df 0
     val qs = qSet.join(dfc, Seq("__t"), "left")
@@ -380,9 +384,7 @@ object Dedup {
       .select(col("query_id"), col("__id").as("doc_id")).distinct()
     cands
       .join(broadcast(qs.select("query_id", "__qtoks", "__q")), Seq("query_id"))
-      // doc arrays come from the map-only projection — intersection doesn't
-      // need the df ordering, so no collect_list re-aggregation
-      .join(docArrays.select(col("__id").as("doc_id"),
+      .join(docTable.select(col("__id").as("doc_id"),
         col("__toks").as("__dtoks")), Seq("doc_id"))
       .select(col("query_id"), col("doc_id"),
         size(array_intersect(col("__qtoks"), col("__dtoks"))).cast("long")

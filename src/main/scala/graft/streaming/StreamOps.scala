@@ -63,6 +63,64 @@ object StreamOps {
       .awaitTermination()
   }
 
+  /** The keyed wave: the per-key body the causal drains (Cusum, Hampel,
+    * Episodes, bursts, Survival, Attribution, Resample) share, the
+    * reference's `populate()` over new chunks re-expressed as a per-key
+    * frontier. Each wave is one [[keyedRead]] and one [[commitWave]];
+    * only the arithmetic between them is the drain's own. Contract:
+    *  - late rule: batches are chronological per key, so a row at or
+    *    before its key's persisted frontier is late and drops;
+    *  - replay is a keyed no-op: a re-delivered batch (a retried wave or a
+    *    lost checkpoint) is all late, so it derives nothing new, and every
+    *    append is keyed;
+    *  - outputs before state: a wave that fails mid-commit leaves the
+    *    frontier where it was, so its retry re-derives the same rows
+    *    instead of dropping them as late.
+    *
+    * The read attaches each row's prior state as `__st_<col>` (a bigint
+    * null for a new key; every state column is a long), applies the late
+    * rule against `__st_<stateCols.head>` (the frontier, compared with the
+    * row's `us` column), runs `derive` (the drain's per-row arithmetic
+    * over the fresh rows) and cuts the result with the wave's one
+    * `localCheckpoint`, so no later action of the wave re-reads state.
+    * `state` is `(key, stateCols…)`: a [[readLatest]] table or a per-key
+    * frontier frame; `None` before the first wave.
+    */
+  def keyedRead(rows: DataFrame, state: Option[DataFrame],
+                stateCols: Seq[String], us: String = "us",
+                derive: DataFrame => DataFrame = identity): DataFrame = {
+    val frontier = s"__st_${stateCols.head}"
+    val joined = state match {
+      case None => rows.select(col("*") +: stateCols.map(c =>
+        lit(null).cast("long").as(s"__st_$c")): _*)
+      case Some(st) => rows.join(st.select(col("key") +:
+        stateCols.map(c => col(c).as(s"__st_$c")): _*), Seq("key"), "left")
+    }
+    derive(joined.filter(col(frontier).isNull || col(us) > col(frontier)))
+      .localCheckpoint(true)
+  }
+
+  /** The keyed wave's commit: every output `(rows, table, pk)` first, in
+    * order — appended idempotently on `pk`, or, with an empty `pk`,
+    * replacing the table through [[Populate.replaceAtomic]]'s staged swap
+    * — then the state, appended as `(key, stateCols…)` on `statePk`. With
+    * `newestBy`, `state` holds candidate rows and each key's state row is
+    * the newest by `struct(newestBy…)` ([[Populate.latestPerKey]]).
+    */
+  def commitWave(outputs: Seq[(DataFrame, String, Seq[String])],
+                 state: DataFrame, stateDir: String, statePk: Seq[String],
+                 stateCols: Seq[String], newestBy: Seq[String] = Nil): Unit = {
+    outputs.foreach {
+      case (rows, dir, Nil) => Populate.replaceAtomic(rows, dir)
+      case (rows, dir, pk) => Populate.appendIdempotent(rows, dir, pk)
+    }
+    val latest =
+      if (newestBy.isEmpty) state
+      else Populate.latestPerKey(state, Seq("key"), newestBy)
+    Populate.appendIdempotent(latest.select(("key" +: stateCols).map(col): _*),
+      stateDir, statePk)
+  }
+
   /** The newest row per `key` of an append-only keyed state table at
     * `stateDir`, read through [[Populate.readIfExists]] (so a state table
     * whose compaction crashed mid-swap reads its staged snapshot) and
@@ -162,8 +220,8 @@ object StreamOps {
 
   /** Rolling per-key column stats over tumbling windows (streaming form of
     * the per-chunk summary stats, `utils/stats.py:14-23`).
-    */
-  /** @param valueScale when > 0, values are declared to sit on a
+    *
+    * @param valueScale when > 0, values are declared to sit on a
     *   10^-valueScale decimal grid (sensor readings, prices) and the mean
     *   is computed from an EXACT integer-scaled sum: partial aggregates
     *   are int64 — order-free and associative, so the result cannot drift

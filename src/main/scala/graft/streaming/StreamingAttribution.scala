@@ -23,9 +23,10 @@ import graft.operators.Populate
   * per key is O(touches per lookback window), set by the window and the
   * key's rate — never by stream length.
   *
-  * Late rule (the StreamingResample contract): rows at or before the
-  * key's persisted `last_us` drop, so a replayed batch is a keyed no-op;
-  * attributed conversions append idempotently on `(key, tie, conv_us)`.
+  * Late rule (the keyed-wave contract of [[StreamOps.keyedRead]]): rows
+  * at or before the key's persisted `last_us` drop, so a replayed batch
+  * is a keyed no-op; attributed conversions append idempotently on
+  * `(key, tie, conv_us)`, then the buffer, then the frontier.
   * The touch buffer is window-bounded ON DISK, not just logically
   * (ADVICE r11): the read filters to `us ≥ frontier − windowUs` before
   * the union — an older touch can never fall inside a NEW conversion's
@@ -62,14 +63,9 @@ object StreamingAttribution {
       val rows = batch.select(col(keyCol).as("key"),
         unix_micros(col(tsCol).cast("timestamp")).as("us"),
         col(tieCol).as("tie"), col(typeCol).as("ty"))
-      val frontier = Populate.readIfExists(spark, frontierDir)
-        .map(_.groupBy("key").agg(max(col("last_us")).as("last_us")))
-      val fresh = (frontier match {
-        case None => rows.withColumn("last_us", lit(null).cast("long"))
-        case Some(f) => rows.join(f, Seq("key"), "left")
-      }).filter(col("last_us").isNull || col("us") > col("last_us"))
+      val frontier = StreamOps.readLatest(spark, frontierDir, Seq("last_us"))
+      val fresh = StreamOps.keyedRead(rows, frontier, Seq("last_us"))
         .select("key", "us", "tie", "ty")
-        .localCheckpoint(true)
       // window-bound the buffer READ: new rows all have us > frontier,
       // so a touch with us < frontier − windowUs can never fall inside
       // any new conversion's lookback frame — the wave's window pass is
@@ -107,24 +103,23 @@ object StreamingAttribution {
           col("__ft.u").as("first_touch_us"),
           col("__lt.t").as("last_touch_type"),
           col("__lt.u").as("last_touch_us"))
-      Populate.appendIdempotent(attributed, attributedDir,
-        Seq("key", "tie", "conv_us"))
-      // advance the frontier, then keep only in-window touches
-      val newFrontier = fresh.groupBy("key").agg(max(col("us")).as("last_us"))
-      Populate.appendIdempotent(newFrontier, frontierDir,
-        Seq("key", "last_us"))
-      val latestFrontier = newFrontier.unionByName(
-          frontier.getOrElse(newFrontier.limit(0)))
-        .groupBy("key").agg(max(col("last_us")).as("last_us"))
-      val keep = all.filter(isTouch)
-        .join(latestFrontier, Seq("key"))
-        .filter(col("us") >= col("last_us") - windowUs)
+      // keep only the touches in window of the key's advanced frontier:
+      // its newest row this wave, else its buffered rows, which the read
+      // already bounded by the old frontier
+      val keep = all
+        .withColumn("__f", max(col("us")).over(Window.partitionBy("key")))
+        .filter(isTouch && col("us") >= col("__f") - windowUs)
         .select("key", "us", "tie", "ty")
         .dropDuplicates("key", "us", "tie")
       // publish the COMPLETE in-window buffer (aged-out rows compact
-      // away each wave); crash-safe and replay-idempotent — a re-run
-      // wave recomputes identical content from (empty fresh) ∪ buffer
-      Populate.replaceAtomic(keep, touchesDir)
+      // away each wave), then advance the frontier; crash-safe and
+      // replay-idempotent — a re-run wave recomputes identical content
+      // from (empty fresh) ∪ buffer
+      StreamOps.commitWave(Seq(
+          (attributed, attributedDir, Seq("key", "tie", "conv_us")),
+          (keep, touchesDir, Nil)),
+        fresh.select(col("key"), col("us").as("last_us")), frontierDir,
+        Seq("key", "last_us"), Seq("last_us"), newestBy = Seq("last_us"))
     }
   }
 

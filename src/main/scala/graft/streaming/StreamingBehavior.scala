@@ -116,9 +116,10 @@ object StreamingBehavior {
     * semantics, where every burst is open until the data ends), so closed
     * bursts append to `burstsDir` and the newest island stays in state.
     *
-    * Late rule (the StreamingResample contract): a row at or before the
-    * key's persisted `last_us` is dropped — which also makes a replayed
-    * batch after checkpoint loss a keyed no-op rather than a corruption.
+    * Late rule (the keyed-wave contract of [[StreamOps.keyedRead]]): a
+    * row at or before the key's persisted `last_us` is dropped — which
+    * also makes a replayed batch after checkpoint loss a keyed no-op
+    * rather than a corruption — and closed bursts append before state.
     *
     * At 100 TB: state is |keys| rows per wave (compactable via
     * [[graft.operators.Populate]]'s keyed-state compaction); each wave
@@ -136,40 +137,37 @@ object StreamingBehavior {
       val rows = batch.select(col(keyCol).as("key"),
         unix_micros(col(tsCol).cast("timestamp")).as("us"),
         col(tieCol).as("tie"), col(valueMicroCol).cast("long").as("vm"))
-      val state = StreamOps.readLatest(spark, stateDir, BurstStateCols)
-      val st = state.getOrElse(emptyState(spark, rows.schema("key").dataType))
-      val joined = rows.join(st, Seq("key"), "left")
-      val kept = joined
-        .filter(col("last_us").isNull || col("us") > col("last_us"))
+      val kept = StreamOps.keyedRead(rows,
+        StreamOps.readLatest(spark, stateDir, BurstStateCols), BurstStateCols)
       val w = Window.partitionBy("key").orderBy(col("us"), col("tie"))
       // crossing = previous row (in-batch, else the carried last_vm)
       // below threshold, this row at/above; a key's first-ever row has
       // a null prev and never crosses
       val crossings = kept
         .withColumn("__prev", coalesce(lag(col("vm"), 1).over(w),
-          col("last_vm")))
+          col("__st_last_vm")))
         .filter(col("__prev").isNotNull &&
           col("__prev") < thresholdMicro && col("vm") >= thresholdMicro)
       // islands among this batch's crossings, seeded by the open
       // burst's end: an attached first island keeps flag 0 and thus the
       // open burst's id; ids stay monotone per key
-      val wc = Window.partitionBy("key").orderBy(col("us"), col("tie"))
-      val wcRun = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val wRun = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val flagged = crossings
-        .withColumn("__pc", coalesce(lag(col("us"), 1).over(wc),
-          col("ob_end_us")))
+        .withColumn("__pl", lag(col("us"), 1).over(w))
+        .withColumn("__pc", coalesce(col("__pl"), col("__st_ob_end_us")))
         .withColumn("__new",
           when(col("__pc").isNull ||
             col("us") - col("__pc") > gapMicros, 1L).otherwise(0L))
-        .withColumn("burst_id",
-          coalesce(col("ob_id"), lit(-1L)) + sum(col("__new")).over(wcRun))
+        .withColumn("burst_id", coalesce(col("__st_ob_id"), lit(-1L)) +
+          sum(col("__new")).over(wRun))
       val islands = flagged
         .groupBy("key", "burst_id")
         .agg(count(lit(1)).as("n_crossings"), min(col("us")).as("burst_start_us"),
           max(col("us")).as("burst_end_us"), max(col("vm")).as("peak_micro"),
-          first(col("ob_id")).as("ob_id"), first(col("ob_n")).as("ob_n"),
-          first(col("ob_start_us")).as("ob_start_us"),
-          first(col("ob_peak")).as("ob_peak"))
+          first(col("__st_ob_id")).as("ob_id"),
+          first(col("__st_ob_n")).as("ob_n"),
+          first(col("__st_ob_start_us")).as("ob_start_us"),
+          first(col("__st_ob_peak")).as("ob_peak"))
         .withColumn("__attached",
           col("ob_id").isNotNull && col("burst_id") === col("ob_id"))
         .select(col("key"), col("burst_id"),
@@ -180,60 +178,38 @@ object StreamingBehavior {
           col("burst_end_us"),
           when(col("__attached"), greatest(col("peak_micro"), col("ob_peak")))
             .otherwise(col("peak_micro")).as("peak_micro"))
-      val cached = islands.localCheckpoint(true)
-      val open = cached
-        .groupBy("key")
-        .agg(max(struct(col("burst_id"), col("n_crossings"),
-          col("burst_start_us"), col("burst_end_us"),
-          col("peak_micro"))).as("__o"),
-          min(col("burst_id")).as("n_min_id"))
-        .select(col("key"), col("__o.burst_id").as("n_ob_id"),
-          col("__o.n_crossings").as("n_ob_n"),
-          col("__o.burst_start_us").as("n_ob_start_us"),
-          col("__o.burst_end_us").as("n_ob_end_us"),
-          col("__o.peak_micro").as("n_ob_peak"), col("n_min_id"))
-      val islandsClosed = cached.as("c")
-        .join(open.as("o"), col("c.key") === col("o.key") &&
-          col("c.burst_id") < col("o.n_ob_id"))
-        .select(col("c.key").as("key"), col("c.burst_id").as("burst_id"),
-          col("c.n_crossings").as("n_crossings"),
-          col("c.burst_start_us").as("burst_start_us"),
-          col("c.burst_end_us").as("burst_end_us"),
-          col("c.peak_micro").as("peak_micro"))
-      // a carried open burst that this batch's FIRST island does NOT
+      val burstCols = islands.columns.toSeq
+      // each key's open burst: this batch's newest island
+      val open = Populate.latestPerKey(islands, Seq("key"), burstCols.tail)
+      val islandsClosed = islands
+        .join(open.select(col("key"), col("burst_id").as("__ob")), "key")
+        .filter(col("burst_id") < col("__ob"))
+        .select(burstCols.map(col): _*)
+      // a carried open burst that this batch's FIRST crossing does NOT
       // attach to is superseded — it must be emitted as closed here or
       // it would silently vanish when state moves to the new island
-      // (attached carries are excluded: their merged island row already
-      // owns the id)
-      val carriedClosed = st.filter(col("ob_id").isNotNull)
-        .join(open.select(col("key"), col("n_min_id")), Seq("key"))
-        .filter(col("ob_id") < col("n_min_id"))
-        .select(col("key"), col("ob_id").as("burst_id"),
-          col("ob_n").as("n_crossings"),
-          col("ob_start_us").as("burst_start_us"),
-          col("ob_end_us").as("burst_end_us"),
-          col("ob_peak").as("peak_micro"))
-      Populate.appendIdempotent(
-        islandsClosed.unionByName(carriedClosed), burstsDir,
-        Seq("key", "burst_id"))
+      val carriedClosed = flagged
+        .filter(col("__pl").isNull && col("__new") === 1L &&
+          col("__st_ob_id").isNotNull)
+        .select(col("key"), col("__st_ob_id").as("burst_id"),
+          col("__st_ob_n").as("n_crossings"),
+          col("__st_ob_start_us").as("burst_start_us"),
+          col("__st_ob_end_us").as("burst_end_us"),
+          col("__st_ob_peak").as("peak_micro"))
       // new state: keys with kept rows — newest row's (us, vm) plus the
       // open burst (this batch's newest island if any, else carried)
-      val lastRow = kept
-        .groupBy("key")
-        .agg(max(struct(col("us"), col("tie"), col("vm"))).as("__l"),
-          first(col("ob_id")).as("c_ob_id"), first(col("ob_n")).as("c_ob_n"),
-          first(col("ob_start_us")).as("c_ob_start_us"),
-          first(col("ob_end_us")).as("c_ob_end_us"),
-          first(col("ob_peak")).as("c_ob_peak"))
-      val newState = lastRow.join(open, Seq("key"), "left")
-        .select(col("key"), col("__l.us").as("last_us"),
-          col("__l.vm").as("last_vm"),
-          coalesce(col("n_ob_id"), col("c_ob_id")).as("ob_id"),
-          coalesce(col("n_ob_n"), col("c_ob_n")).as("ob_n"),
-          coalesce(col("n_ob_start_us"), col("c_ob_start_us")).as("ob_start_us"),
-          coalesce(col("n_ob_end_us"), col("c_ob_end_us")).as("ob_end_us"),
-          coalesce(col("n_ob_peak"), col("c_ob_peak")).as("ob_peak"))
-      Populate.appendIdempotent(newState, stateDir, Seq("key", "last_us"))
+      val ob = (c: String, st: String) => coalesce(col(c), col(st))
+      val state = kept.join(open, Seq("key"), "left")
+        .select(col("key"), col("us").as("last_us"), col("tie"),
+          col("vm").as("last_vm"), ob("burst_id", "__st_ob_id").as("ob_id"),
+          ob("n_crossings", "__st_ob_n").as("ob_n"),
+          ob("burst_start_us", "__st_ob_start_us").as("ob_start_us"),
+          ob("burst_end_us", "__st_ob_end_us").as("ob_end_us"),
+          ob("peak_micro", "__st_ob_peak").as("ob_peak"))
+      StreamOps.commitWave(Seq((islandsClosed.unionByName(carriedClosed),
+          burstsDir, Seq("key", "burst_id"))),
+        state, stateDir, Seq("key", "last_us"), BurstStateCols,
+        newestBy = Seq("last_us", "tie") ++ BurstStateCols.tail)
     }
   }
 
@@ -264,15 +240,4 @@ object StreamingBehavior {
     * appends are harmless). */
   private val BurstStateCols = Seq("last_us", "last_vm", "ob_id", "ob_n",
     "ob_start_us", "ob_end_us", "ob_peak")
-
-  private def emptyState(spark: SparkSession,
-                         keyType: org.apache.spark.sql.types.DataType): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(
-        StructField("key", keyType), StructField("last_us", LongType),
-        StructField("last_vm", LongType), StructField("ob_id", LongType),
-        StructField("ob_n", LongType), StructField("ob_start_us", LongType),
-        StructField("ob_end_us", LongType), StructField("ob_peak", LongType))))
-  }
 }

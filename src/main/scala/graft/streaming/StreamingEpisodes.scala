@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.Populate
-
 /** Streaming/incremental twin of
   * [[graft.operators.Behavior.matchEpisodes]] (the drain discipline):
   * event files land in chronological waves; each micro-batch extends the
@@ -25,9 +23,10 @@ import graft.operators.Populate
   * the window-µs check needs buffering: it tests the FINAL row against
   * the carried stage-0 µs, both of which are in hand at emission.
   *
-  * Late rule (the StreamingResample contract): rows at or before the
-  * key's persisted `last_us` drop, so a replayed batch is a keyed no-op;
-  * emitted episodes append idempotently on `(key, final-stage µs, tie)`.
+  * Late rule (the keyed-wave contract of [[StreamOps.keyedRead]]): rows
+  * at or before the key's persisted `last_us` drop, so a replayed batch
+  * is a keyed no-op; emitted episodes append idempotently on
+  * `(key, final-stage µs, tie)`, before the state.
   *
   * At 100 TB: each wave costs ONE keyed window pass over the BATCH (all
   * carries chain on the same sort, exactly like the batch operator);
@@ -58,15 +57,6 @@ object StreamingEpisodes {
       val rows = batch.select(col(keyCol).as("key"),
         unix_micros(col(tsCol).cast("timestamp")).as("us"),
         col(tieCol).as("tie"), col(typeCol).as("ty"))
-      val state = StreamOps.readLatest(spark, stateDir, stateCols)
-      val joined = state match {
-        case None => stateCols.foldLeft(rows)((d, c) =>
-          d.withColumn(s"__st_$c", lit(null).cast("long")))
-        case Some(st) => rows.join(
-          st.select(col("key") +:
-            stateCols.map(c => col(c).as(s"__st_$c")): _*),
-          Seq("key"), "left")
-      }
       val ord = Window.partitionBy("key").orderBy(col("us"), col("tie"))
       val wPrec = ord.rowsBetween(Window.unboundedPreceding, -1)
       val wInc = ord.rowsBetween(Window.unboundedPreceding,
@@ -78,37 +68,40 @@ object StreamingEpisodes {
                  gate: Column, what: Column, stateCol: String): Column =
         coalesce(last(when(gate, what), ignoreNulls = true).over(frame),
           col(s"__st_$stateCol"))
-      var df = joined
-        .filter(col("__st_last_us").isNull || col("us") > col("__st_last_us"))
-        .withColumn("cb", coalesce(col("__st_cb"), lit(0L)) +
-          sum(when(col("ty") === blocker, 1L).otherwise(0L)).over(wInc))
-      val g0 = col("ty") === stages(0)
-      df = df
-        .withColumn("c0_us0", seeded(wPrec, g0, col("us"), "c0_us0"))
-        .withColumn("I_c0_us0", seeded(wInc, g0, col("us"), "c0_us0"))
-        .withColumn("c0_cb", seeded(wPrec, g0, col("cb"), "c0_cb"))
-        .withColumn("I_c0_cb", seeded(wInc, g0, col("cb"), "c0_cb"))
-      for (i <- 1 until k - 1) {
-        // the gate reads the EXCLUSIVE carries — "a stage-i row whose
-        // prefix chain was complete as seen at its own row", exactly the
-        // batch operator's rule (its own occurrence must not count)
-        val gi = col("ty") === stages(i) && col(s"c${i - 1}_us0").isNotNull
-        for (j <- 0 until i) {
+      def carries(fresh: DataFrame): DataFrame = {
+        val g0 = col("ty") === stages(0)
+        var df = fresh
+          .withColumn("cb", coalesce(col("__st_cb"), lit(0L)) +
+            sum(when(col("ty") === blocker, 1L).otherwise(0L)).over(wInc))
+          .withColumn("c0_us0", seeded(wPrec, g0, col("us"), "c0_us0"))
+          .withColumn("I_c0_us0", seeded(wInc, g0, col("us"), "c0_us0"))
+          .withColumn("c0_cb", seeded(wPrec, g0, col("cb"), "c0_cb"))
+          .withColumn("I_c0_cb", seeded(wInc, g0, col("cb"), "c0_cb"))
+        for (i <- 1 until k - 1) {
+          // the gate reads the EXCLUSIVE carries — "a stage-i row whose
+          // prefix chain was complete as seen at its own row", exactly the
+          // batch operator's rule (its own occurrence must not count)
+          val gi = col("ty") === stages(i) && col(s"c${i - 1}_us0").isNotNull
+          for (j <- 0 until i) {
+            df = df
+              .withColumn(s"c${i}_us$j",
+                seeded(wPrec, gi, col(s"c${i - 1}_us$j"), s"c${i}_us$j"))
+              .withColumn(s"I_c${i}_us$j",
+                seeded(wInc, gi, col(s"c${i - 1}_us$j"), s"c${i}_us$j"))
+          }
           df = df
-            .withColumn(s"c${i}_us$j",
-              seeded(wPrec, gi, col(s"c${i - 1}_us$j"), s"c${i}_us$j"))
-            .withColumn(s"I_c${i}_us$j",
-              seeded(wInc, gi, col(s"c${i - 1}_us$j"), s"c${i}_us$j"))
+            .withColumn(s"c${i}_us$i", seeded(wPrec, gi, col("us"), s"c${i}_us$i"))
+            .withColumn(s"I_c${i}_us$i", seeded(wInc, gi, col("us"), s"c${i}_us$i"))
+            .withColumn(s"c${i}_cb",
+              seeded(wPrec, gi, col(s"c${i - 1}_cb"), s"c${i}_cb"))
+            .withColumn(s"I_c${i}_cb",
+              seeded(wInc, gi, col(s"c${i - 1}_cb"), s"c${i}_cb"))
         }
-        df = df
-          .withColumn(s"c${i}_us$i", seeded(wPrec, gi, col("us"), s"c${i}_us$i"))
-          .withColumn(s"I_c${i}_us$i", seeded(wInc, gi, col("us"), s"c${i}_us$i"))
-          .withColumn(s"c${i}_cb",
-            seeded(wPrec, gi, col(s"c${i - 1}_cb"), s"c${i}_cb"))
-          .withColumn(s"I_c${i}_cb",
-            seeded(wInc, gi, col(s"c${i - 1}_cb"), s"c${i}_cb"))
+        df
       }
-      val cached = df.localCheckpoint(true)
+      val cached = StreamOps.keyedRead(rows,
+        StreamOps.readLatest(spark, stateDir, stateCols), stateCols,
+        derive = carries)
       val pfx = s"c${k - 2}"
       val stageUs = (0 until k - 1).map(j => col(s"${pfx}_us$j")) :+ col("us")
       val episodes = cached
@@ -119,16 +112,13 @@ object StreamingEpisodes {
           stages.zip(stageUs).map { case (st, c) => c.as(s"${st}_us") } ++
           Seq((col("cb") - col(s"${pfx}_cb")).as("n_blockers"),
             col("tie")): _*)
-      Populate.appendIdempotent(episodes, episodesDir,
-        Seq("key", s"${stages.last}_us", "tie"))
       // end-of-wave state = the inclusive carries at each key's LAST row
-      val newState = cached.groupBy("key")
-        .agg(max(struct(Seq(col("us").as("last_us"), col("tie"),
-          col("cb")) ++
-          carryNames.map(n => col(s"I_$n").as(n)): _*)).as("__s"))
-        .select(col("key") +:
-          stateCols.map(c => col(s"__s.$c").as(c)): _*)
-      Populate.appendIdempotent(newState, stateDir, Seq("key", "last_us"))
+      StreamOps.commitWave(
+        Seq((episodes, episodesDir, Seq("key", s"${stages.last}_us", "tie"))),
+        cached.select(Seq(col("key"), col("us").as("last_us"), col("tie"),
+          col("cb")) ++ carryNames.map(n => col(s"I_$n").as(n)): _*),
+        stateDir, Seq("key", "last_us"), stateCols,
+        newestBy = Seq("last_us", "tie") ++ stateCols.tail)
     }
   }
 

@@ -23,12 +23,13 @@ import graft.operators.Populate
   * `half` behind the frontier and still could not reproduce the one-shot
   * truncated-edge semantics at the true end of data.)
   *
-  * Late rule (the StreamingResample contract): rows at or before the
-  * key's persisted `last_us` drop, so a replayed batch is a keyed no-op;
-  * scored rows append idempotently on `(key, us, tie)`. Buffer appends
-  * are idempotent on the same key; superseded buffer rows stop being
-  * selected (rank over the read-back takes the newest `window − 1` per
-  * key) and are compaction dead weight, never a wrong answer.
+  * Late rule (the keyed-wave contract of [[StreamOps.keyedRead]]): rows
+  * at or before the key's newest buffered `us` drop, so a replayed batch
+  * is a keyed no-op; scored rows append idempotently on `(key, us, tie)`,
+  * before the buffer. Buffer appends are idempotent on the same key;
+  * superseded buffer rows stop being selected (rank over the read-back
+  * takes the newest `window − 1` per key) and are compaction dead weight,
+  * never a wrong answer.
   *
   * At 100 TB: each wave costs one keyed window pass over
   * (batch ∪ tail buffer) — O(batch + keys·window) rows — with the same
@@ -50,14 +51,9 @@ object StreamingHampel {
         col(tieCol).as("tie"), col(valueMicroCol).cast("long").as("vm"))
       val buffer = Populate.readIfExists(spark, bufferDir)
         .map(tailPerKey(_, window - 1))
-      val frontier = buffer.map(_.groupBy("key")
-        .agg(max(col("us")).as("last_us")))
-      val fresh = (frontier match {
-        case None => rows.withColumn("last_us", lit(null).cast("long"))
-        case Some(f) => rows.join(f, Seq("key"), "left")
-      }).filter(col("last_us").isNull || col("us") > col("last_us"))
+      val fresh = StreamOps.keyedRead(rows,
+          buffer.map(Populate.latestPerKey(_, Seq("key"), Seq("us"))), Seq("us"))
         .select("key", "us", "tie", "vm")
-        .localCheckpoint(true)
       val all = (buffer match {
         case None => fresh.withColumn("__new", lit(true))
         case Some(b) => b.withColumn("__new", lit(false))
@@ -68,10 +64,10 @@ object StreamingHampel {
           "key", "__ts", "tie", "vm", window, k)
         .filter(col("__new"))
         .select("key", "us", "tie", "vm", "med2", "mad2", "is_outlier")
-      Populate.appendIdempotent(scored, scoredDir, Seq("key", "us", "tie"))
       val newTail = tailPerKey(
         all.select("key", "us", "tie", "vm"), window - 1)
-      Populate.appendIdempotent(newTail, bufferDir, Seq("key", "us", "tie"))
+      StreamOps.commitWave(Seq((scored, scoredDir, Seq("key", "us", "tie"))),
+        newTail, bufferDir, Seq("key", "us", "tie"), Seq("us", "tie", "vm"))
     }
   }
 

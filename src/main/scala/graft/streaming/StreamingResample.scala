@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Populate, Resample}
+import graft.operators.Resample
 
 /** Streaming/incremental twin of [[Resample.linearGrid]] (the drain
   * discipline applied to grid resampling): sample files land in
@@ -27,9 +27,10 @@ import graft.operators.{Populate, Resample}
   *    group straddling waves would need re-emission and is instead cut by
   *    the late rule (second half dropped).
   *
-  * Durability = checkpoint + both tables, all idempotent: the grid appends
-  * on `(key, grid_ts)`, the state appends on `(key, t)` and reads as
-  * max-t per key, so replays after checkpoint loss re-derive identical
+  * Durability = checkpoint + both tables, all idempotent (the keyed-wave
+  * contract of [[StreamOps.keyedRead]]): the grid appends on
+  * `(key, grid_ts)` before the state appends on `(key, t)`, which reads
+  * as max-t per key, so replays after checkpoint loss re-derive identical
   * rows into keyed no-op appends.
   *
   * At 100 TB: state is |keys| rows per wave (compactable), each wave's
@@ -49,39 +50,29 @@ object StreamingResample {
             stepMicros: Long): Unit = {
     require(stepMicros > 0, "stepMicros must be > 0")
     StreamOps.drainFiles(spark, sourceDir, schema, checkpointDir) { batch =>
-      // three downstream actions re-derive the collapsed batch (the grid
-      // append, the carried-keys union inside it, and the state append):
-      // cut it once per wave instead of collapsing the batch three times
-      val samples = Resample.collapseMicro(batch, keyCol, tsCol, valueCol)
-        .localCheckpoint(true)
       val state = StreamOps.readLatest(spark, stateDir, StateCols)
-      val (kept, withState) = state match {
-        case None => (samples, samples)
-        case Some(st) =>
-          val stKeyed = st.select(col("key"), col("t").as("__st_t"),
-            col("v").as("__st_v"))
-          val k = samples.join(stKeyed, Seq("key"), "left")
-            .filter(col("__st_t").isNull || col("t") > col("__st_t"))
-            .select("key", "t", "v")
-          val carried = stKeyed
-            .join(k.select("key").distinct(), Seq("key"))
-            .select(col("key"), col("__st_t").as("t"),
-              col("__st_v").as("v"))
-          (k, k.unionByName(carried))
+      val fresh = StreamOps.keyedRead(
+        Resample.collapseMicro(batch, keyCol, tsCol, valueCol), state,
+        StateCols, us = "t")
+      val samples = fresh.select("key", "t", "v")
+      // before the first wave nothing is carried and nothing was emitted,
+      // so the first wave skips the carried rows' aggregate and join
+      val out = if (state.isEmpty) Resample.linearGridMicro(samples, stepMicros)
+      else {
+        // each touched key's prior sample (null for a new key): the
+        // carried backward bracket, and the bound of the grid points
+        // already emitted
+        val prior = fresh.select("key", "__st_t", "__st_v").distinct()
+        val carried = prior.filter(col("__st_t").isNotNull)
+          .select(col("key"), col("__st_t").as("t"), col("__st_v").as("v"))
+        Resample.linearGridMicro(samples.unionByName(carried), stepMicros)
+          .join(prior, "key")
+          .filter(col("__st_t").isNull ||
+            unix_micros(col("grid_ts")) > col("__st_t"))
+          .select("key", "grid_ts", "value_micro")
       }
-      val out0 = Resample.linearGridMicro(withState, stepMicros)
-      val out = state match {
-        case None => out0
-        case Some(st) =>
-          out0.join(st.select(col("key"), col("t").as("__st_t")),
-              Seq("key"), "left")
-            .filter(col("__st_t").isNull ||
-              unix_micros(col("grid_ts")) > col("__st_t"))
-            .select("key", "grid_ts", "value_micro")
-      }
-      Populate.appendIdempotent(out, gridDir, Seq("key", "grid_ts"))
-      val newState = Populate.latestPerKey(kept, Seq("key"), StateCols)
-      Populate.appendIdempotent(newState, stateDir, Seq("key", "t"))
+      StreamOps.commitWave(Seq((out, gridDir, Seq("key", "grid_ts"))),
+        fresh, stateDir, Seq("key", "t"), StateCols, newestBy = StateCols)
     }
   }
 

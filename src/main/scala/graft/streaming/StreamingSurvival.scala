@@ -18,12 +18,12 @@ import graft.operators.{Populate, Survival}
   * `Survival.kmLifeTable` row-for-row (StreamingSurvivalSpec; q264's
   * oracle is q256's SQL verbatim).
   *
-  * Wave contract (the [[StreamingResample]] rules): batches are
-  * chronological per key; a row at or before the key's persisted last
+  * Wave contract (the keyed wave of [[StreamOps.keyedRead]]): batches
+  * are chronological per key; a row at or before the key's persisted last
   * event is LATE and dropped — which also makes re-delivered batches
-  * no-ops. Within a batch, same-µs duplicates collapse to their max arm
-  * flag (a session's arm is the max over its events, so this loses
-  * nothing).
+  * no-ops — and closed subjects append before the state. Within a batch,
+  * same-µs duplicates collapse to their max arm flag (a session's arm is
+  * the max over its events, so this loses nothing).
   *
   * At 100 TB: state is one logical row per key (appended, read as
   * latest-per-key, compactable); per-wave work is one keyed window over
@@ -47,30 +47,19 @@ object StreamingSurvival {
           unix_micros(col(tsCol)).as("us"),
           col(armCol).cast("long").as("arm"))
         .groupBy("key", "us").agg(max(col("arm")).as("arm"))
-      val state = StreamOps.readLatest(spark, stateDir, StateCols)
-      val (kept, withState) = state match {
-        case None => (ev, ev.withColumn("__start", lit(null)
-          .cast("long")).withColumn("__isState", lit(false)))
-        case Some(st) =>
-          val k = ev.join(st.select(col("key"),
-              col("last_us").as("__st_last")), Seq("key"), "left")
-            .filter(col("__st_last").isNull || col("us") > col("__st_last"))
-            .select("key", "us", "arm")
-          // pseudo-row: the open session's tail, carrying its start —
-          // only for keys touched this wave (others stay open as-is)
-          val carried = st.join(k.select("key").distinct(), Seq("key"))
-            .select(col("key"), col("last_us").as("us"), col("arm"),
-              col("start_us").as("__start"), lit(true).as("__isState"))
-          (k, k.withColumn("__start", lit(null).cast("long"))
-            .withColumn("__isState", lit(false)).unionByName(carried))
-      }
+      val fresh = StreamOps.keyedRead(ev,
+        StreamOps.readLatest(spark, stateDir, StateCols), StateCols)
+      // pseudo-row: the open session's tail, carrying its start — only
+      // for keys touched this wave (others stay open as-is)
+      val carried = fresh.filter(col("__st_last_us").isNotNull)
+        .select(col("key"), col("__st_last_us").as("us"),
+          col("__st_arm").as("arm"), col("__st_start_us").as("__start"))
+        .distinct()
       val w = Window.partitionBy("key").orderBy("us")
       val wRun = w.rowsBetween(Window.unboundedPreceding,
         Window.currentRow)
-      // cache: BOTH appends (closed subjects, new state) consume the
-      // same islands — uncached, each appendIdempotent action would
-      // re-read the state parquet and re-run the session window
-      val islands = withState
+      val islands = fresh.select("key", "us", "arm")
+        .unionByName(carried, allowMissingColumns = true)
         .withColumn("__prev", lag(col("us"), 1).over(w))
         .withColumn("__new", when(col("__prev").isNull ||
           col("us") - col("__prev") > gapUs, 1L).otherwise(0L))
@@ -78,20 +67,14 @@ object StreamingSurvival {
         .groupBy("key", "__sid")
         .agg(min(coalesce(col("__start"), col("us"))).as("start_us"),
           max(col("us")).as("last_us"), max(col("arm")).as("arm"))
-        .persist()
-      try {
-        val lastSid = islands.groupBy("key")
-          .agg(max(col("__sid")).as("__sid"))
-        val closed = islands.join(lastSid, Seq("key", "__sid"),
-          "left_anti")
-        Populate.appendIdempotent(
-          closed.select("key", "start_us", "last_us", "arm"),
-          subjectsDir, Seq("key", "start_us"))
-        val open = islands.join(lastSid, Seq("key", "__sid"))
-        Populate.appendIdempotent(
-          open.select("key", "start_us", "last_us", "arm"),
-          stateDir, Seq("key", "last_us"))
-      } finally islands.unpersist()
+      val lastSid = islands.groupBy("key").agg(max(col("__sid")).as("__sid"))
+      val closed = islands.join(lastSid, Seq("key", "__sid"), "left_anti")
+      // the state row is each key's last (open) session: the newest by
+      // `last_us`, since sessions of one key never overlap
+      StreamOps.commitWave(Seq((closed.select("key", "start_us", "last_us",
+          "arm"), subjectsDir, Seq("key", "start_us"))),
+        islands, stateDir, Seq("key", "last_us"), StateCols,
+        newestBy = StateCols)
     }
   }
 

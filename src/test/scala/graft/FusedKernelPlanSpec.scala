@@ -18,7 +18,8 @@ import graft.operators.Dedup
   * the `Project`. Each Dedup helper's executed plan (AQE's final plan, read
   * through its query stages, reused exchanges counted once) must hold its
   * kernel exactly once, and `prefixFilterJaccard` must tokenize once, reuse
-  * its ordered-set table's exchange and cut nothing.
+  * its ordered-set table's exchange and cut nothing; `containmentJoin`
+  * likewise, once per input side.
   */
 class FusedKernelPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -36,6 +37,15 @@ class FusedKernelPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       4L -> "the quick brown fox jumps over a lazy dog",
       5L -> "a quick brown fox jumps over the lazy dog again")
       .toDF("id", "text").write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** A one-row query table for `containmentJoin`, also a parquet scan. */
+  private lazy val queries = {
+    val dir = java.nio.file.Files.createTempDirectory("fused-kernel-plan")
+      .resolve("queries").toString
+    Seq(9L -> "the quick brown fox jumps").toDF("qid", "qtext")
+      .write.parquet(dir)
     spark.read.parquet(dir)
   }
 
@@ -85,21 +95,39 @@ class FusedKernelPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .select("id").as[Long].collect().sorted.toSeq == Seq(1L, 3L, 4L, 5L))
   }
 
-  test("prefixFilterJaccard tokenizes once, reuses its ordered-set table, " +
-    "and cuts nothing") {
+  /** `build` runs no job (no checkpoint cut), and the executed plan holds
+    * `kernels` tokenizing kernels plus a reused exchange of a table that
+    * tokenizes. */
+  private def tokenizesOnce(group: String, kernels: Int)(
+      build: => DataFrame): SparkPlan = {
     val sc = spark.sparkContext
-    val group = "prefix-filter-build"
     sc.setJobGroup(group, "plan construction only")
-    val pf = try Dedup.prefixFilterJaccard(docs, "id", "text",
-        thresholdPct = 30, n = 3)
-      finally sc.clearJobGroup()
+    val df = try build finally sc.clearJobGroup()
     assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
       "building the plan ran a job (a checkpoint cut)")
-    val plan = executed(pf)
-    assert(kernelCount[DistinctShingles](plan) == 1, plan.toString)
-    assert(kernelCount[ArrayUnion](plan) == 0, plan.toString)
+    val plan = executed(df)
+    assert(kernelCount[DistinctShingles](plan) == kernels, plan.toString)
     val reused = collectWithSubqueries(plan) { case r: ReusedExchangeExec => r }
     assert(reused.exists(r => kernelCount[DistinctShingles](r.child) == 1),
-      s"no reused exchange of the ordered-set table in\n$plan")
+      s"no reused exchange of the tokenized set table in\n$plan")
+    plan
+  }
+
+  test("prefixFilterJaccard tokenizes once, reuses its ordered-set table, " +
+    "and cuts nothing") {
+    val corpus = docs // its parquet write runs jobs
+    val plan = tokenizesOnce("prefix-filter-build", kernels = 1) {
+      Dedup.prefixFilterJaccard(corpus, "id", "text", thresholdPct = 30, n = 3)
+    }
+    assert(kernelCount[ArrayUnion](plan) == 0, plan.toString)
+  }
+
+  test("containmentJoin tokenizes each side once, reuses its corpus set " +
+    "table, and cuts nothing") {
+    val (corpus, qs) = (docs, queries) // their parquet writes run jobs
+    tokenizesOnce("containment-build", kernels = 2) {
+      Dedup.containmentJoin(corpus, "id", "text", qs, "qid", "qtext",
+        thresholdPct = 50, n = 3)
+    }
   }
 }

@@ -98,9 +98,9 @@ class StreamingAttributionSpec extends SparkSpec {
     val (src, out, touches, frontier, ckpt) = (root + "/src", root + "/o",
       root + "/t", root + "/f", root + "/c")
     rows.toDF("k", "ts", "tie", "ty").write.mode("append").parquet(src)
-    def run(): Set[Row] = {
+    def run(checkpoint: String = ckpt): Set[Row] = {
       StreamingAttribution.attributionDrain(spark, src, out, touches,
-        frontier, ckpt, "k", "ts", "tie", "ty", schema, touchTypes,
+        frontier, checkpoint, "k", "ts", "tie", "ty", schema, touchTypes,
         "conv", windowSec)
       StreamingAttribution.loadAttributed(spark, out).as[Row].collect().toSet
     }
@@ -108,5 +108,9 @@ class StreamingAttributionSpec extends SparkSpec {
     val second = run()
     assert(first === second)
     assert(first === oneShot(rows))
+    // a fresh checkpoint re-delivers every row: the late rule drops them
+    val n = StreamingAttribution.loadAttributed(spark, out).count()
+    assert(run(root + "/c2") === oneShot(rows))
+    assert(StreamingAttribution.loadAttributed(spark, out).count() === n)
   }
 }

@@ -121,5 +121,13 @@ class StreamingBurstsSpec extends SparkSpec {
       .as[(Long, Long, Long, Long, Long, Long)].collect().toSet
     assert(first === second)
     assert(first === reference(rows))
+    // a fresh checkpoint re-delivers every row: the late rule drops them
+    val n = StreamingBehavior.loadBursts(spark, bursts, state).count()
+    StreamingBehavior.burstDrain(spark, src, bursts, state, root + "/c2",
+      "k", "ts", "tie", "vm", schema, threshold, gapSec)
+    val replayed = StreamingBehavior.loadBursts(spark, bursts, state)
+    assert(replayed.count() === n)
+    assert(replayed.as[(Long, Long, Long, Long, Long, Long)].collect().toSet ===
+      reference(rows))
   }
 }

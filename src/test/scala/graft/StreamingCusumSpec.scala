@@ -87,5 +87,12 @@ class StreamingCusumSpec extends SparkSpec {
       .as[(Long, Long, Long, Long)].collect().toSet
     assert(first === second)
     assert(first === oneShot(rows))
+    // a fresh checkpoint re-delivers every row: the late rule drops them
+    val n = StreamingCusum.loadAlarms(spark, alarms).count()
+    StreamingCusum.drain(spark, src, alarms, state, root + "/c2",
+      "k", "ts", "tie", "vm", schema, drift, threshold)
+    val replayed = StreamingCusum.loadAlarms(spark, alarms)
+    assert(replayed.count() === n)
+    assert(replayed.as[(Long, Long, Long, Long)].collect().toSet === oneShot(rows))
   }
 }

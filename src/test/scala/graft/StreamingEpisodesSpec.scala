@@ -108,8 +108,9 @@ class StreamingEpisodesSpec extends SparkSpec {
     val (src, out, state, ckpt) =
       (root + "/src", root + "/e", root + "/s", root + "/c")
     rows.toDF("k", "ts", "tie", "ty").write.mode("append").parquet(src)
-    def run(): Set[(Long, Long, Long, Long, Long, Long)] = {
-      StreamingEpisodes.episodeDrain(spark, src, out, state, ckpt,
+    def run(checkpoint: String = ckpt)
+        : Set[(Long, Long, Long, Long, Long, Long)] = {
+      StreamingEpisodes.episodeDrain(spark, src, out, state, checkpoint,
         "k", "ts", "tie", "ty", schema, stages, blocker = "x",
         windowSec = windowSec)
       StreamingEpisodes.loadEpisodes(spark, out)
@@ -121,5 +122,9 @@ class StreamingEpisodesSpec extends SparkSpec {
     val second = run()
     assert(first === second)
     assert(first === oneShot(rows))
+    // a fresh checkpoint re-delivers every row: the late rule drops them
+    val n = StreamingEpisodes.loadEpisodes(spark, out).count()
+    assert(run(root + "/c2") === oneShot(rows))
+    assert(StreamingEpisodes.loadEpisodes(spark, out).count() === n)
   }
 }

@@ -271,4 +271,52 @@ class StreamingSpec extends SparkSpec {
     }
     assert(columns.nonEmpty && columns.forall(_ == Seq("id")))
   }
+
+  // ---- the keyed wave (StreamOps.keyedRead + commitWave) ----
+
+  test("commitWave appends outputs before state: a failed output leaves " +
+    "the frontier, and the retry converges") {
+    val root = java.nio.file.Files.createTempDirectory("graft-keyedwave")
+    val src = root.resolve("src")
+    // a minimal frontier drain over (key = id % 2, us = id); `plant` makes
+    // the output frame throw while the wave writes it
+    def wave(tables: String, checkpoint: String,
+             plant: Option[Long] = None): Unit =
+      StreamOps.drainFiles(spark, src.toString, idSchema, checkpoint) { batch =>
+        val state = s"$tables/state"
+        val fresh = StreamOps.keyedRead(
+          batch.select((col("id") % 2).as("key"), col("id").as("us")),
+          StreamOps.readLatest(spark, state, Seq("last_us")), Seq("last_us"))
+        val v = plant.fold(col("us"))(p => when(col("us") === p,
+          raise_error(lit("planted output fault"))).otherwise(col("us")))
+        StreamOps.commitWave(
+          Seq((fresh.select(col("key"), col("us"), v.as("v")),
+            s"$tables/out", Seq("key", "us"))),
+          fresh.withColumnRenamed("us", "last_us"), state,
+          Seq("key", "last_us"), Seq("last_us"), newestBy = Seq("last_us"))
+      }
+    def frontier(tables: String) =
+      StreamOps.readLatest(spark, s"$tables/state", Seq("last_us")).get
+        .as[(Long, Long)].collect().sorted.toSeq
+    def out(tables: String) = spark.read.parquet(s"$tables/out")
+      .as[(Long, Long, Long)].collect().sorted.toSeq
+    val (faulty, clean) = (root.resolve("faulty").toString,
+      root.resolve("clean").toString)
+    val ckpt = root.resolve("ckpt").toString
+    land(src, "a.parquet", Seq(1L, 2L))
+    wave(faulty, ckpt)
+    val before = frontier(faulty)
+    assert(before == Seq((0L, 2L), (1L, 1L)))
+    land(src, "b.parquet", Seq(3L, 4L, 5L))
+    intercept[Exception](wave(faulty, ckpt, plant = Some(4L)))
+    // state-first would have advanced the frontier to 4 and 5 here, and
+    // the retry would drop the whole re-delivered batch as late
+    assert(frontier(faulty) == before, "state advanced past a failed output")
+    wave(faulty, ckpt)
+    wave(clean, root.resolve("ckpt-clean").toString)
+    assert(out(faulty) == Seq((0L, 2L, 2L), (0L, 4L, 4L), (1L, 1L, 1L),
+      (1L, 3L, 3L), (1L, 5L, 5L)))
+    assert(out(faulty) == out(clean))
+    assert(frontier(faulty) == frontier(clean))
+  }
 }
